@@ -22,12 +22,62 @@ import org.apache.spark.sql.SparkSession
   * round 8's tail carried only the cold map, which is exactly the number
   * contention corrupts), with the cold total preserved in the final
   * bench_summary line and all three full maps in target/bench_times.json.
+  *
+  * A query that throws is listed under `failed` in bench_summary, left out
+  * of every per-query map and total, and makes the process exit 1.
   */
 object Bench {
+
+  /** One timed pass: seconds per query that completed, names that threw. */
+  final case class Pass(times: Seq[(String, Double)], failed: Seq[String])
+
+  /** The catalog names a SPARK_GRAFT_BENCH_ONLY value selects (comma-
+    * separated full query names; unset = the whole catalog, sorted). A name
+    * not in the catalog throws, so a typo cannot silently time nothing.
+    */
+  def selectQueries(catalog: Iterable[String], only: Option[String]): Seq[String] = {
+    val all = catalog.toSeq.sorted
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => all
+      case Some(names) =>
+        val unknown = names.diff(all.toSet)
+        require(unknown.isEmpty,
+          s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+        all.filter(names)
+    }
+  }
+
+  /** Runs `run(name)` for each name in order and times it. A query that
+    * throws is reported (stderr) and goes to `failed`, with no time.
+    */
+  def timePass(names: Seq[String])(run: String => Unit): Pass = {
+    val results = names.map { name =>
+      val t0 = System.nanoTime()
+      try { run(name); Right(name -> (System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Left(name)
+      }
+    }
+    Pass(results.collect { case Right(t) => t }, results.collect { case Left(n) => n })
+  }
+
+  /** Names that failed in any pass, and each pass's times without them: a
+    * query that fails once is out of every per-query map and total.
+    */
+  def dropFailed(passes: Seq[Pass]): (Seq[String], Seq[Seq[(String, Double)]]) = {
+    val failed = passes.flatMap(_.failed).distinct
+    (failed, passes.map(_.times.filterNot { case (n, _) => failed.contains(n) }))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmPass = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0"
+    // SPARK_GRAFT_BENCH_ONLY=q98_...,q97_... restricts the pass to named
+    // queries — for targeted scale rehearsals; checked before the session
+    // starts
+    val names = selectQueries(SparkEntry.queries.keys, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = graft.core.SparkConfigs.localSession("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/file-index paths so the first timed query isn't
@@ -59,10 +109,6 @@ object Bench {
     canary() // untimed: pay codegen/JIT once so start and end are comparable
     val canaryStart = canary()
 
-    // SPARK_GRAFT_BENCH_ONLY=q98_...,q97_... restricts the pass to named
-    // queries — for targeted scale rehearsals; unset = the full catalog.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Streaming startup-vs-data split (round-12 verdict item 6): the
     // streaming harness meters every drive-to-completion into
     // StreamMetrics; snapshotting the cumulative counters around each query
@@ -74,32 +120,24 @@ object Bench {
     // stage through a non-Spark engine (q146's Derby) record the write in
     // StageMetrics; min-total pass wins, same de-noising as streamSplit
     val externalSplit = scala.collection.mutable.Map[String, (Double, Double)]()
-    def runPass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-        val sm0 = graft.streaming.StreamMetrics.snapshot
-        val xm0 = graft.etl.StageMetrics.snapshot
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val sm1 = graft.streaming.StreamMetrics.snapshot
-        val (su, da, nb) =
-          ((sm1._1 - sm0._1) / 1000.0, (sm1._2 - sm0._2) / 1000.0, sm1._3 - sm0._3)
-        if (nb > 0 && streamSplit.get(name).forall { case (s0, d0, _) => su + da < s0 + d0 })
-          streamSplit(name) = (su, da, nb)
-        val xw = (graft.etl.StageMetrics.snapshot - xm0) / 1000.0
-        if (xw > 0 && externalSplit.get(name).forall { case (w0, r0) => dt < w0 + r0 })
-          externalSplit(name) = (xw, math.max(0.0, dt - xw))
-        // defensive: no operator caches anymore (round 2), but any future one
-        // must not bill its memory to later queries
-        spark.catalog.clearCache()
-        name -> dt
-      }
+    def runPass(): Pass = timePass(names) { name =>
+      val sm0 = graft.streaming.StreamMetrics.snapshot
+      val xm0 = graft.etl.StageMetrics.snapshot
+      val t0 = System.nanoTime()
+      // defensive: no operator caches anymore (round 2), but any future one
+      // must not bill its memory to later queries
+      try SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+      finally spark.catalog.clearCache()
+      val dt = (System.nanoTime() - t0) / 1e9
+      val sm1 = graft.streaming.StreamMetrics.snapshot
+      val (su, da, nb) =
+        ((sm1._1 - sm0._1) / 1000.0, (sm1._2 - sm0._2) / 1000.0, sm1._3 - sm0._3)
+      if (nb > 0 && streamSplit.get(name).forall { case (s0, d0, _) => su + da < s0 + d0 })
+        streamSplit(name) = (su, da, nb)
+      val xw = (graft.etl.StageMetrics.snapshot - xm0) / 1000.0
+      if (xw > 0 && externalSplit.get(name).forall { case (w0, r0) => dt < w0 + r0 })
+        externalSplit(name) = (xw, math.max(0.0, dt - xw))
+    }
 
     // The driver tail-captures a bounded amount of stdout; each JSON line
     // must fit entirely inside that bound or the earliest per-query times
@@ -120,8 +158,11 @@ object Bench {
       s"""{"queries":$qs,"sf":"$sfDir","metric":"$metric","unit":"sec","value":${ms(results.map(_._2).sum)}}"""
     }
 
-    val cold = runPass()
-    val warm = if (warmPass) Some(runPass()) else None
+    val coldRun = runPass()
+    val warmRun = if (warmPass) Some(runPass()) else None
+    val (failed, timed) = dropFailed(coldRun +: warmRun.toSeq)
+    val cold = timed.head
+    val warm = timed.lift(1)
     // Per-query MIN across passes — the de-noised measurement of record
     // (round 6's driver cold pass read 2× its own warm pass purely from
     // host contention: q232 77 s driver-cold vs 1.4 s local, q23/q24
@@ -191,7 +232,8 @@ object Bench {
     val streamStartup = streamSplit.values.map(_._1).sum
     val streamData = streamSplit.values.map(_._2).sum
     val canaryEnd = canary()
-    val summary = s"""{"metric":"bench_summary","n_queries":${cold.size},"total_warm":$warmTotal,"total_min":$minTotal,"total_builds":${ms(builds)},"total_probes":${ms(probes)},"stream_startup":${ms(streamStartup)},"stream_data":${ms(streamData)},"canary_start":${ms(canaryStart)},"canary_end":${ms(canaryEnd)},"total":${ms(cold.map(_._2).sum)}}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val summary = s"""{"metric":"bench_summary","n_queries":${cold.size},"failed":$failedJson,"total_warm":$warmTotal,"total_min":$minTotal,"total_builds":${ms(builds)},"total_probes":${ms(probes)},"stream_startup":${ms(streamStartup)},"stream_data":${ms(streamData)},"canary_start":${ms(canaryStart)},"canary_end":${ms(canaryEnd)},"total":${ms(cold.map(_._2).sum)}}"""
     println(summary)
     // bench_summary also lands in the file record (round-16 ADVICE: the
     // committed BENCH_LOCAL_r{N}.json must carry the canary contention
@@ -203,5 +245,6 @@ object Bench {
       System.err.println(s"[bench] could not append bench_summary: ${e.getMessage}")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -25,8 +25,9 @@ final case class IngestResult(url: String, table: String, rows: Long)
 /** CSV → warehouse-table ingest, the reference pipeline's end-to-end job
   * (/root/reference/pipeline.py:196-249) re-expressed Spark-first:
   *
-  *  - whole-input schema inference (one pass; fixes the reference's per-chunk
-  *    drift, SURVEY.md §0.2-7) instead of pandas' per-1000-row inference;
+  *  - whole-input schema inference (one extra read of the input before the
+  *    load; fixes the reference's per-chunk drift, SURVEY.md §0.2-7) instead
+  *    of pandas' per-1000-row inference;
   *  - chunking/batching (1000-row chunks, 50 MB request packing,
   *    pipeline.py:205,165-183) is subsumed by partitioned scan + columnar
   *    parquet write — no row-at-a-time SQL text is ever materialized;
@@ -37,13 +38,19 @@ final case class IngestResult(url: String, table: String, rows: Long)
   */
 object Ingest extends Logging {
 
-  /** Dispatch on file extension. CSV is the reference's actual format; XLSX
-    * is claimed in its README (README.md:69) but its code feeds any URL to
-    * the CSV parser (pd.read_csv, pipeline.py:205) — SURVEY.md §0.1. Round
-    * 7 closes the claim: .xlsx routes to [[Xlsx.read]] (java.util.zip +
-    * the Spark 4 XML source over the public OOXML layout — no spreadsheet
-    * library). Legacy binary .xls (BIFF) stays unsupported — a different,
-    * non-XML format the reference never names.
+  /** Read one file, optionally Fernet-encrypt its sensitive columns, and
+    * save it as `source`.`table`. Only the reader depends on the extension:
+    *
+    *  - CSV (anything not .xlsx/.xls) is the reference's actual format,
+    *    read with `inferSchema=true`: Spark reads the whole input once to
+    *    infer the schema, then again to load it;
+    *  - .xlsx is claimed in the reference README (README.md:69) but its code
+    *    feeds any URL to the CSV parser (pd.read_csv, pipeline.py:205) —
+    *    SURVEY.md §0.1. It routes to [[Xlsx.read]] (java.util.zip + the
+    *    Spark 4 XML source over the public OOXML layout — no spreadsheet
+    *    library), which does the parse and whole-table typing;
+    *  - legacy binary .xls (BIFF) stays unsupported — a different, non-XML
+    *    format the reference never names.
     */
   def ingestFile(spark: SparkSession, path: String, source: String,
                  options: IngestOptions = IngestOptions(),
@@ -53,54 +60,20 @@ object Ingest extends Logging {
     if (lower.endsWith(".xls"))
       throw new UnsupportedOperationException(
         s"legacy binary .xls (BIFF) is not supported — convert to .xlsx: $path")
-    else if (lower.endsWith(".xlsx"))
-      ingestXlsx(spark, path, source, options, encryptionKey, mode)
-    else ingestCsv(spark, path, source, options, encryptionKey, mode)
-  }
-
-  /** XLSX twin of [[ingestCsv]]: [[Xlsx.read]] does the parse + whole-table
-    * typing; encryption and warehouse namespace-qualification are shared.
-    */
-  def ingestXlsx(spark: SparkSession, path: String, source: String,
-                 options: IngestOptions = IngestOptions(),
-                 encryptionKey: Option[String] = None,
-                 mode: SaveMode = SaveMode.Overwrite): IngestResult = {
     val fileName = Paths.get(path).getFileName.toString
     val table = options.tableName.getOrElse(Utils.sanitizeTableName(fileName))
     require(table.nonEmpty, s"Cannot derive a table name from $fileName")
-    val raw = Xlsx.read(spark, path)
+    val raw =
+      if (lower.endsWith(".xlsx")) Xlsx.read(spark, path)
+      else spark.read
+        .option("header", options.header.toString)
+        .option("inferSchema", "true") // an extra read of the input, before the load
+        .csv(path)
     val df =
       if (options.anonymize && options.sensitiveColumns.nonEmpty) {
         val key = encryptionKey.getOrElse(graft.crypto.Fernet.generateKey())
         CryptoFunctions.encryptColumns(raw, options.sensitiveColumns, key)
       } else raw
-    val qualified = saveToWarehouse(spark, df, source, table, mode)
-    IngestResult(path, qualified, spark.table(qualified).count())
-  }
-
-  /** Read a CSV with whole-file schema inference, optionally Fernet-encrypt
-    * sensitive columns, and save as `source`.`table`.
-    * Returns the qualified table name.
-    */
-  def ingestCsv(spark: SparkSession, path: String, source: String,
-                options: IngestOptions = IngestOptions(),
-                encryptionKey: Option[String] = None,
-                mode: SaveMode = SaveMode.Overwrite): IngestResult = {
-    val fileName = Paths.get(path).getFileName.toString
-    val table = options.tableName.getOrElse(Utils.sanitizeTableName(fileName))
-    require(table.nonEmpty, s"Cannot derive a table name from $fileName")
-
-    val raw = spark.read
-      .option("header", options.header.toString)
-      .option("inferSchema", "true") // single pass over the whole input
-      .csv(path)
-
-    val df =
-      if (options.anonymize && options.sensitiveColumns.nonEmpty) {
-        val key = encryptionKey.getOrElse(graft.crypto.Fernet.generateKey())
-        CryptoFunctions.encryptColumns(raw, options.sensitiveColumns, key)
-      } else raw
-
     val qualified = saveToWarehouse(spark, df, source, table, mode)
     IngestResult(path, qualified, spark.table(qualified).count())
   }

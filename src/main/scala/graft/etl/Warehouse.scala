@@ -4,7 +4,7 @@ import graft.core.Utils
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count_if, expr, lit, not}
+import org.apache.spark.sql.functions.{coalesce, col, count_if, expr, lit, not, when}
 
 /** The SQL-statement surface. The reference whitelists statement prefixes and
   * ships the text to an external warehouse (/root/reference/pipeline.py:
@@ -73,13 +73,23 @@ object Warehouse extends Logging {
     removed
   }
 
-  /** UPDATE table SET col = expr WHERE cond — rewrite-on-write. */
+  /** UPDATE table SET col = expr, ... WHERE cond — rewrite-on-write. The
+    * condition and every right-hand side read the ORIGINAL row, all in one
+    * projection (`withColumns`), as in SQL: `SET status = 'closed', amount
+    * = 0 WHERE status = 'open'` zeroes `amount` too, and `SET a = b, b = a`
+    * swaps. An unknown target column fails loudly instead of being appended.
+    */
   def updateWhere(spark: SparkSession, table: String, assignments: Map[String, String],
                   condition: String): Unit = {
     val current = spark.table(table)
-    val updated = assignments.foldLeft(current) { case (df, (c, e)) =>
-      df.withColumn(c, org.apache.spark.sql.functions.when(expr(condition), expr(e)).otherwise(col(c)))
-    }
+    val resolve = spark.sessionState.conf.resolver
+    val unknown = assignments.keys.filterNot(a => current.columns.exists(resolve(_, a)))
+    require(unknown.isEmpty,
+      s"UPDATE $table: no such column(s) ${unknown.mkString(", ")} " +
+        s"(columns: ${current.columns.mkString(", ")})")
+    val updated = current.withColumns(assignments.map { case (c, e) =>
+      c -> when(expr(condition), expr(e)).otherwise(col(c))
+    })
     overwriteSelf(spark, updated, table)
   }
 

@@ -21,7 +21,7 @@ import java.nio.file.{Files, Paths}
   * sheet grid, a broadcast join against the K-row shared-string dictionary,
   * and a deterministic whole-table type pass (every value integral →
   * BIGINT, every value numeric → DOUBLE, else STRING — the same
-  * whole-input-inference contract as ingestCsv, never per-chunk).
+  * whole-input-inference contract as the CSV reader, never per-chunk).
   *
   * Scale shape: one .xlsx is one driver-unzipped local file (the
   * reference's own ingest unit); the parse, dictionary join, pivot, and

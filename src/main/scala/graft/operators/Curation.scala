@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -26,11 +27,10 @@ object Curation {
 
   /** Returns the curated documents (kept rows, original columns). */
   def curate(docs: DataFrame, cfg: CurationConfig = CurationConfig()): DataFrame = {
-    val stops = TextAnalysis.Lexicons("en").map(w => s"'$w'").mkString(", ")
     // 1. quality gate (codegen'd expressions, fused into the scan filter)
     val quality = docs
-      .withColumn("__n_tokens", size(split(col("text"), " ")))
-      .withColumn("__stop_cnt", expr(s"size(filter(split(text, ' '), x -> x IN ($stops)))"))
+      .withColumn("__n_tokens", size(words(col("text"))))
+      .withColumn("__stop_cnt", TextAnalysis.lexiconCount("en"))
       .filter(col("__n_tokens") >= cfg.minTokens &&
         col("__stop_cnt").cast("double") / col("__n_tokens") <= cfg.maxStopwordRatio &&
         col("lang").isInCollection(cfg.langs))
@@ -61,7 +61,7 @@ object Curation {
     curated.groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(size(split(col("text"), " "))).cast("long").as("total_tokens"),
+        sum(size(words(col("text")))).cast("long").as("total_tokens"),
         min(col("doc_id")).as("min_doc_id"))
       .orderBy(col("source"))
 
@@ -136,7 +136,7 @@ object Curation {
   def q118SequencePacking(spark: SparkSession, d: String): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, d)
       .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
+        size(words(col("text"))).cast("long").as("n_tokens"))
     prefixSum(docs, "doc_id", "n_tokens", bucketWidth = 100L)
       .withColumn("pack_id", floor((col("cum") - col("n_tokens")) / Q118PackBudget))
       .groupBy(col("pack_id"))
@@ -287,7 +287,7 @@ object Curation {
     val docs = Tables.documents(spark, d)
     // stage 0: plant contamination (q95's formula), wrap in markup, strip
     val snippet = docs.filter(col("doc_id") === 0)
-      .select(concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("__snip"))
+      .select(prefixWords(col("text"), 5).as("__snip"))
     val wrapped = docs.filter(col("doc_id") >= 10)
       .crossJoin(broadcast(snippet))
       .select(col("doc_id"), concat(
@@ -319,17 +319,15 @@ object Curation {
     // stats ride a single conditional aggregation over this frame, and the
     // persist below makes every downstream consumer read the materialized
     // corpus instead of re-running markup-strip + language scoring.
-    def score(lang: String): String = {
-      val list = TextAnalysis.Lexicons(lang).map(w => s"'$w'").mkString(", ")
-      s"size(filter(split(text, ' '), x -> x IN ($list)))"
-    }
     val scored = withDups
-      .withColumn("s_en", expr(score("en"))).withColumn("s_de", expr(score("de")))
-      .withColumn("s_es", expr(score("es"))).withColumn("s_fr", expr(score("fr")))
-      .withColumn("s_zh", expr(score("zh")))
+      .withColumn("s_en", TextAnalysis.lexiconCount("en"))
+      .withColumn("s_de", TextAnalysis.lexiconCount("de"))
+      .withColumn("s_es", TextAnalysis.lexiconCount("es"))
+      .withColumn("s_fr", TextAnalysis.lexiconCount("fr"))
+      .withColumn("s_zh", TextAnalysis.lexiconCount("zh"))
       .withColumn("__is_en", expr(q150LangCase) === "en")
       .withColumn("__is_quality",
-        col("__is_en") && size(split(col("text"), " ")) >= 30)
+        col("__is_en") && size(words(col("text"))) >= 30)
       .select(col("doc_id"), col("text"), col("__is_en"), col("__is_quality"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val quality = scored.filter(col("__is_quality"))
@@ -347,13 +345,8 @@ object Curation {
     // a ~30–60-char string (same 2⁻⁶⁴ collision class the engine's other
     // 64-bit content keys already accept).
     def grams(df: DataFrame): DataFrame = df
-      .withColumn("__toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(__toks) >= 5
-           THEN transform(sequence(1, size(__toks) - 4),
-                          i -> xxhash64(concat_ws(' ', slice(__toks, i, 5))))
-           ELSE array()
-           END""")).as("gram"))
+      .withColumn("__toks", words(col("text")))
+      .select(col("doc_id"), explode(wordGrams(col("__toks"), 5, internalKey)).as("gram"))
     val evalGrams = grams(docs.filter(col("doc_id") < 10)).select(col("gram")).distinct()
     val contaminated = grams(deduped).distinct()
       .join(broadcast(evalGrams), "gram")
@@ -362,7 +355,7 @@ object Curation {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // stage 6: token counts + sequence packing (q118 two-phase prefix sum)
     val toks = clean.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("n_tokens"))
+      size(words(col("text"))).cast("long").as("n_tokens"))
     val packs = prefixSum(toks, "doc_id", "n_tokens", bucketWidth = 100L)
       .withColumn("pack_id", floor((col("cum") - col("n_tokens")) / Q150PackBudget))
       .groupBy(col("pack_id"))
@@ -462,18 +455,15 @@ object Curation {
     * contract via per-split group checksums; this entry quantifies the
     * leakage the naive row-wise split would have caused.
     */
-  private def md5Hash(sqlExpr: String): Column =
-    expr(s"CAST(conv(substring(md5($sqlExpr), 1, 15), 16, 10) AS BIGINT)")
-
   def q169GroupSplit(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val perSource = Tables.documents(spark, d)
       .select(col("source"),
-        (md5Hash("CAST(doc_id AS STRING)") % 10).as("naive_split"))
+        (certifiedKey(col("doc_id").cast("string")) % 10).as("naive_split"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("naive_split")).as("n_naive_splits"))
-      .withColumn("sid", md5Hash("source") % 10)
+      .withColumn("sid", certifiedKey(col("source")) % 10)
       .withColumn("split",
         when(col("sid") <= 7, "train").when(col("sid") === 8, "val").otherwise("test"))
       .withColumn("naive_leaky_sources",
@@ -667,8 +657,6 @@ object Curation {
   def q231CurationCapstone(spark: SparkSession, d: String): DataFrame = {
     val tok = Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"), col("source"))
-    def md5l(e: String): String =
-      s"CAST(conv(substring(md5($e), 1, 15), 16, 10) AS BIGINT)"
     // round 9: per-doc scores come from the stored doc-score artifact
     // (TextAnalysis.docLmTable, q286 measures the build) — the capstone's
     // corpus cost is ONE split/gate pass; every later stage reads the
@@ -681,7 +669,7 @@ object Curation {
     val docs = tok
       .join(scores, "doc_id")
       .crossJoin(broadcast(gl))
-      .withColumn("h", expr(md5l("source")) % 100)
+      .withColumn("h", certifiedKey(col("source")) % 100)
       .withColumn("split",
         when(col("h") < 80, "train").when(col("h") < 90, "val").otherwise("test"))
       .withColumn("gated", expr(
@@ -768,16 +756,14 @@ object Curation {
       expr("cast(sum(cast(d_sum as decimal(38,0))) as decimal(38,0))").as("sw"),
       expr("cast(sum(n_big) as decimal(38,0))").as("sb"))
     Tables.documents(spark, d)
-      .select(col("doc_id"), col("n_chars"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("n_chars"), words(col("text")).as("ws"))
       .join(scores, Seq("doc_id"), "left")
       .crossJoin(broadcast(gl))
       .select(
         when(col("n_chars") < 180, 1).otherwise(0).as("r_len"),
-        expr("""CASE WHEN size(ws) >= 3 AND
-               1.0 - CAST(size(array_distinct(transform(sequence(1, size(ws) - 2),
-                     i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1),
-                                    element_at(ws, i + 2))))) AS DOUBLE)
-                   / (size(ws) - 2) >= 0.02 THEN 1 ELSE 0 END""").as("r_rep"),
+        when(size(col("ws")) >= 3 &&
+          lit(1.0) - size(array_distinct(wordGrams(col("ws"), 3))).cast("double")
+            / (size(col("ws")) - 2) >= 0.02, 1).otherwise(0).as("r_rep"),
         expr("""CASE WHEN d_sum IS NOT NULL AND
                cast(d_sum as decimal(38,0)) * sb <
                cast(n_big as decimal(38,0)) * (sw - 200000 * sb)
@@ -859,7 +845,7 @@ object Curation {
   def q254EpochPlan(spark: SparkSession, d: String): DataFrame = {
     val st = graft.sources.Tables.documents(spark, d)
       .groupBy(col("source"))
-      .agg(expr("cast(sum(size(split(text, ' '))) as bigint)").as("avail"))
+      .agg(sum(size(words(col("text")))).cast("bigint").as("avail"))
       .withColumn("wt", expr(
         "CASE WHEN source IN ('src0', 'src1', 'src2', 'src3', 'src4') THEN 2L ELSE 1L END"))
       .localCheckpoint() // sources-sized inventory; read by totals + plan
@@ -931,7 +917,7 @@ object Curation {
   def q275PackingEfficiency(spark: SparkSession, d: String): DataFrame = {
     val L = Q275SeqLen
     Tables.documents(spark, d)
-      .select(size(split(col("text"), " ")).cast("long").as("n"))
+      .select(size(words(col("text"))).cast("long").as("n"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n")).cast("long").as("total_tokens"),
         expr(s"cast(sum((n + ${L - 1}) div $L) as bigint)").as("padded_seqs"))
@@ -1066,7 +1052,7 @@ object Curation {
   def q310BucketBatching(spark: SparkSession, d: String): DataFrame = {
     val b = Q310BatchSize
     Tables.documents(spark, d)
-      .select(size(split(col("text"), " ")).cast("long").as("n"))
+      .select(size(words(col("text"))).cast("long").as("n"))
       .select(col("n"), explode(expr("array(16, 32, 64)")).as("width"))
       .withColumn("top", expr("((n + width - 1) div width) * width"))
       .groupBy(col("width"), col("top"))
@@ -1227,11 +1213,9 @@ object Curation {
     * oracle.
     */
   def q366SelectionParity(spark: SparkSession, d: String): DataFrame = {
-    val stops = TextAnalysis.Lexicons("en").map(w => s"'$w'").mkString(", ")
     val gate = Tables.documents(spark, d)
-      .withColumn("nt", size(split(col("text"), " ")).cast("long"))
-      .withColumn("sc", expr(
-        s"cast(size(filter(split(text, ' '), x -> x IN ($stops))) as long)"))
+      .withColumn("nt", size(words(col("text"))).cast("long"))
+      .withColumn("sc", TextAnalysis.lexiconCount("en").cast("long"))
       .withColumn("sel", expr(
         "cast(nt >= 20 AND 2 * sc <= nt AND lang IN ('en', 'de', 'fr') as long)"))
     val per = gate.groupBy(col("source"))
@@ -1294,16 +1278,14 @@ object Curation {
 
   def q368CoverageSelection(spark: SparkSession, d: String): DataFrame = {
     val g = Tables.documents(spark, d)
-      .select(col("source"), split(col("text"), " ").as("ws"))
+      .select(col("source"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
-      .select(col("source"), explode(expr(
-        "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), chr(1), element_at(ws, i + 1)))"))
-        .as("bg"))
+      .select(col("source"), explode(bigrams(col("ws"))).as("bg"))
       .select(col("source"),
-        // r17: xxhash64 gram keys (internal — membership + distinct counts
-        // only; the greedy tie-breaks on the source NAME, never on gk, so
-        // the oracle's md5 replay agrees on every compared aggregate w.h.p.)
-        xxhash64(col("bg")).as("gk"))
+        // r17: internal gram keys (membership + distinct counts only; the
+        // greedy tie-breaks on the source NAME, never on gk, so the
+        // oracle's md5 replay agrees on every compared aggregate w.h.p.)
+        internalKey(col("bg")).as("gk"))
       .distinct()
       .localCheckpoint() // vocab-sized distinct (source, gram) frame; read by all rounds
     val universe = g.agg(countDistinct(col("gk")).as("u"))
@@ -1404,10 +1386,10 @@ object Curation {
     */
   def q409WeightedJaccard(spark: SparkSession, d: String): DataFrame = {
     val cnt = Tables.documents(spark, d)
-      .select(col("source"), explode(split(col("text"), " ")).as("t"))
+      .select(col("source"), explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
       .select(col("source"),
-        expr("CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)").as("th"))
+        certifiedKey(col("t")).as("th"))
       .groupBy(col("source"), col("th")).agg(count(lit(1)).as("w"))
       .localCheckpoint() // vocab-sized (source x token) count table, read twice
     val tot = cnt.groupBy(col("source")).agg(expr("cast(sum(w) as bigint)").as("tw"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -78,8 +79,8 @@ object Dedup {
       .select(
         (col("doc_id") + 1000000L).as("doc_id"),
         (if (dropLastWords == 0) col("text")
-         else concat_ws(" ", slice(split(col("text"), " "), lit(1),
-           greatest(size(split(col("text"), " ")) - dropLastWords, lit(1))))).as("text"))
+         else prefixWords(col("text"),
+           greatest(size(words(col("text"))) - dropLastWords, lit(1)))).as("text"))
     base.unionByName(dups)
   }
 
@@ -123,7 +124,7 @@ object Dedup {
     val fns = graft.functions.GraftFunctions
     docs
       .withColumn("shingles",
-        fns.shingleHashes(docs.sparkSession, split(col("text"), " "), 3))
+        fns.shingleHashes(docs.sparkSession, words(col("text")), 3))
       .withColumn("sig",
         fns.minhashFromHashes(docs.sparkSession, col("shingles"), NumHashes))
       .select(col("doc_id"), col("shingles"), col("sig"))
@@ -276,7 +277,7 @@ object Dedup {
     docs
       .withColumn("simhash",
         graft.functions.GraftFunctions.simhash64(docs.sparkSession,
-          array_distinct(split(col("text"), " "))))
+          array_distinct(words(col("text")))))
       .select(col("doc_id"), col("simhash"))
 
   def simhashNearDups(docs: DataFrame, maxHamming: Int): DataFrame = {
@@ -394,11 +395,11 @@ object Dedup {
     */
   def q33NgramJaccard(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d).filter(col("doc_id") < 100)
-    val words = docs.select(col("doc_id"),
-      explode(array_distinct(split(col("text"), " "))).as("word"))
-    val sizes = words.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val a = words.as("a")
-    val b = words.as("b")
+    val wordRows = docs.select(col("doc_id"),
+      explode(array_distinct(words(col("text")))).as("word"))
+    val sizes = wordRows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val a = wordRows.as("a")
+    val b = wordRows.as("b")
     val inter = a.join(b, col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("i"))
@@ -611,14 +612,8 @@ object Dedup {
     * the clustering pair-gen and the q261 contamination audit.
     */
   private[graft] def shingles3(docs: DataFrame): DataFrame = docs
-    .withColumn("toks", split(col("text"), " "))
-    .select(col("doc_id"), explode(array_distinct(expr(
-      """CASE WHEN size(toks) < 3 THEN array()
-         ELSE transform(sequence(1, size(toks) - 2),
-                        i -> concat_ws(' ', element_at(toks, i),
-                                       element_at(toks, i + 1),
-                                       element_at(toks, i + 2)))
-         END"""))).as("shingle"))
+    .withColumn("toks", words(col("text")))
+    .select(col("doc_id"), explode(array_distinct(wordGrams(col("toks"), 3))).as("shingle"))
 
   def shingleJaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val sh = shingles3(docs)
@@ -650,8 +645,7 @@ object Dedup {
     def droppedTail(k: Int, offset: Long): DataFrame =
       docs.filter(col("doc_id") < 12).select(
         (col("doc_id") + offset).as("doc_id"),
-        concat_ws(" ", slice(split(col("text"), " "), lit(1),
-          greatest(size(split(col("text"), " ")) - k, lit(1)))).as("text"))
+        prefixWords(col("text"), greatest(size(words(col("text"))) - k, lit(1))).as("text"))
     base.unionByName(droppedTail(8, 1000000L))
       .unionByName(droppedTail(16, 2000000L))
   }
@@ -814,7 +808,7 @@ object Dedup {
     */
   def q233FingerprintBitBalance(spark: SparkSession, d: String): DataFrame = {
     val vocab = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("tok"))
+      .select(explode(words(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .distinct()
       .withColumn("h", xxhash64(col("tok")))
@@ -866,13 +860,13 @@ object Dedup {
     // from `docs` and the self-join doubled that: 8 corpus scans for one
     // tokenization's worth of information.
     val toks = docs.select(col("doc_id"),
-      array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+      array_sort(array_distinct(words(col("text")))).as("toks"))
       .localCheckpoint() // candidate-population-sized (docs pre-filtered to the join's id range)
-    val words = toks.select(col("doc_id"), size(col("toks")).as("n"),
+    val wordRows = toks.select(col("doc_id"), size(col("toks")).as("n"),
       explode(col("toks")).as("word"))
     // global document frequency; rarest-first, ties by word → total order
-    val freq = words.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val prefixed = words.join(broadcast(freq), "word")
+    val freq = wordRows.groupBy(col("word")).agg(count(lit(1)).as("df"))
+    val prefixed = wordRows.join(broadcast(freq), "word")
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("word"))))
       .filter(col("rk") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
@@ -927,12 +921,12 @@ object Dedup {
     // r17: pinned — sizes and both inverted-index join sides each re-ran
     // the tokenize pass (documents x4); population-bounded (doc_id < 200),
     // the q140 pin class
-    val words = docs.select(col("doc_id"),
-      explode(array_distinct(split(col("text"), " "))).as("word"))
+    val wordRows = docs.select(col("doc_id"),
+      explode(array_distinct(words(col("text")))).as("word"))
       .localCheckpoint() // doc×word-sized candidate-population tokens
-    val sizes = words.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val a = words.as("a")
-    val b = words.as("b")
+    val sizes = wordRows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val a = wordRows.as("a")
+    val b = wordRows.as("b")
     val inter = a.join(b, col("a.word") === col("b.word") &&
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -977,14 +971,14 @@ object Dedup {
     val base = Tables.documents(spark, d).select(col("doc_id"), col("text"))
     val truncated = base.filter(col("doc_id") % 25 === 0)
       .select((col("doc_id") + 500000L).as("doc_id"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("text"))
+        prefixWords(col("text"), 5).as("text"))
     val identical = base.filter(col("doc_id") % 35 === 0)
       .select((col("doc_id") + 600000L).as("doc_id"), col("text"))
     val corpus = base.unionByName(truncated).unionByName(identical)
       // dedup key: the first 5 words (truncated copies collide with their
       // source; identical copies collide exactly)
-      .withColumn("dkey", concat_ws(" ", slice(split(col("text"), " "), 1, 5)))
-      .withColumn("quality", size(split(col("text"), " ")).cast("long"))
+      .withColumn("dkey", prefixWords(col("text"), 5))
+      .withColumn("quality", size(words(col("text"))).cast("long"))
     val survivors = corpus
       .groupBy(col("dkey"))
       .agg(count(lit(1)).as("group_size"),
@@ -1112,8 +1106,7 @@ object Dedup {
     val docs = Tables.documents(spark, d)
     val v3 = docs.filter(col("doc_id") < 12).select(
       (col("doc_id") + Q242BatchBase).as("doc_id"),
-      concat_ws(" ", slice(split(col("text"), " "), lit(1),
-        greatest(size(split(col("text"), " ")) - 24, lit(1)))).as("text"))
+      prefixWords(col("text"), greatest(size(words(col("text"))) - 24, lit(1))).as("text"))
     val fresh = spark.range(3).select(
       (col("id") + 6000000L).as("doc_id"),
       expr("concat('vx', id, 'a vx', id, 'b vx', id, 'c vx', id, 'd')").as("text"))
@@ -1368,8 +1361,8 @@ object Dedup {
     docs.unionByName(docs.filter(col("doc_id") < 40)
         .select(col("lang"), (col("doc_id") + 1000000L).as("doc_id"), col("text")))
       .select(col("lang"),
-        substring(md5(col("text")), 1, 16).as("h"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("t"))
+        certifiedFingerprint(col("text")).as("h"),
+        size(words(col("text"))).cast("bigint").as("t"))
       .groupBy(col("lang"), col("h"))
       .agg(count(lit(1)).as("cnt"), max(col("t")).as("t"))
       .groupBy(col("lang"))
@@ -1666,7 +1659,7 @@ object Dedup {
     */
   def q293ClusterTokenSavings(spark: SparkSession, d: String): DataFrame = {
     val corpus = q97Corpus(spark, d)
-      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(words(col("text"))).cast("long").as("n_tokens"))
     val langs = Tables.documents(spark, d).select(col("doc_id").as("base"), col("lang"))
     val m = nearDupClusterTable(spark, d)
       .join(corpus, "doc_id")
@@ -1768,12 +1761,9 @@ object Dedup {
           .otherwise(col("text")))
     val k = Q270K
     planted
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), words(col("text")).as("w"))
       .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, size(w) - $k),
-            i -> substring(md5(concat_ws(' ', slice(w, i + 1, $k))), 1, 16))"""))
-        .as("gk"))
+      .select(col("doc_id"), explode(wordGrams(col("w"), k, certifiedFingerprint(_))).as("gk"))
       .groupBy(col("gk"))
       .agg(countDistinct(col("doc_id")).as("gdf"))
       .filter(col("gdf") >= 2)
@@ -1841,13 +1831,11 @@ object Dedup {
       .withColumn("text",
         when(col("doc_id") % 34 === 3, concat(col("text"), lit(" " + Q270Span)))
           .otherwise(col("text")))
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), col("lang"), words(col("text")).as("w"))
       .withColumn("n_tokens", size(col("w")).cast("long"))
     val grams = batch.filter(size(col("w")) >= k)
       .select(col("doc_id"),
-        posexplode(expr(
-          s"""transform(sequence(0, size(w) - $k),
-              i -> substring(md5(concat_ws(' ', slice(w, i + 1, $k))), 1, 16))""")))
+        posexplode(wordGrams(col("w"), k, certifiedFingerprint(_))))
       .toDF("doc_id", "p", "gk")
     val wPrev = Window.partitionBy(col("doc_id")).orderBy(col("p"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1941,12 +1929,10 @@ object Dedup {
                                   keep: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = docs
-      .select((col("doc_id") +: keep.map(col)) :+ split(col("text"), " ").as("w"): _*)
+      .select((col("doc_id") +: keep.map(col)) :+ words(col("text")).as("w"): _*)
       .filter(size(col("w")) >= k + ww - 1)
     val grams = base.select((col("doc_id") +: keep.map(col)) :+
-        posexplode(expr(
-          s"""transform(sequence(0, size(w) - $k),
-              i -> CAST(conv(substring(md5(concat_ws(' ', slice(w, i + 1, $k))), 1, 10), 16, 10) AS BIGINT))""")): _*)
+        posexplode(wordGrams(col("w"), k, certifiedKey(_, 10))): _*)
       .toDF(("doc_id" +: keep) ++ Seq("p", "h"): _*)
     val wFrame = Window.partitionBy(col("doc_id")).orderBy(col("p"))
       .rowsBetween(0, ww - 1)
@@ -2129,9 +2115,10 @@ object Dedup {
     val idx = winnowIndexTable(spark, d)
       .select(col("doc_id").as("ref_id"), col("sh"))
     // hit counts ride the per-hash df SUMMARY (1 row per hash — immune
-    // to a universal-boilerplate hot fingerprint by construction;
-    // SkewBenchWinnow measures the raw join growing linearly with corpus
-    // size while this leg stays flat). Σ df equals the raw pair count.
+    // to a universal-boilerplate hot fingerprint by construction; the
+    // SCALE.md winnow rehearsal measured the raw join growing linearly
+    // with corpus size while this leg stays flat). Σ df equals the raw
+    // pair count.
     // Only the distinct-ref ATTRIBUTION leg joins raw index rows — at
     // 100 TB that leg joins a capped per-hash ref list with a driven
     // overflow report (the q223/q224 MaxBucketSize discipline).
@@ -2241,8 +2228,7 @@ object Dedup {
         lit("copy").as("kind"))
     val edits = base.filter(col("doc_id") >= 30 && col("doc_id") < 60)
       .select((col("doc_id") + 5000000L).as("doc_id"),
-        expr("array_join(slice(split(text, ' '), 1, size(split(text, ' ')) - 1), ' ')")
-          .as("text"),
+        prefixWords(col("text"), size(words(col("text"))) - 1).as("text"),
         lit("edit").as("kind"))
     val fresh = base.filter(col("doc_id") >= 60 && col("doc_id") < 90)
       .select((col("doc_id") + 6000000L).as("doc_id"),
@@ -2252,20 +2238,18 @@ object Dedup {
         lit("fresh").as("kind"))
     val batch = copies.unionByName(edits).unionByName(fresh).localCheckpoint() // batch-sized fixture
     val corpusHash = base
-      .select(expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)").as("th"))
+      .select(certifiedKey(col("text")).as("th"))
       .distinct()
     val s1 = batch
       .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)").as("th"))
+        certifiedKey(col("text")).as("th"))
       .join(corpusHash, "th").select(col("doc_id")).distinct()
       .withColumn("exact", lit(true))
-    val bw = batch.select(col("doc_id"), split(col("text"), " ").as("w"))
+    val bw = batch.select(col("doc_id"), words(col("text")).as("w"))
       .withColumn("n_tokens", size(col("w")).cast("long"))
     val grams = bw.filter(size(col("w")) >= k)
       .select(col("doc_id"),
-        posexplode(expr(
-          s"""transform(sequence(0, size(w) - $k),
-              i -> substring(md5(concat_ws(' ', slice(w, i + 1, $k))), 1, 16))""")))
+        posexplode(wordGrams(col("w"), k, certifiedFingerprint(_))))
       .toDF("doc_id", "p", "gk")
     val wPrev = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("p"))
@@ -2511,7 +2495,7 @@ object Dedup {
         .withColumn("m_bits", col("nd") * 8)
       val seeds = Q358Seeds.toDF("ha", "hb")
       Tables.documents(spark, d)
-        .select(expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)").as("key"))
+        .select(certifiedKey(col("text")).as("key"))
         .crossJoin(broadcast(geom)) // 1-row geometry
         .crossJoin(broadcast(seeds)) // k-row hash family
         .withColumn("yy", expr(s"((key % $Q358P) * ha + hb) % $Q358P"))

@@ -2,6 +2,7 @@ package graft.operators
 
 
 import graft.crypto.CryptoFunctions
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -124,7 +125,7 @@ object EtlQueries {
     val tmp = graft.core.Scratch.dir("jsonl")
     Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
+        size(words(col("text"))).cast("long").as("n_tokens"))
       .write.mode("overwrite").json(tmp)
     spark.read.json(tmp)
       .groupBy(col("lang"))
@@ -1131,10 +1132,8 @@ object EtlQueries {
     def layer(df: DataFrame, name: String): DataFrame =
       df.select(
           col("n_nationkey"),
-          expr("""CAST(conv(substring(md5(concat_ws('|',
-                 CAST(n_nationkey AS STRING), n_name,
-                 CAST(n_regionkey AS STRING))), 1, 15), 16, 10) AS BIGINT)""")
-            .as("rh"))
+          certifiedKey(concat_ws("|", col("n_nationkey").cast("string"), col("n_name"),
+            col("n_regionkey").cast("string"))).as("rh"))
         .agg(count(lit(1)).as("n_rows"),
           expr("cast(sum(cast(n_nationkey as decimal(38,0))) as bigint)").as("key_sum"),
           expr("cast(sum(cast(rh as decimal(38,0))) % 1000000000000000000 as bigint)")
@@ -1258,8 +1257,8 @@ object EtlQueries {
       .option("multiLine", "true").option("inferSchema", "true")
       .csv(tmp)
       .agg(count(lit(1)).as("n_rows"),
-        expr("""cast(sum(cast(conv(substring(md5(concat(cast(n_nationkey as string), '#', gnarly)), 1, 15), 16, 10) as decimal(38,0))) % 1000000000000000000 as bigint)""")
-          .as("content_sum"))
+        (sum(certifiedKey(concat(col("n_nationkey").cast("string"), lit("#"), col("gnarly")))
+          .cast("decimal(38,0)")) % 1000000000000000000L).cast("bigint").as("content_sum"))
   }
 
   val q208Oracle: String =
@@ -1580,9 +1579,8 @@ object EtlQueries {
   def q390RendezvousShards(spark: SparkSession, d: String): DataFrame = {
     val a = Tables.documents(spark, d)
       .select(col("doc_id"), explode(expr("sequence(0, 16)")).as("s"))
-      .select(col("doc_id"), col("s"), expr(
-        "CAST(conv(substring(md5(concat(doc_id, '#', s)), 1, 15), 16, 10) AS BIGINT)")
-        .as("hv"))
+      .select(col("doc_id"), col("s"),
+        certifiedKey(concat(col("doc_id"), lit("#"), col("s"))).as("hv"))
       .groupBy(col("doc_id"))
       .agg(expr("max_by(s, hv) FILTER (WHERE s < 16)").as("s16"),
         expr("max_by(s, hv)").as("s17"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -268,7 +269,7 @@ object Profiling {
     * overestimate it incurs, and the always-true lower-bound invariant
     * est ≥ exact (a CM estimate can only overcount — collisions add).
     *
-    * The row hashes are md5-prefix based (`conv(substring(md5(...)))`)
+    * The row hashes are md5-prefix based (`TextKeys.certifiedKey`)
     * rather than xxhash64 specifically so DuckDB can replay them — the
     * one hash family both engines compute bit-identically. Scale shape:
     * the sketch is built from the per-token EXACT counts (sum commutes
@@ -280,12 +281,12 @@ object Profiling {
   val CmDepth = 3
   val CmWidth = 1024
 
-  private def cmCell(i: Int, tokCol: String): org.apache.spark.sql.Column =
-    expr(s"CAST(conv(substring(md5(concat('$i#', $tokCol)), 1, 15), 16, 10) AS BIGINT) % $CmWidth")
+  private def cmCell(i: Int, tokCol: String): Column =
+    certifiedKey(concat(lit(s"$i#"), col(tokCol))) % CmWidth
 
   def q168CmHeavyHitters(spark: SparkSession, d: String): DataFrame = {
     val exact = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("tok"))
+      .select(explode(words(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val cells = exact
       .select(explode(array((0 until CmDepth).map(i =>
@@ -814,10 +815,10 @@ object Profiling {
     val b = Q302Resamples
     Tables.documents(spark, d)
       .select(col("doc_id"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("t"),
+        size(words(col("text"))).cast("bigint").as("t"),
         explode(expr(s"sequence(1, $b)")).as("b"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat(cast(b as string), '#', cast(doc_id as string))), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h",
+        certifiedKey(concat(col("b").cast("string"), lit("#"), col("doc_id").cast("string"))))
       .withColumn("u_ppm", expr("h % 1000000"))
       .withColumn("w", expr(
         """CASE WHEN u_ppm < 367879 THEN 0 WHEN u_ppm < 735759 THEN 1
@@ -874,9 +875,9 @@ object Profiling {
     // md5 keys and the compared counts agree w.h.p. — the q183/q301 rule)
     val per = Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"), col("source"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("nt"),
+        size(words(col("text"))).cast("bigint").as("nt"),
         col("n_chars").cast("long").as("nc"),
-        expr("xxhash64(text)").as("th"))
+        internalKey(col("text")).as("th"))
       .localCheckpoint() // doc-count-sized narrow (5 longs/row)
     val m1 = per.agg(
       count(lit(1)).as("n_docs"),
@@ -894,12 +895,9 @@ object Profiling {
         targets = Seq(expr("(__n + 1) div 2")))
       .agg(expr("cast(max(nt) as bigint)").as("median_tokens"))
     val gAgg = Tables.documents(spark, d)
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(0, size(w) - 3),
-            i -> xxhash64(concat_ws(' ', slice(w, i + 1, 3))))"""))
-        .as("gk"))
+      .select(col("doc_id"), explode(wordGrams(col("w"), 3, internalKey)).as("gk"))
       .groupBy(col("gk")).agg(countDistinct(col("doc_id")).as("df"))
       .agg(count(lit(1)).as("n_distinct_3grams"),
         expr("cast(count_if(df >= 2) as bigint)").as("n_crossdoc_3grams"))
@@ -1288,7 +1286,7 @@ object Profiling {
            THEN transform(sequence(1, length(text) - 7, 4), i -> substring(text, i, 8))
            ELSE array() END""")).as("s"))
       .select(col("source"),
-        expr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)").as("hv"))
+        certifiedKey(col("s")).as("hv"))
     val w = Window.partitionBy(col("source")).orderBy(col("hv").asc)
     val hk = sh.withColumn("dr", dense_rank().over(w))
       .filter(col("dr") <= lit(KmvK)).filter(col("dr") === lit(KmvK))
@@ -1413,8 +1411,7 @@ object Profiling {
     val cells = Tables.events(spark, d)
       .groupBy(col("event_type"), expr("CAST(CAST(ts AS DATE) AS STRING)").as("day"))
       .agg(count(lit(1)).as("x"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat(event_type, '|', day)), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h", certifiedKey(concat(col("event_type"), lit("|"), col("day"))))
     val noisy = cells
       .withColumn("u_ppm", expr("CAST(h AS DECIMAL(38,0)) * 1000000 div 1152921504606846976"))
       .withColumn("c", expr("CAST(u_ppm - 500000 AS BIGINT)"))

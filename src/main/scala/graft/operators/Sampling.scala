@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -231,22 +232,18 @@ object Sampling {
     * assignment itself. One groups-sized aggregate decides; no row ever
     * shuffles for the decision at 100 TB.
     */
-  private def md5Long(c: Column): Column =
-    expr(s"CAST(conv(substring(md5(${c.toString}), 1, 15), 16, 10) AS BIGINT)")
-
   def q226GroupAwareSplit(spark: SparkSession, d: String): DataFrame = {
     val g = Tables.documents(spark, d)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("h", md5Long(col("source")) % 100)
+      .withColumn("h", certifiedKey(col("source")) % 100)
       .withColumn("split",
         when(col("h") < 80, "train").when(col("h") < 90, "val").otherwise("test"))
     g.groupBy(col("split"))
       .agg(count(lit(1)).as("n_groups"),
         expr("cast(sum(n) as bigint)").as("n_docs"),
-        expr("""cast(sum(cast(CAST(conv(substring(md5(source), 1, 15), 16, 10) AS BIGINT)
-                as decimal(38,0))) % 1000000000000000000 as bigint)""")
-          .as("group_checksum"))
+        (sum(certifiedKey(col("source")).cast("decimal(38,0)")) % 1000000000000000000L)
+          .cast("bigint").as("group_checksum"))
       .orderBy(col("split"))
   }
 
@@ -289,7 +286,7 @@ object Sampling {
   def q227TemperatureSample(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
       .select(col("lang"), col("doc_id"))
-      .withColumn("h", md5Long(expr("CAST(doc_id AS STRING)")))
+      .withColumn("h", certifiedKey(col("doc_id").cast("string")))
       .withColumn("b", expr(s"h div ${Q227BucketWidth}L"))
     // per-language targets from exactly-summed sqrt weights
     val c = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
@@ -551,9 +548,10 @@ object Sampling {
     // both engines share bit-for-bit, which upgrades this oracle from the
     // q85-style statistical certificate to a full value replay
     val prior = orders
-      .withColumn("u", expr(
-        """(CAST(conv(substring(md5(CAST(o_orderkey AS STRING)), 1, 8), 16, 10) AS BIGINT)
-           + 0.5) / 4294967296.0"""))
+      // 0.5 and 2^32 stay DECIMAL literals: u is exact decimal arithmetic,
+      // as in the oracle
+      .withColumn("u", (certifiedKey(col("o_orderkey").cast("string"), 8) + expr("0.5"))
+        / expr("4294967296.0"))
       .withColumn("priority_nano", expr(
         "CAST(round(ln(u) / (CAST(wc AS DOUBLE) / 100.0) * 1000000000) AS BIGINT)"))
     val top = prior
@@ -665,7 +663,7 @@ object Sampling {
     val c = Tables.documents(spark, d)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
-        expr("cast(sum(size(split(text, ' '))) as bigint)").as("n_tokens"))
+        sum(size(words(col("text")))).cast("bigint").as("n_tokens"))
       .localCheckpoint() // languages-sized (5 rows)
     val w = c.select(col("lang"), col("n_docs"), col("n_tokens"),
         explode(expr("array(1000, 500, 250, 0)")).as("tau_milli"))
@@ -733,8 +731,8 @@ object Sampling {
   def q340EpochOrder(spark: SparkSession, d: String): DataFrame = {
     val epochs = Tables.documents(spark, d).select(col("doc_id"))
       .withColumn("epoch", explode(expr("array(cast(0 as bigint), cast(1 as bigint))")))
-      .withColumn("h", expr(
-        """CAST(conv(substring(md5(concat('ep#', CAST(epoch AS STRING), '#', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"""))
+      .withColumn("h", certifiedKey(
+        concat(lit("ep#"), col("epoch").cast("string"), lit("#"), col("doc_id").cast("string"))))
     val targets = (1L to 20L).map(i => lit(Q340Resume + i))
     BucketRank.select(epochs, "epoch",
         bucket = expr("h div 1099511627776"), // 2^40: 15 hex chars = 60 bits
@@ -783,9 +781,8 @@ object Sampling {
     * bucket-local running sums, so no single-task window ever sees the
     * corpus (the q214 pattern). Input must carry (doc_id, n_tok, h,
     * bucket); output adds `cum` (inclusive running total) and `st`
-    * (exclusive start offset). Shared by q342 and the SkewBenchPacking
-    * rehearsal, which plants degenerate token/bucket distributions
-    * against exactly this code path.
+    * (exclusive start offset). Used by q342; SCALE.md records the
+    * degenerate token/bucket distributions this path was rehearsed on.
     */
   def tokenPrefixSum(base: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -808,9 +805,8 @@ object Sampling {
     val L = Q342Budget
     val base = Tables.documents(spark, d)
       .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .withColumn("h", expr(
-        """CAST(conv(substring(md5(concat('pk#', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"""))
+        size(words(col("text"))).cast("long").as("n_tok"))
+      .withColumn("h", certifiedKey(concat(lit("pk#"), col("doc_id").cast("string"))))
       .withColumn("bucket", expr("h div 1099511627776")) // 2^40
     val prefixed = tokenPrefixSum(base)
       .withColumn("fp", expr(s"st div $L"))
@@ -879,14 +875,13 @@ object Sampling {
     * key; full oracle replays the md5 arithmetic bit-for-bit.
     */
   def q347FimSpanPlan(spark: SparkSession, d: String): DataFrame = {
-    def h(tag: String): String =
-      s"CAST(conv(substring(md5(concat('$tag#', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+    def h(tag: String): Column = certifiedKey(concat(lit(s"$tag#"), col("doc_id").cast("string")))
     val planned = Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("n_tok"))
-      .withColumn("is_fim", expr(s"${h("fim")} % 2 = 0"))
-      .withColumn("h1", expr(s"${h("fima")} % (n_tok + 1)"))
-      .withColumn("h2", expr(s"${h("fimb")} % (n_tok + 1)"))
+        size(words(col("text"))).cast("bigint").as("n_tok"))
+      .withColumn("is_fim", h("fim") % 2 === 0)
+      .withColumn("h1", h("fima") % (col("n_tok") + 1))
+      .withColumn("h2", h("fimb") % (col("n_tok") + 1))
       .withColumn("c1", least(col("h1"), col("h2")))
       .withColumn("c2", greatest(col("h1"), col("h2")))
     planned.groupBy(col("lang"))
@@ -944,9 +939,8 @@ object Sampling {
     val L = Q342Budget
     val base = Tables.documents(spark, d)
       .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .withColumn("h", expr(
-        """CAST(conv(substring(md5(concat('pk#', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"""))
+        size(words(col("text"))).cast("long").as("n_tok"))
+      .withColumn("h", certifiedKey(concat(lit("pk#"), col("doc_id").cast("string"))))
       .withColumn("bucket", expr("h div 1099511627776")) // 2^40
     val prefixed = tokenPrefixSum(base)
       .withColumn("crossing", expr(s"CASE WHEN (cum - 1) div $L > st div $L THEN 1 ELSE 0 END"))
@@ -1004,8 +998,7 @@ object Sampling {
     // r17: pinned — three consumers (inner starts, bucket endpoints, the
     // per-source rollup) each re-ran the scan + md5 pass (documents x4)
     val base = Tables.documents(spark, d).select(col("doc_id"), col("source"))
-      .withColumn("h", expr(
-        """CAST(conv(substring(md5(concat('mix#', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"""))
+      .withColumn("h", certifiedKey(concat(lit("mix#"), col("doc_id").cast("string"))))
       .withColumn("b", expr("h div 1099511627776")) // 2^40: ≤ 2^20 buckets
       .localCheckpoint() // doc-count-sized narrow (id, source, hash)
     val wB = Window.partitionBy(col("b")).orderBy(col("h"), col("doc_id"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -2330,8 +2331,8 @@ object Similarity {
     val proj = lf
       .select(col("vec_id"), col("dim"), col("xq"),
         explode(expr(s"sequence(0, ${dOut - 1})")).as("k"))
-      .withColumn("sgn", expr(
-        """1 - 2 * (CAST(conv(substring(md5(concat('rp#', CAST(k AS STRING), '#', CAST(dim AS STRING))), 1, 15), 16, 10) AS BIGINT) % 2)"""))
+      .withColumn("sgn", lit(1) - lit(2) *
+        (certifiedKey(concat(lit("rp#"), col("k").cast("string"), lit("#"), col("dim").cast("string"))) % 2))
       .groupBy(col("vec_id"), col("k"))
       .agg(expr("cast(sum(sgn * xq) as bigint)").as("y"))
       .groupBy(col("vec_id"))
@@ -3101,8 +3102,8 @@ object Similarity {
       .withColumn("dim", expr(s"sub * $PqSubDim + jj"))
       .select(col("vec_id"), col("dim"), col("xq"),
         explode(expr("sequence(0, 7)")).as("i"))
-      .withColumn("sgn", expr(
-        """1 - 2 * (CAST(conv(substring(md5(concat('lsh#', CAST(i AS STRING), '#', CAST(dim AS STRING))), 1, 15), 16, 10) AS BIGINT) % 2)"""))
+      .withColumn("sgn", lit(1) - lit(2) *
+        (certifiedKey(concat(lit("lsh#"), col("i").cast("string"), lit("#"), col("dim").cast("string"))) % 2))
       .groupBy(col("vec_id"), col("i"))
       .agg(expr("cast(sum(sgn * xq) as bigint)").as("p"))
       .groupBy(col("vec_id"))

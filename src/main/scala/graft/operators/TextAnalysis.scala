@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextKeys._
 import graft.sources.Tables
 
 import org.apache.spark.sql.expressions.Window
@@ -24,10 +25,9 @@ object TextAnalysis {
     "fr" -> Seq("le", "et", "les", "des", "une"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  private def scoreExpr(words: Seq[String]): String = {
-    val list = words.map(w => s"'$w'").mkString(", ")
-    s"size(filter(split(text, ' '), x -> x IN ($list)))"
-  }
+  /** How many of `text`'s words are in `lang`'s lexicon. */
+  private[graft] def lexiconCount(lang: String): Column =
+    size(filter(words(col("text")), _.isin(Lexicons(lang): _*)))
 
   // ---------------------------------------------------------------- q37
   /** Language ID: argmax of marker counts with a fixed tie-break order
@@ -36,11 +36,11 @@ object TextAnalysis {
     */
   def q37LangId(spark: SparkSession, d: String): DataFrame =
     Tables.documents(spark, d)
-      .withColumn("s_en", expr(scoreExpr(Lexicons("en"))))
-      .withColumn("s_de", expr(scoreExpr(Lexicons("de"))))
-      .withColumn("s_es", expr(scoreExpr(Lexicons("es"))))
-      .withColumn("s_fr", expr(scoreExpr(Lexicons("fr"))))
-      .withColumn("s_zh", expr(scoreExpr(Lexicons("zh"))))
+      .withColumn("s_en", lexiconCount("en"))
+      .withColumn("s_de", lexiconCount("de"))
+      .withColumn("s_es", lexiconCount("es"))
+      .withColumn("s_fr", lexiconCount("fr"))
+      .withColumn("s_zh", lexiconCount("zh"))
       .withColumn("predicted", expr(
         """CASE
              WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
@@ -78,11 +78,11 @@ object TextAnalysis {
     */
   def q38QualityScore(spark: SparkSession, d: String): DataFrame =
     Tables.documents(spark, d)
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(words(col("text"))).cast("long"))
       .withColumn("text_len", length(col("text")).cast("long"))
       .withColumn("avg_token_len",
         round((col("text_len") - (col("n_tokens") - 1)).cast("double") / col("n_tokens"), 4))
-      .withColumn("stop_cnt", expr(scoreExpr(Lexicons("en"))).cast("long"))
+      .withColumn("stop_cnt", lexiconCount("en").cast("long"))
       .withColumn("stopword_ratio", round(col("stop_cnt").cast("double") / col("n_tokens"), 4))
       .withColumn("quality_score", round(
         least(col("n_tokens").cast("double") / 100.0, lit(1.0)) *
@@ -289,7 +289,7 @@ object TextAnalysis {
     // one lazy plan: the corpus size is a broadcast one-row aggregate joined
     // in, not a driver-side .first() (which would split the query into two
     // jobs and put a scalar on the driver)
-    val terms = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+    val terms = docs.select(col("doc_id"), explode(words(col("text"))).as("word"))
     // r17: df and the corpus size are both functions of the tf table (its
     // rows ARE the distinct (doc, word) pairs; every doc has ≥1 term row,
     // split() never yields an empty array) — pin it and derive them, one
@@ -370,7 +370,7 @@ object TextAnalysis {
 
   def chunkDocuments(docs: DataFrame, chunkTokens: Int, stride: Int): DataFrame =
     docs
-      .withColumn("__tokens", split(col("text"), " "))
+      .withColumn("__tokens", words(col("text")))
       .withColumn("chunk_start",
         explode(expr(s"sequence(0, greatest(size(__tokens) - 1, 0), $stride)")))
       .withColumn("chunk_id", (col("chunk_start") / stride).cast("int"))
@@ -558,15 +558,13 @@ object TextAnalysis {
         concat(col("text"), lit(" zq"), col("doc_id").cast("string"),
           lit(" wq"), col("doc_id").cast("string")).as("text")))
     val probeBig = probe
-      .select(col("doc_id"), col("kind"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("kind"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), col("kind"),
-        explode(expr(
-          "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), chr(1), element_at(ws, i + 1)))"))
-          .as("bg"))
+        explode(bigrams(col("ws"))).as("bg"))
       .select(col("doc_id"), col("kind"),
-        expr(md5l("bg")).as("g2"),
-        expr(md5l("split(bg, chr(1))[1]")).as("gr"))
+        certifiedKey(col("bg")).as("g2"),
+        certifiedKey(bigramWord(col("bg"), 1)).as("gr"))
     val model = bigramLmTable(spark, d)
     val uni = model.groupBy(col("g1"))
       .agg(expr("cast(sum(c2) as bigint)").as("c1"))
@@ -654,18 +652,16 @@ object TextAnalysis {
     */
   def q94TextRepetition(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-      .withColumn("__toks", split(col("text"), " "))
+      .withColumn("__toks", words(col("text")))
     val trigram = docs.select(col("doc_id"),
-      expr("""CASE WHEN size(__toks) >= 3
-              THEN transform(sequence(1, size(__toks) - 2), i -> concat_ws(' ', slice(__toks, i, 3)))
-              ELSE array() END""").as("tg"))
+      wordGrams(col("__toks"), 3).as("tg"))
       .select(col("doc_id"), size(col("tg")).as("n3"),
         size(array_distinct(col("tg"))).as("d3"))
-    val words = docs.select(col("doc_id"), explode(col("__toks")).as("word"))
+    val wordRows = docs.select(col("doc_id"), explode(col("__toks")).as("word"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(max(col("c")).as("max_wc"), sum(col("c")).as("n_words"))
-    trigram.join(words, "doc_id")
+    trigram.join(wordRows, "doc_id")
       .select(col("doc_id"),
         round(when(col("n3") === 0, lit(0.0))
           .otherwise((col("n3") - col("d3")).cast("double") / col("n3").cast("double")), 4)
@@ -706,18 +702,13 @@ object TextAnalysis {
   def q95Decontamination(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
     def grams(df: DataFrame): DataFrame = df
-      .withColumn("__toks", split(col("text"), " "))
+      .withColumn("__toks", words(col("text")))
       .select(col("doc_id"),
-        explode(expr(
-          // r17: gram keys are xxhash64 longs (internal; membership only —
-          // the oracle replays string grams, and only the doc-level counts
-          // are compared)
-          """CASE WHEN size(__toks) >= 5
-             THEN transform(sequence(1, size(__toks) - 4),
-                            i -> xxhash64(concat_ws(' ', slice(__toks, i, 5))))
-             ELSE array() END""")).as("gram"))
+        // r17: gram keys are internal (membership only — the oracle
+        // replays string grams, and only the doc-level counts are compared)
+        explode(wordGrams(col("__toks"), 5, internalKey)).as("gram"))
     val snippet = docs.filter(col("doc_id") === 0)
-      .select(concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("__snip"))
+      .select(prefixWords(col("text"), 5).as("__snip"))
     val incoming = docs.filter(col("doc_id") >= 10)
       .crossJoin(broadcast(snippet))
       .select(col("doc_id"),
@@ -760,7 +751,7 @@ object TextAnalysis {
     * corpus — the reason this is a one-scan operator.
     */
   def vocabTopK(docs: DataFrame, k: Int): DataFrame =
-    docs.select(explode(split(col("text"), " ")).as("word"))
+    docs.select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("word")).limit(k)
 
@@ -789,7 +780,7 @@ object TextAnalysis {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n").desc, col("word").asc)
     val vocab = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("word"))
+      .select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
     val ranked = vocab
       .withColumn("rk", row_number().over(w))
@@ -848,7 +839,7 @@ object TextAnalysis {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n").desc, col("word").asc)
     val ranked = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("word"))
+      .select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .withColumn("rk", row_number().over(w))
       .select(
@@ -908,7 +899,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, d)
     val total = docs.agg(count(lit(1)).as("n_docs"))
     docs.select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("word"))
+        explode(array_distinct(words(col("text")))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(total))
       .filter(col("df") * lit(100L) >= col("n_docs") * lit(60L))
@@ -1142,7 +1133,7 @@ object TextAnalysis {
   def q152ParagraphDedup(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d).filter(col("doc_id") < 100)
       .select(col("doc_id"), concat(lit(Q152Boiler + " "), col("text")).as("text"))
-    val paras = docs.withColumn("__tokens", split(col("text"), " "))
+    val paras = docs.withColumn("__tokens", words(col("text")))
       .withColumn("para_start",
         explode(expr(s"sequence(0, greatest(size(__tokens) - 1, 0), $Q152ParaTokens)")))
       .withColumn("para_id", (col("para_start") / Q152ParaTokens).cast("int"))
@@ -1197,10 +1188,10 @@ object TextAnalysis {
     * deterministic and size-balanced.
     */
   def q163TermDrift(spark: SparkSession, d: String): DataFrame = {
-    val words = Tables.documents(spark, d)
+    val wordRows = Tables.documents(spark, d)
       .select((col("doc_id") % 2 === 0).as("half_a"),
-        explode(split(col("text"), " ")).as("word"))
-    val counts = words.groupBy(col("word"))
+        explode(words(col("text"))).as("word"))
+    val counts = wordRows.groupBy(col("word"))
       .agg(expr("cast(sum(CASE WHEN half_a THEN 1 ELSE 0 END) as bigint)").as("ca"),
         expr("cast(sum(CASE WHEN half_a THEN 0 ELSE 1 END) as bigint)").as("cb"))
     val tot = counts.agg(
@@ -1246,12 +1237,8 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val nd = Tables.documents(spark, d).agg((max(col("doc_id")) + 1).as("nd"))
     val firstSeen = Tables.documents(spark, d)
-      .withColumn("__toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(__toks) >= 2
-           THEN transform(sequence(1, size(__toks) - 1),
-                          i -> concat(__toks[i - 1], ' ', __toks[i]))
-           ELSE array() END""")).as("bigram"))
+      .withColumn("__toks", words(col("text")))
+      .select(col("doc_id"), explode(wordGrams(col("__toks"), 2)).as("bigram"))
       .groupBy(col("bigram")).agg(min(col("doc_id")).as("first_doc"))
     val curve = firstSeen.crossJoin(broadcast(nd))
       .withColumn("decile", expr("CAST(first_doc * 10 div nd AS BIGINT)"))
@@ -1299,7 +1286,7 @@ object TextAnalysis {
   def q167PmiCollocations(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(spark, d)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w1")))
+      .select(col("doc_id"), posexplode(words(col("text"))).as(Seq("pos", "w1")))
     val obs = toks
       .withColumn("w2", lead(col("w1"), 1).over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
@@ -1348,12 +1335,12 @@ object TextAnalysis {
     * division with identical text in both engines.
     */
   def q173OovRate(spark: SparkSession, d: String): DataFrame = {
-    val words = Tables.documents(spark, d)
-      .select(col("source"), explode(split(col("text"), " ")).as("word"))
-    val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+    val wordRows = Tables.documents(spark, d)
+      .select(col("source"), explode(words(col("text"))).as("word"))
+    val vocab = wordRows.groupBy(col("word")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("word")).limit(16)
       .select(col("word"), lit(1).as("in_vocab"))
-    words.join(broadcast(vocab), Seq("word"), "left")
+    wordRows.join(broadcast(vocab), Seq("word"), "left")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("tokens"),
         expr("cast(sum(CASE WHEN in_vocab IS NULL THEN 1 ELSE 0 END) as bigint)")
@@ -1392,15 +1379,11 @@ object TextAnalysis {
   def q183NgramNovelty(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = Tables.documents(spark, d)
-      .withColumn("__toks", split(col("text"), " "))
+      .withColumn("__toks", words(col("text")))
       .select(col("source"), col("doc_id"),
-        explode(expr(
-          // r17: xxhash64 long keys generated in-row — no gram-string
-          // explode, no md5 (internal, counts-only readout; q95 note)
-          """CASE WHEN size(__toks) >= 5
-             THEN transform(sequence(1, size(__toks) - 4),
-                            i -> xxhash64(concat_ws(' ', slice(__toks, i, 5))))
-             ELSE array() END""")).as("g"))
+        // r17: internal keys generated in-row — no gram-string explode,
+        // no md5 (counts-only readout; q95 note)
+        explode(wordGrams(col("__toks"), 5, internalKey)).as("g"))
       .distinct()
     pairs.withColumn("df", count(lit(1)).over(Window.partitionBy(col("g"))))
       .groupBy(col("source"))
@@ -1503,7 +1486,7 @@ object TextAnalysis {
     def topPair(v: DataFrame): DataFrame = bpeTopPair(v)
     def mergeStep(v: DataFrame, top: DataFrame): DataFrame = bpeMergeStep(v, top)
     var v = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("word"))
+      .select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .select(expr("concat_ws(' ', split(word, ''))").as("seq"), col("n"))
       .localCheckpoint() // vocab-sized
@@ -1572,20 +1555,15 @@ object TextAnalysis {
     * bigram, so every downstream shuffle carries 8-byte keys, never gram
     * text (the q183 rule). Shared by the LM build and every scoring pass.
     */
-  private def md5l(e: String): String =
-    s"CAST(conv(substring(md5($e), 1, 15), 16, 10) AS BIGINT)"
-
   def hashedBigrams(spark: SparkSession, d: String): DataFrame = {
     val tok = Tables.documents(spark, d)
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("lang"), words(col("text")).as("ws"))
     tok.filter(size(col("ws")) >= 2)
       .select(col("doc_id"), col("lang"),
-        explode(expr(
-          "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), chr(1), element_at(ws, i + 1)))"))
-          .as("bg"))
+        explode(bigrams(col("ws"))).as("bg"))
       .select(col("doc_id"), col("lang"),
-        expr(md5l("split(bg, chr(1))[0]")).as("g1"),
-        expr(md5l("bg")).as("g2"))
+        certifiedKey(bigramWord(col("bg"), 0)).as("g1"),
+        certifiedKey(col("bg")).as("g2"))
   }
 
   /** [[hashedBigrams]] for an arbitrary (doc_id, text) frame — the same
@@ -1593,15 +1571,13 @@ object TextAnalysis {
     * scan and the `lang` column. Used by incoming-batch paths (q250).
     */
   def hashedBigramsOf(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), split(col("text"), " ").as("ws"))
+    df.select(col("doc_id"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"),
-        explode(expr(
-          "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), chr(1), element_at(ws, i + 1)))"))
-          .as("bg"))
+        explode(bigrams(col("ws"))).as("bg"))
       .select(col("doc_id"),
-        expr(md5l("split(bg, chr(1))[0]")).as("g1"),
-        expr(md5l("bg")).as("g2"))
+        certifiedKey(bigramWord(col("bg"), 0)).as("g1"),
+        certifiedKey(col("bg")).as("g2"))
 
   /** The bigram-LM model rows the artifact stores: one row per distinct
     * bigram hash with its left-context hash, raw count, and BOTH add-1
@@ -1900,7 +1876,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val tokRaw = Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"),
-        explode(split(col("text"), " ")).as("t"))
+        explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
     // hash AFTER aggregation, never per token occurrence: the count table
     // collapses to (lang, token) map-side before any md5 runs (vocab-sized
@@ -1910,7 +1886,7 @@ object TextAnalysis {
     // that builds them runs ONCE per consumer job; same for the
     // languages-sized prior table.
     val cnt = tokRaw.groupBy(col("lang"), col("t")).agg(count(lit(1)).as("c"))
-      .select(col("lang"), expr(md5l("t")).as("g"), col("c"))
+      .select(col("lang"), certifiedKey(col("t")).as("g"), col("c"))
       .localCheckpoint() // vocab-sized (lang x gram counts)
     val tot = cnt.groupBy(col("lang")).agg(expr("cast(sum(c) as bigint)").as("tl"))
     val voc = cnt.select(col("g")).distinct().agg(count(lit(1)).as("v"))
@@ -1941,7 +1917,7 @@ object TextAnalysis {
     // exchange (ReuseExchange — the tokenize runs once for both)
     val docg = tokRaw.groupBy(col("doc_id"), col("lang"), col("t"))
       .agg(count(lit(1)).as("tf"))
-      .select(col("doc_id"), col("lang"), expr(md5l("t")).as("g"), col("tf"))
+      .select(col("doc_id"), col("lang"), certifiedKey(col("t")).as("g"), col("tf"))
     val doct = docg.groupBy(col("doc_id"), col("lang"))
       .agg(expr("cast(sum(tf) as bigint)").as("tt"))
     val matched = docg.join(modelS, "g")
@@ -2286,14 +2262,14 @@ object TextAnalysis {
            WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
            WHEN s_fr >= s_zh THEN 'fr'
            ELSE 'zh' END"""
-    def pred(scoreOf: String => String): DataFrame =
+    def pred(scoreOf: String => Column): DataFrame =
       Tables.documents(spark, d)
-        .withColumn("s_en", expr(scoreOf("en"))).withColumn("s_de", expr(scoreOf("de")))
-        .withColumn("s_es", expr(scoreOf("es"))).withColumn("s_fr", expr(scoreOf("fr")))
-        .withColumn("s_zh", expr(scoreOf("zh")))
+        .withColumn("s_en", scoreOf("en")).withColumn("s_de", scoreOf("de"))
+        .withColumn("s_es", scoreOf("es")).withColumn("s_fr", scoreOf("fr"))
+        .withColumn("s_zh", scoreOf("zh"))
         .select(col("doc_id"), expr(argmax).as("p"))
-    val j = pred(l => scoreExpr(Lexicons(l))).select(col("doc_id"), col("p").as("pa"))
-      .join(pred(l => ngramScore(NgramProfiles(l)))
+    val j = pred(lexiconCount).select(col("doc_id"), col("p").as("pa"))
+      .join(pred(l => expr(ngramScore(NgramProfiles(l))))
         .select(col("doc_id"), col("p").as("pb")), "doc_id")
       .join(naiveBayesPredictions(spark, d)
         .select(col("doc_id"), col("lang_pred").as("pc")), "doc_id")
@@ -2443,7 +2419,7 @@ object TextAnalysis {
     */
   def bm25Scores(spark: SparkSession, d: String, terms: Seq[String]): DataFrame = {
     val docs = Tables.documents(spark, d)
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), words(col("text")).as("w"))
       .withColumn("dl", size(col("w")).cast("long"))
     val stats = docs.agg(count(lit(1)).as("n_docs"),
       expr("cast(sum(dl) as bigint)").as("total_tokens"))
@@ -2849,20 +2825,16 @@ object TextAnalysis {
   def q301ContaminationMatrix(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
     def grams(df: DataFrame, idCols: Seq[String]): DataFrame = df
-      .withColumn("__toks", split(col("text"), " "))
-      .select(idCols.map(col) :+ explode(expr(
-        // r17: xxhash64 long keys — internal, counts-only readout (q95 note)
-        """CASE WHEN size(__toks) >= 5
-           THEN transform(sequence(1, size(__toks) - 4),
-                          i -> xxhash64(concat_ws(' ', slice(__toks, i, 5))))
-           ELSE array() END""")).as("gram"): _*)
+      .withColumn("__toks", words(col("text")))
+      // r17: internal keys — counts-only readout (q95 note)
+      .select(idCols.map(col) :+ explode(wordGrams(col("__toks"), 5, internalKey)).as("gram"): _*)
     val evalGrams = grams(
       docs.filter(col("doc_id") < 20)
         .withColumn("benchmark", (col("doc_id") % 4).cast("long")),
       Seq("benchmark")).distinct()
     val snippets = docs.filter(col("doc_id") < 4)
       .select((col("doc_id") % 4).cast("long").as("bench"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("snip"))
+        prefixWords(col("text"), 5).as("snip"))
     val incoming = docs.filter(col("doc_id") >= 20)
       .withColumn("bench", (col("doc_id") % 37).cast("long"))
       .join(broadcast(snippets), Seq("bench"), "left")
@@ -2932,10 +2904,10 @@ object TextAnalysis {
         col("doc_id"),
         expr("CASE WHEN lang = 'en' THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END").as("y"),
         expr("CAST(1 AS BIGINT)").as("x0"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("x1"),
+        size(words(col("text"))).cast("bigint").as("x1"),
         col("n_chars").cast("long").as("x2"),
-        expr("cast(size(filter(split(text, ' '), w -> w = 'the')) as bigint)").as("x3"),
-        expr("cast(size(filter(split(text, ' '), w -> length(w) > 5)) as bigint)").as("x4"))
+        size(filter(words(col("text")), _ === "the")).cast("bigint").as("x3"),
+        size(filter(words(col("text")), length(_) > 5)).cast("bigint").as("x4"))
       .localCheckpoint() // doc-count-sized narrow features (4 longs/row)
 
   /** Round-1 weight row (a0…a4 + n1) over the feature frame. */
@@ -3043,7 +3015,7 @@ object TextAnalysis {
     // narrow (doc_id, token-count) frame feeds the threshold search and
     // both prefix aggregates — pinned job-scope (the q298 rule)
     val ids = docs.select(col("doc_id"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("nt"))
+        size(words(col("text"))).cast("bigint").as("nt"))
       .localCheckpoint() // doc-count-sized narrow (2 longs/row; note above)
     val targets = (1 to 4).map(k => expr(s"(__n * $k) div 4"))
     val bounds = BucketRank.select(
@@ -3054,14 +3026,14 @@ object TextAnalysis {
       .withColumn("ck", row_number().over(Window.orderBy(col("__grank"))).cast("long")) // |targets|-sized boundary frame
       .select(col("ck"), col("thr"))
     val firstDoc = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .select(col("doc_id"), explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
       // r17: type keys hash with xxhash64, not md5-hex→conv — the key is
       // internal (only grouped on; never ordered by, never output), so the
       // cheaper codegen'd hash keeps the same distinct-type counts w.h.p.
       // (the engine's standing 64-bit content-key convention; the oracle
       // replays md5 and compares the count aggregates only)
-      .select(col("doc_id"), xxhash64(col("t")).as("g"))
+      .select(col("doc_id"), internalKey(col("t")).as("g"))
       .groupBy(col("g")).agg(min(col("doc_id")).as("fd"))
     val vocab = firstDoc.crossJoin(broadcast(bounds))
       .filter(col("fd") <= col("thr"))
@@ -3123,12 +3095,12 @@ object TextAnalysis {
     */
   def q309JsdMatrix(spark: SparkSession, d: String): DataFrame = {
     val v = Tables.documents(spark, d)
-      .select(col("lang"), explode(split(col("text"), " ")).as("t"))
+      .select(col("lang"), explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
       // r17: xxhash64 type keys (internal — only joined/grouped on across
       // the language legs, never ordered by or output; the JSD integers
       // depend on counts alone, same w.h.p. under any injective-w.h.p. key)
-      .select(col("lang"), xxhash64(col("t")).as("g"))
+      .select(col("lang"), internalKey(col("t")).as("g"))
       .groupBy(col("lang"), col("g")).agg(count(lit(1)).as("c"))
       .localCheckpoint() // vocab-sized (lang x gram counts)
     val tot = v.groupBy(col("lang")).agg(expr("cast(sum(c) as bigint)").as("n"))
@@ -3218,14 +3190,11 @@ object TextAnalysis {
     */
   def q311SourceGramOverlap(spark: SparkSession, d: String): DataFrame = {
     val grams = Tables.documents(spark, d)
-      .select(col("source"), split(col("text"), " ").as("w"))
+      .select(col("source"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("source"), explode(expr(
-        // r17: xxhash64 long keys (internal; q95 note) — the distinct +
-        // self-join exchanges move 8-byte longs, not 16-char hex
-        """transform(sequence(0, size(w) - 3),
-            i -> xxhash64(concat_ws(' ', slice(w, i + 1, 3))))"""))
-        .as("gk"))
+      // r17: internal keys (q95 note) — the distinct + self-join exchanges
+      // move 8-byte longs, not 16-char hex
+      .select(col("source"), explode(wordGrams(col("w"), 3, internalKey)).as("gk"))
       .distinct()
       // r17: the distinct (source, gk) frame is read by THREE consumers
       // (sizes + both self-join sides) and the r16 plan recomputed the
@@ -3281,7 +3250,7 @@ object TextAnalysis {
     */
   def q318NegativeSampling(spark: SparkSession, d: String): DataFrame = {
     val v = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("t"))
+      .select(explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
       .groupBy(col("t")).agg(count(lit(1)).as("c"))
       .withColumn("w_micro", expr(
@@ -3329,9 +3298,9 @@ object TextAnalysis {
     */
   def q319VocabTruncation(spark: SparkSession, d: String): DataFrame = {
     val tok = Tables.documents(spark, d)
-      .select(explode(split(col("text"), " ")).as("t"))
+      .select(explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
-      .select(expr(md5l("t")).as("g"), length(col("t")).cast("long").as("len"))
+      .select(certifiedKey(col("t")).as("g"), length(col("t")).cast("long").as("len"))
     // r17: `len` is a function of the TYPE key g (every occurrence of a
     // word has the same length), so carrying it onto the vocab pin makes
     // every per-V readout an aggregate over the pin — the second corpus
@@ -3854,11 +3823,9 @@ object TextAnalysis {
 
   def q364KneserNey(spark: SparkSession, d: String): DataFrame = {
     val big = Tables.documents(spark, d)
-      .select(split(col("text"), " ").as("ws"))
+      .select(words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), chr(1), element_at(ws, i + 1)))"))
-        .as("bg"))
+      .select(explode(bigrams(col("ws"))).as("bg"))
     // r17: aggregate by the bigram STRING first — partial (map-side)
     // aggregation shrinks the shuffle to distinct types, and every hash
     // runs once per TYPE instead of three md5s per OCCURRENCE. The
@@ -3868,9 +3835,9 @@ object TextAnalysis {
     // the oracle replays md5-keyed groups and the compared aggregates
     // agree w.h.p.
     val c = big.groupBy(col("bg")).agg(count(lit(1)).as("cvw"))
-      .select(expr("xxhash64(split(bg, chr(1))[0])").as("gv"),
-        expr("xxhash64(split(bg, chr(1))[1])").as("gw"),
-        expr(md5l("bg")).as("g2"), col("cvw"))
+      .select(internalKey(bigramWord(col("bg"), 0)).as("gv"),
+        internalKey(bigramWord(col("bg"), 1)).as("gw"),
+        certifiedKey(col("bg")).as("g2"), col("cvw"))
       // four consumers (cv, contW, nTypes, top-10) each re-ran the corpus
       // tokenize+count pass; pin the type table once
       .localCheckpoint() // bigram-type-sized (vocab²-bounded counts)
@@ -3939,7 +3906,7 @@ object TextAnalysis {
     */
   def q367PhraseSearch(spark: SparkSession, d: String): DataFrame = {
     val tok = Tables.documents(spark, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), words(col("text")).as("ws"))
     val pairs = tok.filter(size(col("ws")) >= 2)
       .select(col("doc_id"), explode(expr(
         """transform(sequence(1, size(ws) - 1),
@@ -3957,11 +3924,11 @@ object TextAnalysis {
         countDistinct(col("doc_id")).as("df_phrase"))
       .orderBy(col("n_occur").desc, col("w1").asc, col("w2").asc).limit(5)
       .localCheckpoint() // K-sized (top-5 phrase rows)
-    val words = tok.select(col("doc_id"), explode(col("ws")).as("w")).distinct()
-    val a = words.join(broadcast(top5.select(col("w1")).distinct()),
-      words("w") === col("w1")).select(col("doc_id"), col("w1"))
-    val b = words.join(broadcast(top5.select(col("w2")).distinct()),
-      words("w") === col("w2")).select(col("doc_id").as("doc_b"), col("w2"))
+    val wordRows = tok.select(col("doc_id"), explode(col("ws")).as("w")).distinct()
+    val a = wordRows.join(broadcast(top5.select(col("w1")).distinct()),
+      wordRows("w") === col("w1")).select(col("doc_id"), col("w1"))
+    val b = wordRows.join(broadcast(top5.select(col("w2")).distinct()),
+      wordRows("w") === col("w2")).select(col("doc_id").as("doc_b"), col("w2"))
     val dfBag = a.join(b, col("doc_id") === col("doc_b"))
       .join(broadcast(top5.select(col("w1"), col("w2"))), Seq("w1", "w2"))
       .groupBy(col("w1"), col("w2"))
@@ -4093,15 +4060,15 @@ object TextAnalysis {
     Artifacts.buildOrGet(spark, "inv_index", d, Some(("th", 8)))(
       buildInvIndex(spark, d))
 
-  /** The postings build over an arbitrary (doc_id, text) frame — shared
-    * by the driven q375 build and the SkewBenchIndex rehearsal (which
-    * feeds it a planted Zipf-head stop word).
+  /** The postings build over an arbitrary (doc_id, text) frame, used by
+    * the driven q375 build. SCALE.md records its rehearsal against a
+    * planted Zipf-head stop word.
     */
   private[graft] def invIndexOf(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .select(col("doc_id"), explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
-      .select(col("doc_id"), expr(md5l("t")).as("th"))
+      .select(col("doc_id"), certifiedKey(col("t")).as("th"))
       .groupBy(col("th"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
 
@@ -4194,7 +4161,7 @@ object TextAnalysis {
     * LEB128 cost model) quantifies the win per list. Audited on the 20
     * highest-df terms — deliberately the LONGEST lists, where encoding
     * matters and where the densest gaps give the best ratios (the
-    * hot-term direction SkewBenchIndex rehearses). Cost model exact:
+    * hot-term direction of the SCALE.md index rehearsal). Cost model exact:
     * bits(v) = length of v's binary string (no log2 doubles), first
     * posting charged 64 bits (10 varint bytes). ZERO text scans: everything rides the stored
     * th-bucketed postings; the per-term lag window partitions on th.
@@ -4390,9 +4357,9 @@ object TextAnalysis {
           expr("concat('ivq', id, 'a ivq', id, 'b ivq', id, 'c ivq', id, 'a ivq', id, 'b')")
             .as("text")))
     val bp = batch
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .select(col("doc_id"), explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
-      .select(col("doc_id"), expr(md5l("t")).as("th"))
+      .select(col("doc_id"), certifiedKey(col("t")).as("th"))
       .groupBy(col("th"), col("doc_id")).agg(count(lit(1)).as("tf"))
       .localCheckpoint() // batch-sized postings; read by merge + 2 delta stats
     val merged = stored.select(col("th"), col("doc_id"), col("tf"))
@@ -4467,7 +4434,7 @@ object TextAnalysis {
   def q385RakeKeywords(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tok = Tables.documents(spark, d)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")))
+      .select(col("doc_id"), posexplode(words(col("text"))))
       .toDF("doc_id", "pos", "t")
       .filter(col("t") =!= "")
     // r17: pinned — both runTok consumers (term weights, phrase assembly)
@@ -4538,7 +4505,7 @@ object TextAnalysis {
     */
   def q394MissingMass(spark: SparkSession, d: String): DataFrame =
     Tables.documents(spark, d)
-      .select(col("source"), explode(split(col("text"), " ")).as("t"))
+      .select(col("source"), explode(words(col("text"))).as("t"))
       .filter(col("t") =!= "")
       .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c"))
       .groupBy(col("source"))

@@ -17,9 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
   * the capture covers the whole streaming catalog with zero plumbing in
   * the query functions.
   *
-  * Single-writer contract: the local harnesses (Verify / Bench / tests /
-  * StreamStateBench) drive queries sequentially, so a plain synchronized
-  * log is enough. The log is bounded by `clear()` between rehearsal arms.
+  * Single-writer contract: the local harnesses (Verify / Bench / tests)
+  * drive queries sequentially, so a plain synchronized log is enough.
+  * The log is bounded by `clear()` between runs.
   */
 object StateMetrics {
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.functions.TextKeys._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
@@ -888,16 +890,12 @@ object StreamingOps {
   def q290StreamLmGate(spark: SparkSession, d: String): DataFrame = {
     val lp = graft.operators.TextAnalysis.bigramLmTable(spark, d)
       .select(col("g2"), col("lp_micro"))
-    def md5l(e: String): String =
-      s"CAST(conv(substring(md5($e), 1, 15), 16, 10) AS BIGINT)"
     val big = graft.sources.Tables.documentsStream(spark, d)
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("lang"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), col("lang"),
-        explode(expr(
-          "transform(sequence(1, size(ws) - 1), i -> concat(element_at(ws, i), chr(1), element_at(ws, i + 1)))"))
-          .as("bg"))
-      .select(col("doc_id"), col("lang"), expr(md5l("bg")).as("g2"))
+        explode(bigrams(col("ws"))).as("bg"))
+      .select(col("doc_id"), col("lang"), certifiedKey(col("bg")).as("g2"))
     val scored = big.join(lp, "g2")
       .groupBy(col("doc_id"), col("lang"))
       .agg(count(lit(1)).as("n_big"),
@@ -980,7 +978,7 @@ object StreamingOps {
     import spark.implicits._
     val docs = graft.sources.Tables.documentsStream(spark, d)
       .select(col("doc_id"), col("source"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("n_tokens"))
+        size(words(col("text"))).cast("bigint").as("n_tokens"))
       .as[QuotaDoc]
     val summaries = docs.groupByKey(_.source)
       .mapGroupsWithState[QuotaSummary, QuotaSummary](GroupStateTimeout.NoTimeout()) {
@@ -1052,7 +1050,7 @@ object StreamingOps {
     val L = graft.operators.Sampling.Q342Budget
     val docs = graft.sources.Tables.documentsStream(spark, d)
       .select(col("doc_id"), col("source"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("n_tok"))
+        size(words(col("text"))).cast("bigint").as("n_tok"))
       .as[PackDoc]
     val summaries = docs.groupByKey(_.source)
       .mapGroupsWithState[PackState, PackState](GroupStateTimeout.NoTimeout()) {
@@ -1781,8 +1779,8 @@ object StreamingOps {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // the flag decision joins the per-hash df SUMMARY, not raw index
     // rows — immune to a universal-boilerplate hot fingerprint
-    // (SkewBenchWinnow: raw join grows linearly with corpus, this stays
-    // flat)
+    // (the SCALE.md winnow rehearsal: raw join grows linearly with
+    // corpus, this stays flat)
     val idx = graft.operators.Dedup.winnowIndexTable(spark, d)
       .groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val base = graft.sources.Tables.documents(spark, d)
@@ -1902,8 +1900,8 @@ object StreamingOps {
           val bproj = blf
             .select(col("bid"), col("dim"), col("xq"),
               explode(expr("sequence(0, 7)")).as("i"))
-            .withColumn("sgn", expr(
-              """1 - 2 * (CAST(conv(substring(md5(concat('lsh#', CAST(i AS STRING), '#', CAST(dim AS STRING))), 1, 15), 16, 10) AS BIGINT) % 2)"""))
+            .withColumn("sgn", lit(1) - lit(2) *
+              (certifiedKey(concat(lit("lsh#"), col("i").cast("string"), lit("#"), col("dim").cast("string"))) % 2))
             .groupBy(col("bid"), col("i"))
             .agg(expr("cast(sum(sgn * xq) as bigint)").as("p"))
           val bbk = bproj.groupBy(col("bid"))
@@ -2119,7 +2117,7 @@ object StreamingOps {
         .foreachBatch { (b: DataFrame, _: Long) =>
           val pos = b
             .select(col("doc_id"),
-              expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)").as("key"))
+              certifiedKey(col("text")).as("key"))
             .crossJoin(broadcast(geom))
             .crossJoin(broadcast(seeds))
             .withColumn("yy", expr(s"((key % $Q358P) * ha + hb) % $Q358P"))

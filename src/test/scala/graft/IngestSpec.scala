@@ -21,7 +21,7 @@ class IngestSpec extends SparkSuite {
   test("csv ingest: whole-file inference, sanitize-derived table name") {
     val path = writeCsv("My Data File.csv", Seq(
       "id,name,score", "1,alice,9.5", "2,bob,8.25", "3,eve,7.0"))
-    val res = Ingest.ingestCsv(spark, path, "testsrc")
+    val res = Ingest.ingestFile(spark, path, "testsrc")
     assert(res.table == "testsrc.My_Data_File")
     assert(res.rows == 3)
     val df = spark.table("testsrc.My_Data_File")
@@ -33,7 +33,7 @@ class IngestSpec extends SparkSuite {
   test("csv ingest with encryption: sensitive column becomes tokens, decryptable") {
     val key = graft.crypto.Fernet.generateKey()
     val path = writeCsv("people.csv", Seq("name,city", "John,Oslo", "Jane,Lima"))
-    val res = Ingest.ingestCsv(spark, path, "testsrc2",
+    val res = Ingest.ingestFile(spark, path, "testsrc2",
       IngestOptions(anonymize = true, sensitiveColumns = Seq("name")),
       encryptionKey = Some(key))
     val df = spark.table(res.table)
@@ -50,8 +50,8 @@ class IngestSpec extends SparkSuite {
   test("append mode accumulates (overwrite-then-append, not per-chunk replace)") {
     val p1 = writeCsv("t1.csv", Seq("a,b", "1,x"))
     val p2 = writeCsv("t1.csv", Seq("a,b", "2,y"))
-    Ingest.ingestCsv(spark, p1, "testsrc3", IngestOptions(tableName = Some("acc")))
-    Ingest.ingestCsv(spark, p2, "testsrc3", IngestOptions(tableName = Some("acc")),
+    Ingest.ingestFile(spark, p1, "testsrc3", IngestOptions(tableName = Some("acc")))
+    Ingest.ingestFile(spark, p2, "testsrc3", IngestOptions(tableName = Some("acc")),
       mode = org.apache.spark.sql.SaveMode.Append)
     assert(spark.table("testsrc3.acc").count() == 2)
     spark.sql("DROP DATABASE testsrc3 CASCADE")

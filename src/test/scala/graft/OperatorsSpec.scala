@@ -311,6 +311,21 @@ class OperatorsSpec extends SparkSuite {
     spark.sql(s"DROP DATABASE $db CASCADE")
   }
 
+  test("warehouse UPDATE with several assignments evaluates each against the original row") {
+    val db = "graft_test_update_multi"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    graft.etl.Warehouse.runStatements(spark, Seq(
+      s"CREATE DATABASE $db",
+      s"CREATE TABLE $db.t (id INT, status STRING, amount INT, a INT, b INT) USING parquet",
+      s"INSERT INTO $db.t VALUES (1, 'open', 10, 1, 2), (2, 'paid', 20, 3, 4)",
+      s"UPDATE $db.t SET status = 'closed', amount = 0 WHERE status = 'open'",
+      s"UPDATE $db.t SET a = b, b = a WHERE id = 2"))
+    val rows = spark.table(s"$db.t").orderBy(col("id")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getInt(3), r.getInt(4))).toSeq
+    assert(rows == Seq((1, "closed", 0, 1, 2), (2, "paid", 20, 4, 3)))
+    spark.sql(s"DROP DATABASE $db CASCADE")
+  }
+
   test("warehouse runs ALTER TABLE schema evolution: ADD COLUMNS native, RENAME COLUMN via rewrite") {
     // round 13: the last whitelisted DDL verb with zero coverage
     // (reference pipeline.py:112 admits ALTER). ADD COLUMNS flows

@@ -62,9 +62,6 @@ class Round10Spec extends SparkSuite {
   //    per-value count frames, q407's |users|x|types| span frame,
   //    read by both join sides) / Cdc.scala 1: stratum-, QI-group-, source-,
   //    day-, users- or K-sized aggregate frames read by several branches.
-  //  - SkewBenchWinnow.scala 3 / SkewBenchPacking.scala 1 /
-  //    SkewBenchIndex.scala 1: the skew-rehearsal harnesses' synthetic
-  //    frames (bounded by the rehearsal set, not a query path).
   test("localCheckpoint inventory: every pin is size-audited, none corpus-sized") {
     val root = java.nio.file.Paths.get("src/main/scala")
     val counts = scala.collection.mutable.Map.empty[String, Int]
@@ -159,8 +156,6 @@ class Round10Spec extends SparkSuite {
       "Relational.scala" -> 1, "Linkage.scala" -> 1,
       "Similarity.scala" -> 32, "Sampling.scala" -> 9, "Profiling.scala" -> 14,
       "Curation.scala" -> 8, "EventAnalytics.scala" -> 22, "Cdc.scala" -> 1,
-      "SkewBenchWinnow.scala" -> 3, "SkewBenchPacking.scala" -> 1,
-      "SkewBenchIndex.scala" -> 1,
       "EtlQueries.scala" -> 1) // q413's 4-row class frame (counts + checksum)
     assert(counts.toMap === audited,
       s"localCheckpoint inventory drifted — re-audit the new/removed pins " +
@@ -175,12 +170,7 @@ class Round10Spec extends SparkSuite {
   // frames, not query paths). This closes the one gap the round-11 judge
   // flagged: the Xlsx header collects were comment-block-annotated but
   // invisible to the line-level audit.
-  private val harnessFiles = Set("Bench.scala", "SkewBench.scala",
-    "SkewBenchPacking.scala", "SkewBenchWinnow.scala",
-    "SkewBenchSubstring.scala", "SkewBenchIndex.scala",
-    // round 14: the streaming state-scale rehearsal main — its collect is
-    // the 1-row key-population denominator readout
-    "StreamStateBench.scala")
+  private val harnessFiles = Set("Bench.scala")
 
   test("collect inventory: every driver materialization is size-audited") {
     val root = java.nio.file.Paths.get("src/main/scala")

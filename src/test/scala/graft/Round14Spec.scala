@@ -88,7 +88,7 @@ class Round14Spec extends SparkSuite {
   }
 
   // ------------------------------------------ streaming state laws
-  // The StateMetrics capture (StreamStateBench's instrument) pinned at
+  // The StateMetrics capture pinned at
   // fixture scale: resident state must follow KEY populations exactly —
   // one row per stateful group/key — and stream-stream join state must
   // be watermark-EVICTED, never retained for the stream's length. These
