@@ -26,6 +26,11 @@ object Fetch {
     .connectTimeout(Duration.ofSeconds(30))
     .build()
 
+  /** The name `url` is staged under: its last path segment, or `download`. */
+  private[etl] def fileName(url: String): String =
+    Option(Paths.get(new URI(url).getPath).getFileName).map(_.toString)
+      .filter(_.nonEmpty).getOrElse("download")
+
   /** Download `url` to `destDir/<url-hash>/<last-path-segment>` with
     * fixed-delay retry. Only http/https accepted (reference URL predicate,
     * pipeline.py:27-33). The per-URL subdirectory (16-hex of the URL's
@@ -43,9 +48,7 @@ object Fetch {
       .digest(url.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val urlDir = destDir.resolve(digest.take(8).map(b => f"$b%02x").mkString)
     Files.createDirectories(urlDir)
-    val fileName = Paths.get(new URI(url).getPath).getFileName
-    val dest = urlDir.resolve(
-      if (fileName == null || fileName.toString.isEmpty) "download" else fileName.toString)
+    val dest = urlDir.resolve(fileName(url))
     Utils.retry(retries, delayMs) {
       val req = HttpRequest.newBuilder(URI.create(url))
         .timeout(Duration.ofMinutes(5)) // bound the whole request, not just connect
