@@ -108,16 +108,18 @@ object Ingest extends Logging {
   private def isRemote(input: String): Boolean =
     input.startsWith("http://") || input.startsWith("https://")
 
-  /** `CREATE DATABASE IF NOT EXISTS source` + `saveAsTable(source.table)` —
+  /** `CREATE DATABASE IF NOT EXISTS source`, then the table write —
     * the namespace-qualification step the reference does by rewriting SQL
     * text (/root/reference/pipeline.py:235-243), done through the catalog.
+    * The write is [[Warehouse.write]]: an overwrite of an existing table is
+    * its versioned commit, and no write builds parquet dictionaries.
     */
   def saveToWarehouse(spark: SparkSession, df: DataFrame, source: String,
                       table: String, mode: SaveMode): String = {
     val db = Utils.sanitizeTableName(source + ".x") // sanitize, keep name rules uniform
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     val qualified = s"`$db`.`$table`"
-    df.write.mode(mode).saveAsTable(qualified)
+    Warehouse.write(spark, df, qualified, mode)
     s"$db.$table"
   }
 

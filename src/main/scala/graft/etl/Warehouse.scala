@@ -2,9 +2,15 @@ package graft.etl
 
 import graft.core.Utils
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count_if, expr, lit, not, when}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+
+import scala.util.control.NonFatal
 
 /** The SQL-statement surface. The reference whitelists statement prefixes and
   * ships the text to an external warehouse (/root/reference/pipeline.py:
@@ -13,26 +19,60 @@ import org.apache.spark.sql.functions.{coalesce, col, count_if, expr, lit, not, 
   *
   * DELETE/UPDATE are in the reference's whitelist but plain parquet tables
   * have no row-level ops (same as Dremio pre-Iceberg); they are implemented
-  * as the documented filter-and-rewrite: materialize the surviving/updated
-  * rows and overwrite the table. At 100 TB this rewrite should target a
-  * table format with row-level deletes; the API boundary here keeps that
-  * swap localized.
+  * as the documented filter-and-rewrite, and so are ALTER … RENAME COLUMN
+  * and MERGE. Every table write, theirs and [[Ingest]]'s, goes through
+  * [[write]]:
+  *
+  *  - '''Versioned commit.''' Overwriting an existing table writes its new
+  *    version into a fresh directory beside the current one (`t` → `t-v1`
+  *    → `t-v2` …). The plan still reads the old files, so it needs no
+  *    materialisation barrier. The commit is one catalog update: the table
+  *    definition with the new location (and the new schema, for RENAME).
+  *    Then the relation cache is refreshed and the old directory of a
+  *    managed table is deleted. A statement that fails before the commit
+  *    leaves the catalog, and the rows, on the old version. A crash between
+  *    the commit and the delete leaves the old directory behind as an
+  *    orphan: nothing reads it, and [[dropManagedTable]] or `DROP DATABASE
+  *    … CASCADE` removes it. Appends stay plain appends into the current
+  *    directory. Views, partitioned and bucketed tables are refused: a
+  *    view has no files, and a layout is not carried into the new version.
+  *  - '''No parquet dictionary.''' Every write sets
+  *    `parquet.enable.dictionary=false`. Most warehouse columns are unique
+  *    (ids, emails, amounts, Fernet tokens), so the writer built a
+  *    dictionary per column only to throw it away; in a CPU profile of the
+  *    `etl_load` benchmark those dictionary writers were 26.5% of samples.
+  *    The codec is zstd (`SparkConfigs.ScaleDefaults`), which keeps most of
+  *    the repetition a dictionary would have caught: the benchmark's four
+  *    tables grew 3.3% on disk, its un-anonymised table 17% (from the
+  *    low-cardinality `status`, `customer` and `note` columns).
+  *
+  * At 100 TB the next step is file-granular rewrites: find the files that
+  * hold a matching row (`_metadata.file_path` and the parquet min/max
+  * statistics), rewrite only those, and carry the other files into the new
+  * version unchanged, so a selective DELETE or MERGE costs the touched files,
+  * not the table. A version is then a file list rather than a directory,
+  * which is what a row-level table format (Iceberg/Delta) provides.
   */
 object Warehouse extends Logging {
 
   private val DeleteStmt =
     """(?is)\s*DELETE\s+FROM\s+([\w.`]+)\s+WHERE\s+(.+?)\s*;?\s*""".r
   private val UpdateStmt =
-    """(?is)\s*UPDATE\s+([\w.`]+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*""".r
+    """(?is)\s*UPDATE\s+([\w.`]+)\s+SET\s+(.+?)\s*;?\s*""".r
+  private val Where = """(?i)\s+WHERE\s+""".r
   private val AlterRenameColStmt =
     """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+RENAME\s+COLUMN\s+([\w`]+)\s+TO\s+([\w`]+)\s*;?\s*""".r
+
+  /** Writer options of every warehouse write (see the object's scaladoc). */
+  private val WriteOptions = Map("parquet.enable.dictionary" -> "false")
 
   /** Execute whitelisted statements in order; non-whitelisted statements are
     * dropped (logged), matching `filter_sql_commands` semantics. DELETE and
     * UPDATE — whitelisted by the reference but unsupported on plain parquet
     * tables (as on pre-Iceberg Dremio) — are routed to the
     * filter-and-rewrite implementations below instead of failing in the
-    * parser. Returns the result of each executed statement.
+    * parser. An UPDATE without WHERE updates every row. Returns the result
+    * of each executed statement.
     */
   def runStatements(spark: SparkSession, statements: Seq[String]): Seq[DataFrame] = {
     val kept = Utils.filterSqlStatements(statements)
@@ -42,14 +82,18 @@ object Warehouse extends Logging {
       case DeleteStmt(table, cond) =>
         deleteWhere(spark, table, cond)
         spark.emptyDataFrame
-      case UpdateStmt(table, assignments, cond) =>
-        // simple `col = expr` assignment list; a SET expression containing a
-        // top-level comma (e.g. a function call) needs the updateWhere API
-        val parsed = assignments.split(",").map { a =>
-          val Array(c, e) = a.split("=", 2)
-          c.trim -> e.trim
+      case UpdateStmt(table, body) =>
+        val top = topLevel(body)
+        val (set, cond) = Where.findAllMatchIn(body).find(m => top(m.start)) match {
+          case Some(m) => (body.take(m.start), body.drop(m.end))
+          case None => (body, "true")
+        }
+        val assignments = splitTopLevel(set).map { a =>
+          val eq = a.indexOf('=')
+          require(eq > 0, s"UPDATE $table: not a `column = expression` assignment: '${a.trim}'")
+          a.take(eq).trim.replace("`", "") -> a.drop(eq + 1).trim
         }.toMap
-        updateWhere(spark, table, parsed, cond)
+        updateWhere(spark, table, assignments, cond)
         spark.emptyDataFrame
       case AlterRenameColStmt(table, from, to) =>
         renameColumn(spark, table, from, to)
@@ -58,19 +102,54 @@ object Warehouse extends Logging {
     }
   }
 
+  /** For each character of `s`: whether it lies outside quotes and
+    * parentheses. A backslash escapes the next character inside a quote.
+    */
+  private def topLevel(s: String): Array[Boolean] = {
+    var depth = 0
+    var quote = 0.toChar // the open quote, 0 outside one
+    var escaped = false
+    s.toCharArray.map { c =>
+      val top = quote == 0 && depth == 0
+      if (quote != 0) {
+        if (escaped) escaped = false
+        else if (c == '\\') escaped = true
+        else if (c == quote) quote = 0
+      } else c match {
+        case '\'' | '"' | '`' => quote = c
+        case '(' => depth += 1
+        case ')' => depth -= 1
+        case _ =>
+      }
+      top
+    }
+  }
+
+  /** `s` split at its top-level commas. */
+  private def splitTopLevel(s: String): Seq[String] = {
+    val top = topLevel(s)
+    val cuts = s.indices.filter(i => s(i) == ',' && top(i))
+    (-1 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 1, b) }
+  }
+
   /** DELETE FROM table WHERE cond — rewrite-on-write for parquet tables,
     * with SQL DELETE's three-valued semantics: only rows where the
     * condition is TRUE are removed — NULL-condition rows survive (a bare
     * `filter(not(cond))` would silently drop them while the count missed
-    * them). The removed-count comes from one count_if aggregate, not two
-    * full counts.
+    * them). The removed count is observed during the rewrite, so it costs
+    * no scan of its own, except when the optimizer proves the condition
+    * TRUE for every row: it then drops the scan, and the observation with
+    * it, and the rows are counted up front.
     */
   def deleteWhere(spark: SparkSession, table: String, condition: String): Long = {
     val current = spark.table(table)
     val condTrue = coalesce(expr(condition), lit(false))
-    val removed = current.agg(count_if(condTrue)).first().getLong(0)
-    overwriteSelf(spark, current.filter(not(condTrue)), table)
-    removed
+    val removed = Observation()
+    val kept = current.observe(removed, count_if(condTrue).as("removed")).filter(not(condTrue))
+    val observed = kept.queryExecution.optimizedPlan.exists(_.isInstanceOf[CollectMetrics])
+    val all = if (observed) 0L else current.count()
+    write(spark, kept, table, SaveMode.Overwrite)
+    if (observed) removed.get("removed").asInstanceOf[Long] else all
   }
 
   /** UPDATE table SET col = expr, ... WHERE cond — rewrite-on-write. The
@@ -90,7 +169,7 @@ object Warehouse extends Logging {
     val updated = current.withColumns(assignments.map { case (c, e) =>
       c -> when(expr(condition), expr(e)).otherwise(col(c))
     })
-    overwriteSelf(spark, updated, table)
+    write(spark, updated, table, SaveMode.Overwrite)
   }
 
   /** ALTER TABLE ... RENAME COLUMN — whitelisted by the reference
@@ -116,19 +195,36 @@ object Warehouse extends Logging {
     require(df.columns.contains(f),
       s"ALTER TABLE $table RENAME COLUMN: no such column '$f' " +
         s"(columns: ${df.columns.mkString(", ")})")
-    overwriteSelf(spark, df.withColumnRenamed(f, t), table)
+    write(spark, df.withColumnRenamed(f, t), table, SaveMode.Overwrite)
   }
 
   /** DROP a managed table AND clear any stale on-disk location a previous
     * JVM left in the warehouse dir (the fresh in-memory catalog doesn't
     * know the table, so bare DROP is a no-op and a later saveAsTable/CREATE
-    * refuses with LOCATION_ALREADY_EXISTS).
+    * refuses with LOCATION_ALREADY_EXISTS). The location comes from the
+    * catalog: the default path of the table in its database, and every
+    * `-v<n>` version beside it, where the table (or a previous JVM's copy of
+    * it) may have lived since its last rewrite. An external table's files
+    * are left alone, as DROP leaves them; a database that does not exist
+    * holds no location to clear.
     */
   def dropManagedTable(spark: SparkSession, table: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    val external = catalog.tableExists(ident) &&
+      catalog.getTableMetadata(ident).tableType == CatalogTableType.EXTERNAL
+    val default =
+      if (external || !catalog.databaseExists(ident.database.getOrElse(catalog.getCurrentDatabase))) None
+      else Some(new Path(catalog.defaultTablePath(ident)))
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = java.nio.file.Paths.get(wh, table.toLowerCase(java.util.Locale.ROOT))
-    if (java.nio.file.Files.exists(loc)) graft.core.Scratch.deleteRecursively(loc)
+    default.foreach { path =>
+      val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+      val versions =
+        if (!fs.exists(path.getParent)) Array.empty[Path]
+        else fs.listStatus(path.getParent).map(_.getPath)
+          .filter(_.getName.matches(java.util.regex.Pattern.quote(path.getName) + VersionSuffix))
+      (path +: versions).foreach(fs.delete(_, true))
+    }
   }
 
   /** TRUNCATE for managed tables. */
@@ -157,11 +253,66 @@ object Warehouse extends Logging {
   /** Table-backed variant: merge `source` into managed `table` in place. */
   def mergeIntoTable(spark: SparkSession, table: String, source: DataFrame,
                      keyCols: Seq[String]): Unit =
-    overwriteSelf(spark, mergeUpsert(spark.table(table), source, keyCols), table)
+    write(spark, mergeUpsert(spark.table(table), source, keyCols), table, SaveMode.Overwrite)
 
-  // Overwriting a table from a plan that reads the same table needs a
-  // materialization barrier; localCheckpoint keeps it executor-side (no
-  // driver collect) so the pattern survives at scale.
-  private def overwriteSelf(spark: SparkSession, df: DataFrame, table: String): Unit =
-    df.localCheckpoint(eager = true).write.mode(SaveMode.Overwrite).saveAsTable(table) // rewritten-table-sized barrier (note above)
+  /** The warehouse's one table write. An overwrite of an existing table is a
+    * versioned commit, and `df` may read that table; anything else is a
+    * plain `saveAsTable`. Every write goes without parquet dictionaries.
+    */
+  private[etl] def write(spark: SparkSession, df: DataFrame, table: String, mode: SaveMode): Unit = {
+    val catalog = spark.sessionState.catalog
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    if (mode == SaveMode.Overwrite && catalog.tableExists(ident))
+      commitVersion(spark, df, catalog.getTableMetadata(ident))
+    else df.write.options(WriteOptions).mode(mode).saveAsTable(table)
+  }
+
+  /** Write `df` as the next version of `meta`'s table and switch the catalog
+    * to it (see the object's scaladoc).
+    */
+  private def commitVersion(spark: SparkSession, df: DataFrame, meta: CatalogTable): Unit = {
+    require(meta.tableType != CatalogTableType.VIEW && meta.partitionColumnNames.isEmpty &&
+      meta.bucketSpec.isEmpty,
+      s"${meta.identifier.unquotedString}: rewriting a view, a partitioned or a bucketed table is not supported")
+    val current = new Path(meta.location)
+    val fs = current.getFileSystem(spark.sessionState.newHadoopConf())
+    val next = nextVersion(fs, current)
+    try {
+      df.write.format(meta.provider.getOrElse(spark.sessionState.conf.defaultDataSourceName))
+        .options(meta.storage.properties ++ WriteOptions)
+        .save(next.toString)
+      spark.sessionState.catalog.alterTable(meta.copy(
+        storage = meta.storage.copy(locationUri = Some(next.toUri)),
+        schema = nullable(df.schema).asInstanceOf[StructType],
+        stats = None))
+    } catch {
+      case NonFatal(e) =>
+        fs.delete(next, true)
+        throw e
+    }
+    spark.catalog.refreshTable(meta.identifier.quotedString)
+    if (meta.tableType == CatalogTableType.MANAGED) fs.delete(current, true)
+  }
+
+  private val VersionSuffix = """-v(\d+)"""
+  private val Versioned = s"(.+)$VersionSuffix".r
+
+  /** The first free `<name>-v<n>` beside `current`, counting on from its own. */
+  private def nextVersion(fs: FileSystem, current: Path): Path = {
+    val (base, v) = current.getName match {
+      case Versioned(b, n) => (b, n.toLong)
+      case n => (n, 0L)
+    }
+    Iterator.from(1).map(k => new Path(current.getParent, s"$base-v${v + k}")).find(!fs.exists(_)).get
+  }
+
+  /** `t` with every field and element nullable: the schema a file-source
+    * table reads back, whatever nullability its writer's plan declared.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }

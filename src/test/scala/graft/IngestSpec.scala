@@ -1,12 +1,10 @@
 package graft
 
 import graft.etl.{Ingest, IngestOptions}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** End-to-end ingest slice: CSV on disk → inferred schema → (encrypted) →
   * managed warehouse table, the reference pipeline's whole job
@@ -136,23 +134,9 @@ class IngestSpec extends SparkSuite {
 
   test("csv ingest runs at most 3 Spark jobs: header probe, inference, write") {
     val path = writeCsv("jobs.csv", Seq("id,name", "1,alice", "2,bob"))
-    val sc = spark.sparkContext
-    val group = "ingest-job-count"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one ingestFile call")
-      try Ingest.ingestFile(spark, path, "jobsrc")
-      finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusTestAccess.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() >= 1, "the listener saw none of the ingest's jobs")
-    assert(jobs.get() <= 3, s"${jobs.get()} jobs")
+    val jobs = jobsOf("one ingestFile call")(Ingest.ingestFile(spark, path, "jobsrc"))
+    assert(jobs >= 1, "the listener saw none of the ingest's jobs")
+    assert(jobs <= 3, s"$jobs jobs")
     spark.sql("DROP DATABASE jobsrc CASCADE")
   }
 

@@ -250,23 +250,6 @@ class OperatorsSpec extends SparkSuite {
     }
   }
 
-  test("warehouse DDL surface: create/insert/select/delete rewrite") {
-    val db = "graft_test_db"
-    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    graft.etl.Warehouse.runStatements(spark, Seq(
-      s"CREATE DATABASE $db",
-      s"CREATE TABLE $db.t (id INT, v STRING) USING parquet",
-      s"INSERT INTO $db.t VALUES (1, 'a'), (2, 'b'), (3, 'c')",
-      "GRANT ALL ON x TO y" // dropped by whitelist
-    ))
-    assert(spark.table(s"$db.t").count() == 3)
-    val removed = graft.etl.Warehouse.deleteWhere(spark, s"$db.t", "id = 2")
-    assert(removed == 1 && spark.table(s"$db.t").count() == 2)
-    graft.etl.Warehouse.updateWhere(spark, s"$db.t", Map("v" -> "'z'"), "id = 3")
-    assert(spark.table(s"$db.t").filter(col("v") === "z").count() == 1)
-    spark.sql(s"DROP DATABASE $db CASCADE")
-  }
-
   test("q10 HLL approximation certifies itself within its error bound") {
     val rows = Relational.q10ApproxDistinct(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -35,8 +35,6 @@ class Round10Spec extends SparkSuite {
   // frame, which at 100 TB must be a persisted artifact (pq_lf, rp_lsh,
   // the IVF lists, the band/winnow/gram-df indexes, the LM tables).
   // Audit (sizes verified by reading each site's adjacent comment):
-  //  - Warehouse.scala 1: materialization barrier for overwriting a table
-  //    being read (rewrite DML); frame is the rewritten table — job-scoped.
   //  - Dedup.scala 10: star-contraction edge frames (shrink per round),
   //    band/batch fixtures and admission batches (batch-sized), funnel
   //    stage outputs (batch-sized).
@@ -152,7 +150,7 @@ class Round10Spec extends SparkSuite {
       // r17 third sweep: Similarity +1 — q303's graded dot frame
       // (≤ 2·nQ rows per scored vector; top-10 DCG and the n_rel rollup
       // each re-embedded the ×64 long-form dot join without it).
-      "Warehouse.scala" -> 1, "Dedup.scala" -> 15, "TextAnalysis.scala" -> 30,
+      "Dedup.scala" -> 15, "TextAnalysis.scala" -> 30,
       "Relational.scala" -> 1, "Linkage.scala" -> 1,
       "Similarity.scala" -> 32, "Sampling.scala" -> 9, "Profiling.scala" -> 14,
       "Curation.scala" -> 8, "EventAnalytics.scala" -> 22, "Cdc.scala" -> 1,

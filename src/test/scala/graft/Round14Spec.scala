@@ -11,10 +11,6 @@ import org.apache.spark.sql.DataFrame
   *    against planted moments, and the in-envelope arm is replayed
   *    value-exact against driver-side BigInt math so the guard cannot
   *    silently change the formula.
-  *  - renameColumn validates its inputs: a missing source column fails
-  *    loudly (real ALTER TABLE errors; withColumnRenamed silently no-ops
-  *    and still rewrites the table) and backticked identifiers rename the
-  *    intended column instead of "succeeding" without renaming.
   *  - The empty-stage JDBC bounds probe: MIN/MAX over an empty table is
   *    SQL NULL, which rs.getLong reports as 0 — the probe must detect it
   *    via wasNull and fall back to a trivial single-partition read, not
@@ -65,26 +61,6 @@ class Round14Spec extends SparkSuite {
     // truncating in HUGEINT (the round-13 ADVICE divergence)
     val e = intercept[Exception] { r2Of("1" + "0" * 16, "1", "1" + "0" * 16) }
     assert(e.getMessage.contains("r2_ppm envelope exceeded"))
-  }
-
-  // ------------------------------------------ renameColumn validation
-  test("renameColumn: missing source column fails loudly; backticks rename the real column") {
-    val t = "graft_r14_rename"
-    graft.etl.Warehouse.dropManagedTable(spark, t)
-    spark.range(3).selectExpr("id", "id * 2 AS v")
-      .write.mode("overwrite").saveAsTable(t)
-    val e = intercept[IllegalArgumentException] {
-      graft.etl.Warehouse.runStatements(spark,
-        Seq(s"ALTER TABLE $t RENAME COLUMN nope TO v2"))
-    }
-    assert(e.getMessage.contains("no such column"))
-    assert(spark.table(t).columns.toSeq === Seq("id", "v"), "failed rename must not rewrite")
-    // backticked identifiers used to be captured VERBATIM — withColumnRenamed
-    // then looked for a column literally named `v` and silently no-opd
-    graft.etl.Warehouse.runStatements(spark,
-      Seq(s"ALTER TABLE $t RENAME COLUMN `v` TO `v2`"))
-    assert(spark.table(t).columns.toSeq === Seq("id", "v2"))
-    graft.etl.Warehouse.dropManagedTable(spark, t)
   }
 
   // ------------------------------------------ streaming state laws
