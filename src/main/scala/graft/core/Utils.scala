@@ -33,13 +33,16 @@ object Utils {
       (scheme == "http" || scheme == "https") && authority.nonEmpty
     } catch { case _: Exception => false }
 
-  /** Split a comma-separated URL list, trim entries, drop empties; validation
-    * is all-or-nothing (one bad URL rejects the batch), matching the
-    * reference's stdin handling (/root/reference/pipeline.py:39-46).
+  /** Split a comma-separated list of URLs and local paths, trim entries,
+    * drop empties. Validation is all-or-nothing (one bad entry rejects the
+    * batch), as in the reference's stdin handling: anything
+    * scheme-qualified (`://`) must be a valid http(s) URL, so an `ftp://`
+    * input is rejected rather than handed to the filesystem; a bare local
+    * path passes.
     */
   def parseUrlList(input: String): Either[String, List[String]] = {
     val urls = input.split(",", -1).iterator.map(_.trim).filter(_.nonEmpty).toList
-    urls.filterNot(isValidUrl) match {
+    urls.filter(u => u.contains("://") && !isValidUrl(u)) match {
       case Nil => Right(urls)
       case bad => Left(s"One or more provided URLs are invalid: ${bad.mkString(", ")}")
     }

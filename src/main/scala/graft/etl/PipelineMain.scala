@@ -59,16 +59,11 @@ object PipelineMain {
       if (args.contains("--append")) org.apache.spark.sql.SaveMode.Append
       else org.apache.spark.sql.SaveMode.Overwrite
 
-    // all-or-nothing URL validation, reference parity (pipeline.py:43-46):
-    // anything scheme-qualified must be valid http/https (an ftp:// input
-    // is rejected here, not handed to the filesystem); bare local paths
-    // pass through
-    val inputs = urlArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    inputs.filter(_.contains("://")).foreach { u =>
-      if (!Utils.isValidUrl(u)) {
-        System.err.println(s"One or more provided URLs are invalid: $u")
+    val inputs = Utils.parseUrlList(urlArg) match {
+      case Right(urls) => urls
+      case Left(error) =>
+        System.err.println(error)
         sys.exit(1)
-      }
     }
     // README-parity conversion: GitHub page links → raw content links
     val converted = inputs.map(Utils.githubRawUrl)

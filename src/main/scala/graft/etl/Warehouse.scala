@@ -4,8 +4,10 @@ import graft.core.Utils
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.internal.Logging
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFieldName, UnresolvedRelation, UnresolvedTable}
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
-import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, CollectMetrics, DeleteFromTable, RenameColumn, UpdateTable}
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteNameParts
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count_if, expr, lit, not, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -20,8 +22,10 @@ import scala.util.control.NonFatal
   * DELETE/UPDATE are in the reference's whitelist but plain parquet tables
   * have no row-level ops (same as Dremio pre-Iceberg); they are implemented
   * as the documented filter-and-rewrite, and so are ALTER … RENAME COLUMN
-  * and MERGE. Every table write, theirs and [[Ingest]]'s, goes through
-  * [[write]]:
+  * and MERGE. Catalyst's own parser finds the table, assignments and
+  * condition of each statement, and [[runStatements]] routes it by the
+  * class of the parsed plan; a DELETE without WHERE removes every row.
+  * Every table write, theirs and [[Ingest]]'s, goes through [[write]]:
   *
   *  - '''Versioned commit.''' Overwriting an existing table writes its new
   *    version into a fresh directory beside the current one (`t` → `t-v1`
@@ -55,81 +59,44 @@ import scala.util.control.NonFatal
   */
 object Warehouse extends Logging {
 
-  private val DeleteStmt =
-    """(?is)\s*DELETE\s+FROM\s+([\w.`]+)\s+WHERE\s+(.+?)\s*;?\s*""".r
-  private val UpdateStmt =
-    """(?is)\s*UPDATE\s+([\w.`]+)\s+SET\s+(.+?)\s*;?\s*""".r
-  private val Where = """(?i)\s+WHERE\s+""".r
-  private val AlterRenameColStmt =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+RENAME\s+COLUMN\s+([\w`]+)\s+TO\s+([\w`]+)\s*;?\s*""".r
-
   /** Writer options of every warehouse write (see the object's scaladoc). */
   private val WriteOptions = Map("parquet.enable.dictionary" -> "false")
 
   /** Execute whitelisted statements in order; non-whitelisted statements are
-    * dropped (logged), matching `filter_sql_commands` semantics. DELETE and
-    * UPDATE — whitelisted by the reference but unsupported on plain parquet
-    * tables (as on pre-Iceberg Dremio) — are routed to the
-    * filter-and-rewrite implementations below instead of failing in the
-    * parser. An UPDATE without WHERE updates every row. Returns the result
-    * of each executed statement.
+    * dropped (logged), matching `filter_sql_commands` semantics. Catalyst's
+    * parser finds the parts of each statement. DELETE, UPDATE and ALTER …
+    * RENAME COLUMN on a plain table name — whitelisted by the reference but
+    * unsupported on plain parquet tables (as on pre-Iceberg Dremio) — go to
+    * the filter-and-rewrite implementations below, each expression handed
+    * over as its SQL text; every other statement runs through `spark.sql`.
+    * A DELETE without WHERE removes every row, an UPDATE without WHERE
+    * updates every row. Returns the result of each executed statement.
     */
   def runStatements(spark: SparkSession, statements: Seq[String]): Seq[DataFrame] = {
     val kept = Utils.filterSqlStatements(statements)
     val dropped = statements.diff(kept)
     dropped.foreach(s => logWarning(s"Dropping unsupported statement: ${s.take(80)}"))
-    kept.map {
-      case DeleteStmt(table, cond) =>
-        deleteWhere(spark, table, cond)
-        spark.emptyDataFrame
-      case UpdateStmt(table, body) =>
-        val top = topLevel(body)
-        val (set, cond) = Where.findAllMatchIn(body).find(m => top(m.start)) match {
-          case Some(m) => (body.take(m.start), body.drop(m.end))
-          case None => (body, "true")
-        }
-        val assignments = splitTopLevel(set).map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"UPDATE $table: not a `column = expression` assignment: '${a.trim}'")
-          a.take(eq).trim.replace("`", "") -> a.drop(eq + 1).trim
-        }.toMap
-        updateWhere(spark, table, assignments, cond)
-        spark.emptyDataFrame
-      case AlterRenameColStmt(table, from, to) =>
-        renameColumn(spark, table, from, to)
-        spark.emptyDataFrame
-      case sql => spark.sql(sql)
-    }
-  }
-
-  /** For each character of `s`: whether it lies outside quotes and
-    * parentheses. A backslash escapes the next character inside a quote.
-    */
-  private def topLevel(s: String): Array[Boolean] = {
-    var depth = 0
-    var quote = 0.toChar // the open quote, 0 outside one
-    var escaped = false
-    s.toCharArray.map { c =>
-      val top = quote == 0 && depth == 0
-      if (quote != 0) {
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
+    kept.map { sql =>
+      spark.sessionState.sqlParser.parsePlan(sql) match {
+        case DeleteFromTable(t: UnresolvedRelation, cond) =>
+          deleteWhere(spark, t.tableName, cond.sql)
+          spark.emptyDataFrame
+        case UpdateTable(t: UnresolvedRelation, set, cond) if set.forall(columnOf(_).nonEmpty) =>
+          updateWhere(spark, t.tableName, set.map(a => columnOf(a).get -> a.value.sql).toMap,
+            cond.fold("true")(_.sql))
+          spark.emptyDataFrame
+        case RenameColumn(t: UnresolvedTable, UnresolvedFieldName(Seq(from)), to) =>
+          renameColumn(spark, quoteNameParts(t.multipartIdentifier), from, to)
+          spark.emptyDataFrame
+        case _ => spark.sql(sql)
       }
-      top
     }
   }
 
-  /** `s` split at its top-level commas. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val top = topLevel(s)
-    val cuts = s.indices.filter(i => s(i) == ',' && top(i))
-    (-1 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 1, b) }
+  /** The column an UPDATE assignment sets, when it is a one-part name. */
+  private def columnOf(a: Assignment): Option[String] = a.key match {
+    case UnresolvedAttribute(Seq(c)) => Some(c)
+    case _ => None
   }
 
   /** DELETE FROM table WHERE cond — rewrite-on-write for parquet tables,
@@ -184,18 +151,14 @@ object Warehouse extends Logging {
     *
     * A missing source column fails LOUDLY (real ALTER TABLE errors on an
     * unknown column; `withColumnRenamed` alone silently no-ops and would
-    * still rewrite the whole table). Backticks in the statement's
-    * identifiers are stripped before the lookup — the regex admits them
-    * but `withColumnRenamed` treats a backtick literally, so a backticked
-    * rename would otherwise "succeed" without renaming anything.
+    * still rewrite the whole table).
     */
   def renameColumn(spark: SparkSession, table: String, from: String, to: String): Unit = {
-    val (f, t) = (from.replace("`", ""), to.replace("`", ""))
     val df = spark.table(table)
-    require(df.columns.contains(f),
-      s"ALTER TABLE $table RENAME COLUMN: no such column '$f' " +
+    require(df.columns.contains(from),
+      s"ALTER TABLE $table RENAME COLUMN: no such column '$from' " +
         s"(columns: ${df.columns.mkString(", ")})")
-    write(spark, df.withColumnRenamed(f, t), table, SaveMode.Overwrite)
+    write(spark, df.withColumnRenamed(from, to), table, SaveMode.Overwrite)
   }
 
   /** DROP a managed table AND clear any stale on-disk location a previous
@@ -226,10 +189,6 @@ object Warehouse extends Logging {
       (path +: versions).foreach(fs.delete(_, true))
     }
   }
-
-  /** TRUNCATE for managed tables. */
-  def truncate(spark: SparkSession, table: String): Unit =
-    spark.sql(s"TRUNCATE TABLE $table")
 
   /** MERGE-shaped upsert (whole-row semantics): source rows replace target
     * rows sharing `keyCols`; unmatched source rows are appended. Expressed

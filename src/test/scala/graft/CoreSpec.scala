@@ -61,7 +61,11 @@ class CoreSpec extends AnyFunSuite {
   test("parseUrlList: trim, drop empties, all-or-nothing") {
     assert(Utils.parseUrlList(" https://a.com , https://b.com ,")
       == Right(List("https://a.com", "https://b.com")))
-    assert(Utils.parseUrlList("https://a.com, nope").isLeft)
+    assert(Utils.parseUrlList("https://a.com, https://").isLeft)
+    assert(Utils.parseUrlList("https://a.com, ftp://b.com/f.csv").isLeft)
+    // a bare local path is not scheme-qualified, so it passes
+    assert(Utils.parseUrlList("data/f.csv, https://a.com")
+      == Right(List("data/f.csv", "https://a.com")))
   }
 
   test("filterSqlStatements: whitelist semantics") {

@@ -131,6 +131,14 @@ class WarehouseSpec extends SparkSuite {
     spark.sql("DROP DATABASE wh_delete CASCADE")
   }
 
+  test("DELETE without WHERE removes every row through the versioned commit") {
+    val t = orders("wh_delete_all")
+    Warehouse.runStatements(spark, Seq(s"DELETE FROM $t"))
+    assert(spark.table(t).count() == 0)
+    assert(dataDirs(t) == Seq("t-v1"), dataDirs(t))
+    spark.sql("DROP DATABASE wh_delete_all CASCADE")
+  }
+
   test("a rewrite statement on a view fails and leaves the view and its table alone") {
     val t = orders("wh_view")
     spark.sql(s"CREATE VIEW wh_view.v AS SELECT * FROM $t")
