@@ -19,7 +19,6 @@ import scala.util.{Failure, Success, Try}
 final case class IngestOptions(
     anonymize: Boolean = false,
     sensitiveColumns: Seq[String] = Nil,
-    header: Boolean = true,
     tableName: Option[String] = None)
 
 /** `rows` is what this input wrote, also under append (not the table's total). */
@@ -55,8 +54,9 @@ object Ingest extends Logging {
     * save it as `source`.`table`. Only the reader depends on the extension:
     *
     *  - CSV (anything not .xlsx/.xls) is the reference's actual format,
-    *    read by the streaming tokeniser with `inferSchema=true`: one parse
-    *    of the whole file infers the schema, a second one loads it;
+    *    read (first line as header) by the streaming tokeniser with
+    *    `inferSchema=true`: one parse of the whole file infers the schema,
+    *    a second one loads it;
     *  - .xlsx is claimed in the reference README (README.md:69) but its code
     *    feeds any URL to the CSV parser (pd.read_csv, pipeline.py:205) —
     *    SURVEY.md §0.1. It routes to [[Xlsx.read]] (java.util.zip + the
@@ -81,7 +81,7 @@ object Ingest extends Logging {
     val raw =
       if (lower.endsWith(".xlsx")) Xlsx.read(spark, path)
       else spark.read
-        .option("header", options.header.toString)
+        .option("header", "true")
         .option("inferSchema", "true") // an extra read of the input, before the load
         .option("multiLine", "true") // the streaming tokeniser: records may span lines
         .csv(path)
@@ -123,6 +123,9 @@ object Ingest extends Logging {
     s"$db.$table"
   }
 
+  /** Files one [[run]] ingests at once. */
+  private val MaxParallelFiles = 4
+
   /** Multi-file pipeline run: stage remote files (retrying fetch), then ingest
     * each. File-level parallelism mirrors the reference's 4-thread pool
     * (/root/reference/pipeline.py:252-266) but failures are collected per-file
@@ -142,7 +145,6 @@ object Ingest extends Logging {
   def run(spark: SparkSession, urls: Seq[String], source: String,
           optionsFor: String => IngestOptions = _ => IngestOptions(),
           encryptionKey: Option[String] = None,
-          maxParallelFiles: Int = 4,
           mode: SaveMode = SaveMode.Overwrite): Seq[Try[IngestResult]] = {
     val stage = Files.createTempDirectory("graft-ingest")
     def ingestOne(url: String): IngestResult = {
@@ -161,7 +163,7 @@ object Ingest extends Logging {
     }.values.toSeq.sortBy(_.head._2)
     // pool is shut down before returning — non-daemon worker threads would
     // otherwise keep the JVM alive after main() completes
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(maxParallelFiles)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(MaxParallelFiles)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val results =
       try {

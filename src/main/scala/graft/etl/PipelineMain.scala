@@ -67,7 +67,6 @@ object PipelineMain {
     }
     // README-parity conversion: GitHub page links → raw content links
     val converted = inputs.map(Utils.githubRawUrl)
-    val (remote, local) = converted.partition(u => u.startsWith("http://") || u.startsWith("https://"))
 
     val spark = graft.core.SparkConfigs.applyScaleDefaults(
       SparkSession.builder()
@@ -83,10 +82,10 @@ object PipelineMain {
         val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
         // prompt up-front, once per input, in order (the reference prompts on
         // the main thread before dispatching to workers, pipeline.py:258-259)
-        (remote ++ local).map(u => u -> promptOptions(u, in)).toMap
+        converted.map(u => u -> promptOptions(u, in)).toMap
       } else {
         val opts = IngestOptions(anonymize = sensitive.nonEmpty, sensitiveColumns = sensitive)
-        (remote ++ local).map(u => u -> opts).toMap
+        converted.map(u => u -> opts).toMap
       }
     val optionsFor: String => IngestOptions = u => chosen.getOrElse(u, IngestOptions())
     // generate (and disclose) a key only if something will actually be
@@ -96,7 +95,7 @@ object PipelineMain {
       if (chosen.values.exists(_.anonymize)) Some(graft.crypto.Fernet.generateKey()) else None
     key.foreach(k => println(s"encryption key (retain to decrypt): $k"))
 
-    val results = Ingest.run(spark, remote ++ local, source, optionsFor, key, mode = mode)
+    val results = Ingest.run(spark, converted, source, optionsFor, key, mode = mode)
     results.foreach {
       case Success(r) => println(s"OK   ${r.url} -> ${r.table} (${r.rows} rows)")
       case Failure(e) => println(s"FAIL ${e.getMessage}")

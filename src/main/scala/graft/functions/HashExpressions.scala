@@ -390,43 +390,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name)
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64"),
-      (exprs: Seq[Expression]) => SimHash64Expr(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_signature"),
-      info("graft_minhash_signature"),
-      (exprs: Seq[Expression]) => MinHashSignatureExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_minhash_signature"))))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_buckets"),
-      info("graft_lsh_buckets"),
-      (exprs: Seq[Expression]) => LshBucketsExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_lsh_buckets"),
-        ExprArgs.intArg(exprs, 2, "graft_lsh_buckets"))))
-    ext.injectFunction((FunctionIdentifier("graft_cosine_similarity"),
-      info("graft_cosine_similarity"),
-      (exprs: Seq[Expression]) => CosineSimilarityExpr(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashesExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_shingle_hashes"))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_from_hashes"),
-      info("graft_minhash_from_hashes"),
-      (exprs: Seq[Expression]) => MinHashFromHashesExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_minhash_from_hashes"))))
-    ext.injectFunction((FunctionIdentifier("graft_cms_estimate"),
-      info("graft_cms_estimate"),
-      (exprs: Seq[Expression]) => CountMinEstimateExpr(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_fold_accents"),
-      info("graft_fold_accents"),
-      (exprs: Seq[Expression]) => AccentFoldExpr(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_token_count"),
-      info("graft_bpe_token_count"),
-      (exprs: Seq[Expression]) => BpeTokenCountExpr(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_ws_token_count"),
-      info("graft_ws_token_count"),
-      (exprs: Seq[Expression]) => WsTokenCountExpr(exprs.head)))
+    GraftFunctions.builders.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name), builder))
+    }
   }
 }
 
@@ -434,33 +401,31 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   * route from a registered Catalyst expression to a Column in Spark 4).
   */
 object GraftFunctions {
+  /** Every graft SQL function, name → Catalyst builder: the one table both
+    * [[GraftExtensions]] and [[register]] install.
+    */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_simhash64", exprs => SimHash64Expr(exprs.head)),
+    ("graft_minhash_signature", exprs => MinHashSignatureExpr(exprs.head,
+      ExprArgs.intArg(exprs, 1, "graft_minhash_signature"))),
+    ("graft_lsh_buckets", exprs => LshBucketsExpr(exprs.head,
+      ExprArgs.intArg(exprs, 1, "graft_lsh_buckets"),
+      ExprArgs.intArg(exprs, 2, "graft_lsh_buckets"))),
+    ("graft_cosine_similarity", exprs => CosineSimilarityExpr(exprs.head, exprs(1))),
+    ("graft_shingle_hashes", exprs => ShingleHashesExpr(exprs.head,
+      ExprArgs.intArg(exprs, 1, "graft_shingle_hashes"))),
+    ("graft_minhash_from_hashes", exprs => MinHashFromHashesExpr(exprs.head,
+      ExprArgs.intArg(exprs, 1, "graft_minhash_from_hashes"))),
+    ("graft_cms_estimate", exprs => CountMinEstimateExpr(exprs.head, exprs(1))),
+    ("graft_fold_accents", exprs => AccentFoldExpr(exprs.head)),
+    ("graft_bpe_token_count", exprs => BpeTokenCountExpr(exprs.head)),
+    ("graft_ws_token_count", exprs => WsTokenCountExpr(exprs.head)))
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64Expr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash_signature",
-      exprs => MinHashSignatureExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_minhash_signature")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_lsh_buckets",
-      exprs => LshBucketsExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_lsh_buckets"),
-        ExprArgs.intArg(exprs, 2, "graft_lsh_buckets")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_cosine_similarity",
-      exprs => CosineSimilarityExpr(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      exprs => ShingleHashesExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_shingle_hashes")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash_from_hashes",
-      exprs => MinHashFromHashesExpr(exprs.head,
-        ExprArgs.intArg(exprs, 1, "graft_minhash_from_hashes")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_cms_estimate",
-      exprs => CountMinEstimateExpr(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_fold_accents",
-      exprs => AccentFoldExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bpe_token_count",
-      exprs => BpeTokenCountExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_ws_token_count",
-      exprs => WsTokenCountExpr(exprs.head), "scala_udf")
+    builders.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 
   def bpeTokenCount(spark: SparkSession, s: Column): Column = {

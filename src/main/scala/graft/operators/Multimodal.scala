@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{Bmp, Wav}
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -8,13 +9,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 /** Multimodal-column support: media as opaque `binary` columns with typed
   * metadata, plus the decode/feature-extract plumbing shape.
   *
-  * The container has no image/audio codecs, so — per the build contract —
-  * the decode itself is a STUB (`MediaCodec.decodeStub`, a deterministic
-  * fake); everything around it is real and tested: the binary column schema,
-  * the typed metadata struct, the partition-wise batch decode path
-  * (`mapPartitions`, one codec init per partition, never per row — the shape
-  * a JNI/FFI decoder needs), and the per-row expression path for cheap
-  * metadata.
+  * Arbitrary blobs have no codec here, so their decode is a STUB
+  * (`decodeStub`, a deterministic fake); everything around it is real and
+  * tested: the binary column schema, the typed metadata struct, the
+  * partition-wise batch decode path (`mapPartitions`, one codec init per
+  * partition, never per row — the shape a JNI/FFI decoder needs), and the
+  * per-row expression path for cheap metadata. BMP and WAV bytes are real:
+  * they are built and read through [[graft.functions.Bmp]] and
+  * [[graft.functions.Wav]], the only code that knows either byte layout.
   *
   * The reference's only brush with binary data is the BLOB→VARBINARY type
   * mapping (/root/reference/pipeline.py:121); this module is the north-star
@@ -22,21 +24,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Multimodal {
 
-  /** Deterministic BMP generator used by the q59 demo table — kept in a
-  * top-level object so executor closures serialize only this, not the whole
-  * Multimodal object graph.
-  */
-object MediaCodecDemo extends Serializable {
-  def bmpFor(id: Long): Array[Byte] =
-    Multimodal.makeBmp((id % 64 + 16).toInt, (id % 48 + 16).toInt)
-
-  def wavFor(id: Long): Array[Byte] = {
-    val rate = (id % 3) match { case 0 => 16000; case 1 => 22050; case _ => 44100 }
-    Multimodal.makeWav(rate, (1 + id % 2).toInt, (1000 + id % 8000).toInt)
-  }
-}
-
-/** Decoded-media metadata: what a real image/audio probe would emit. */
+  /** Decoded-media metadata: what a real image/audio probe would emit. */
   final case class MediaMeta(
       doc_id: Long, byte_len: Long, width: Long, height: Long, n_frames: Long,
       format: String)
@@ -56,37 +44,16 @@ object MediaCodecDemo extends Serializable {
       format = if (n % 2 == 0) "img/fake-even" else "img/fake-odd")
   }
 
-  /** Header probe for a REAL format: BMP is plain byte layout ('BM' magic,
-    * little-endian int32 width/height at offsets 18/22), so its metadata is
-    * parseable with zero codec libraries. `decode` dispatches here when the
-    * magic matches and falls back to the stub otherwise — the dispatch
-    * structure a production probe (magic → parser) uses.
+  /** Header probe for a REAL format: BMP is plain byte layout, so its
+    * metadata is parseable with zero codec libraries (width and height read
+    * as unsigned). `decode` dispatches here when the magic matches and falls
+    * back to the stub otherwise — the dispatch structure a production probe
+    * (magic → parser) uses.
     */
-  def parseBmpHeader(docId: Long, bytes: Array[Byte]): Option[MediaMeta] = {
-    if (bytes.length < 26 || bytes(0) != 'B'.toByte || bytes(1) != 'M'.toByte) None
-    else {
-      def le32(off: Int): Long =
-        (bytes(off) & 0xFFL) | ((bytes(off + 1) & 0xFFL) << 8) |
-          ((bytes(off + 2) & 0xFFL) << 16) | ((bytes(off + 3) & 0xFFL) << 24)
-      Some(MediaMeta(docId, bytes.length.toLong,
-        width = le32(18), height = le32(22), n_frames = 1L, format = "image/bmp"))
-    }
-  }
-
-  /** Minimal valid 24-bit BMP for a given size (used by tests and the demo
-    * table): 54-byte header + zeroed pixel rows padded to 4 bytes.
-    */
-  def makeBmp(width: Int, height: Int): Array[Byte] = {
-    val rowSize = (width * 3 + 3) / 4 * 4
-    val pixelBytes = rowSize * height
-    val fileSize = 54 + pixelBytes
-    val b = java.nio.ByteBuffer.allocate(fileSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(fileSize).putInt(0).putInt(54)
-    b.putInt(40).putInt(width).putInt(height).putShort(1).putShort(24)
-    b.putInt(0).putInt(pixelBytes).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    b.array()
-  }
+  def parseBmpHeader(docId: Long, bytes: Array[Byte]): Option[MediaMeta] =
+    Bmp.probe(bytes).map(img => MediaMeta(docId, bytes.length.toLong,
+      width = Integer.toUnsignedLong(img.width), height = Integer.toUnsignedLong(img.height),
+      n_frames = 1L, format = "image/bmp"))
 
   def decode(docId: Long, bytes: Array[Byte]): MediaMeta =
     parseBmpHeader(docId, bytes).getOrElse(decodeStub(docId, bytes))
@@ -192,37 +159,14 @@ object MediaCodecDemo extends Serializable {
   /** RIFF/WAVE header probe — like BMP, plain byte layout (PCM fmt chunk at
     * fixed offsets for canonical files), zero codec dependencies.
     */
-  def parseWavHeader(docId: Long, bytes: Array[Byte]): Option[AudioMeta] = {
-    def tag(off: Int, s: String) =
-      bytes.length >= off + s.length && s.indices.forall(i => bytes(off + i) == s(i).toByte)
-    if (bytes.length < 44 || !tag(0, "RIFF") || !tag(8, "WAVE") || !tag(36, "data")) None
-    else {
-      def le16(off: Int): Long = (bytes(off) & 0xFFL) | ((bytes(off + 1) & 0xFFL) << 8)
-      def le32(off: Int): Long = le16(off) | (le16(off + 2) << 16)
-      val channels = le16(22)
-      val rate = le32(24)
-      val bitsPerSample = le16(34)
-      val dataSize = le32(40)
-      val nSamples = if (channels * bitsPerSample == 0) 0L
-                     else dataSize / (channels * bitsPerSample / 8)
-      val durationMs = if (rate == 0) 0L else nSamples * 1000L / rate
-      Some(AudioMeta(docId, bytes.length.toLong, rate, channels, nSamples,
-        durationMs, "audio/wav"))
+  def parseWavHeader(docId: Long, bytes: Array[Byte]): Option[AudioMeta] =
+    Wav.probe(bytes).map { p =>
+      val frameBits = p.channels * p.bitsPerSample
+      val nSamples = if (frameBits == 0) 0L else p.dataSize / (frameBits / 8)
+      val durationMs = if (p.sampleRate == 0) 0L else nSamples * 1000L / p.sampleRate
+      AudioMeta(docId, bytes.length.toLong, p.sampleRate, p.channels, nSamples,
+        durationMs, "audio/wav")
     }
-  }
-
-  /** Minimal canonical 16-bit PCM WAV with zeroed samples. */
-  def makeWav(sampleRate: Int, channels: Int, nSamples: Int): Array[Byte] = {
-    val dataSize = nSamples * channels * 2
-    val b = java.nio.ByteBuffer.allocate(44 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes).putInt(36 + dataSize).put("WAVE".getBytes)
-    b.put("fmt ".getBytes).putInt(16).putShort(1).putShort(channels.toShort)
-    b.putInt(sampleRate).putInt(sampleRate * channels * 2)
-      .putShort((channels * 2).toShort).putShort(16)
-    b.put("data".getBytes).putInt(dataSize)
-    b.array()
-  }
 
   /** Partition-wise audio probe over a binary column. */
   def decodeAudioColumn(spark: SparkSession, media: DataFrame): Dataset[AudioMeta] = {
@@ -240,8 +184,10 @@ object MediaCodecDemo extends Serializable {
   def q60WavDecode(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val media = Tables.documents(spark, d).select(col("doc_id")).as[Long]
-      .map(id => (id, MediaCodecDemo.wavFor(id)))
-      .toDF("doc_id", "content")
+      .map { id =>
+        val rate = (id % 3) match { case 0 => 16000; case 1 => 22050; case _ => 44100 }
+        (id, Wav.make(rate, (1 + id % 2).toInt, (1000 + id % 8000).toInt))
+      }.toDF("doc_id", "content")
     decodeAudioColumn(spark, media).toDF()
       .select(col("doc_id"), col("byte_len"), col("sample_rate"), col("channels"),
         col("n_samples"), col("duration_ms"))
@@ -267,9 +213,8 @@ object MediaCodecDemo extends Serializable {
   def q59BmpDecode(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val media = Tables.documents(spark, d).select(col("doc_id")).as[Long]
-      .map { id =>
-        (id, MediaCodecDemo.bmpFor(id))
-      }.toDF("doc_id", "content")
+      .map(id => (id, Bmp.make((id % 64 + 16).toInt, (id % 48 + 16).toInt)))
+      .toDF("doc_id", "content")
     decodeBinaryColumn(spark, media).toDF()
       .select(col("doc_id"), col("byte_len"), col("width"), col("height"), col("format"))
       .orderBy(col("doc_id"))
@@ -296,32 +241,14 @@ object MediaCodecDemo extends Serializable {
     * decode+hash is mapPartitions (per-partition codec init, the q41
     * pattern), the cluster step shuffles 8-byte hashes, never pixels.
     */
-  def makePatternBmp(seed: Int): Array[Byte] = {
-    val (w, h) = (64, 48)
-    val base = makeBmp(w, h)
-    val rowSize = (w * 3 + 3) / 4 * 4
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val v = ((x * 31 + y * 17 + seed * 97) & 0xFF).toByte
-        val off = 54 + y * rowSize + x * 3
-        base(off) = v; base(off + 1) = v; base(off + 2) = v
-        x += 1
-      }
-      y += 1
-    }
-    base
-  }
+  private def patternPixel(seed: Int)(x: Int, y: Int): Int = x * 31 + y * 17 + seed * 97
+
+  def makePatternBmp(seed: Int): Array[Byte] = Bmp.gray(64, 48)(patternPixel(seed))
 
   /** 64-bit block-mean average hash over the blue channel of a 24-bit BMP. */
   def aHash(bytes: Array[Byte]): Long = {
-    def le32(off: Int): Int =
-      (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    val w = le32(18); val h = le32(22)
-    val rowSize = (w * 3 + 3) / 4 * 4
-    val bw = w / 8; val bh = h / 8
+    val img = Bmp.read(bytes)
+    val bw = img.width / 8; val bh = img.height / 8
     val means = new Array[Long](64)
     var by = 0
     while (by < 8) {
@@ -332,7 +259,7 @@ object MediaCodecDemo extends Serializable {
         while (y < (by + 1) * bh) {
           var x = bx * bw
           while (x < (bx + 1) * bw) {
-            s += (bytes(54 + y * rowSize + x * 3) & 0xFF)
+            s += img.blue(x, y)
             x += 1
           }
           y += 1
@@ -388,29 +315,17 @@ object MediaCodecDemo extends Serializable {
   val Q153Frames = 32
   val Q153SamplesPerFrame = 256
 
-  def makePatternWav(seed: Int): Array[Byte] = {
-    val n = Q153Frames * Q153SamplesPerFrame
-    val bytes = makeWav(16000, 1, n)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < n) {
-      val frame = i / Q153SamplesPerFrame
-      val v: Short =
-        if (frame < seed * 8) 0
-        else if ((i / 8) % 2 == 0) 1000
-        else -1000
-      bb.putShort(44 + i * 2, v)
-      i += 1
+  def makePatternWav(seed: Int): Array[Byte] =
+    Wav.mono16(16000, Q153Frames * Q153SamplesPerFrame) { i =>
+      if (i / Q153SamplesPerFrame < seed * 8) 0
+      else if ((i / 8) % 2 == 0) 1000
+      else -1000
     }
-    bytes
-  }
 
   /** (n_frames, n_silent, max_amp) from our fixed mono-16-bit layout. */
   def wavFrameStats(bytes: Array[Byte]): (Long, Long, Long) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val dataSize = bb.getInt(40)
-    val nSamples = dataSize / 2
-    val frames = nSamples / Q153SamplesPerFrame
+    val pcm = Wav.pcm(bytes)
+    val frames = pcm.n / Q153SamplesPerFrame
     var silent = 0L
     var maxAmp = 0L
     var f = 0
@@ -418,7 +333,7 @@ object MediaCodecDemo extends Serializable {
       var energy = 0L
       var i = f * Q153SamplesPerFrame
       while (i < (f + 1) * Q153SamplesPerFrame) {
-        val s = bb.getShort(44 + i * 2).toLong
+        val s = pcm(i).toLong
         energy += s * s
         if (math.abs(s) > maxAmp) maxAmp = math.abs(s)
         i += 1
@@ -462,17 +377,13 @@ object MediaCodecDemo extends Serializable {
     * longs per image, never pixels.
     */
   def pixelHistogram(bytes: Array[Byte]): Array[Long] = {
-    def le32(off: Int): Int =
-      (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    val w = le32(18); val h = le32(22)
-    val rowSize = (w * 3 + 3) / 4 * 4
+    val img = Bmp.read(bytes)
     val bins = new Array[Long](8)
     var y = 0
-    while (y < h) {
+    while (y < img.height) {
       var x = 0
-      while (x < w) {
-        bins((bytes(54 + y * rowSize + x * 3) & 0xFF) / 32) += 1
+      while (x < img.width) {
+        bins(img.blue(x, y) / 32) += 1
         x += 1
       }
       y += 1
@@ -533,32 +444,24 @@ object MediaCodecDemo extends Serializable {
   val Q279Samples = 4096
 
   def makeClipWav(id: Long): Array[Byte] = {
-    val n = Q279Samples
-    val bytes = makeWav(16000, 1, n)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val clipLen = if (id % 5 == 0) ((id % 3) + 1).toInt * 16 else 0
-    var i = 0
-    while (i < n) {
-      val v: Short =
-        if (i >= 100 && i < 100 + clipLen) 32767
-        else if (i % 2 == 0) 2000
-        else -2000
-      bb.putShort(44 + i * 2, v)
-      i += 1
+    Wav.mono16(16000, Q279Samples) { i =>
+      if (i >= 100 && i < 100 + clipLen) 32767
+      else if (i % 2 == 0) 2000
+      else -2000
     }
-    bytes
   }
 
   /** (n_samples, n_clipped, max_run) over our mono-16-bit layout:
     * clipped = |s| ≥ 32767 (covers −32768, the other rail).
     */
   def wavClipStats(bytes: Array[Byte]): (Long, Long, Long) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nSamples = bb.getInt(40) / 2
+    val pcm = Wav.pcm(bytes)
+    val nSamples = pcm.n
     var clipped = 0L; var maxRun = 0L; var run = 0L
     var i = 0
     while (i < nSamples) {
-      val s = bb.getShort(44 + i * 2).toInt
+      val s = pcm(i)
       if (s >= 32767 || s <= -32768) {
         clipped += 1; run += 1
         if (run > maxRun) maxRun = run
@@ -604,26 +507,17 @@ object MediaCodecDemo extends Serializable {
     */
   val Q330Samples = 512
 
-  def makeGainWav(id: Long): Array[Byte] = {
-    val bytes = makeWav(16000, 1, Q330Samples)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < Q330Samples) {
-      bb.putShort(44 + i * 2, (((id * 31 + i * 17) % 65536) - 32768).toShort)
-      i += 1
-    }
-    bytes
-  }
+  def makeGainWav(id: Long): Array[Byte] =
+    Wav.mono16(16000, Q330Samples)(i => (((id * 31 + i * 17) % 65536) - 32768).toInt)
 
   def wavSumSq(bytes: Array[Byte]): (Long, Long) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val n = bb.getInt(40) / 2
+    val pcm = Wav.pcm(bytes)
     var s = 0L; var i = 0
-    while (i < n) {
-      val v = bb.getShort(44 + i * 2).toLong
+    while (i < pcm.n) {
+      val v = pcm(i).toLong
       s += v * v; i += 1
     }
-    (n.toLong, s)
+    (pcm.n.toLong, s)
   }
 
   def q330AudioGain(spark: SparkSession, d: String): DataFrame = {
@@ -668,13 +562,12 @@ object MediaCodecDemo extends Serializable {
     * ppm of sample transitions.
     */
   def wavZeroCrossings(bytes: Array[Byte]): Long = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nSamples = bb.getInt(40) / 2
+    val pcm = Wav.pcm(bytes)
     var crossings = 0L
     var prev = 0L
     var i = 0
-    while (i < nSamples) {
-      val s = bb.getShort(44 + i * 2).toLong
+    while (i < pcm.n) {
+      val s = pcm(i).toLong
       if (s * prev < 0) crossings += 1
       if (s != 0) prev = s
       i += 1
@@ -689,9 +582,7 @@ object MediaCodecDemo extends Serializable {
         it.map { id =>
           val pattern = (id % 4).toInt
           val wav = makePatternWav(pattern)
-          val n = java.nio.ByteBuffer.wrap(wav)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(40) / 2
-          (pattern.toLong, n.toLong, wavZeroCrossings(wav))
+          (pattern.toLong, Wav.pcm(wav).n.toLong, wavZeroCrossings(wav))
         }
       }.toDF("pattern", "n_samples", "crossings")
       .groupBy(col("pattern"))
@@ -732,27 +623,18 @@ object MediaCodecDemo extends Serializable {
     * shuffle; per-partition codec init), the rollup shuffles one small
     * tuple per image.
     */
-  def makeBorderedBmp(seed: Int, border: Int): Array[Byte] = {
-    val bmp = makePatternBmp(seed)
-    val (w, h) = (64, 48)
-    val rowSize = (w * 3 + 3) / 4 * 4
-    for (y <- (0 until border) ++ ((h - border) until h); x <- 0 until w * 3)
-      bmp(54 + y * rowSize + x) = 0
-    bmp
-  }
+  def makeBorderedBmp(seed: Int, border: Int): Array[Byte] =
+    Bmp.gray(64, 48)((x, y) => if (y < border || y >= 48 - border) 0 else patternPixel(seed)(x, y))
 
   /** (top, bottom) maximal uniform-row run lengths of a 24-bit BMP. */
   def borderRuns(bytes: Array[Byte]): (Int, Int) = {
-    def le32(off: Int): Int =
-      (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    val w = le32(18); val h = le32(22)
-    val rowSize = (w * 3 + 3) / 4 * 4
+    val img = Bmp.read(bytes)
+    val h = img.height
     def uniform(y: Int): Boolean = {
-      val base = 54 + y * rowSize
+      val base = img.rowOffset(y)
       val v = bytes(base)
       var i = 1
-      while (i < w * 3) {
+      while (i < img.rowLength) {
         if (bytes(base + i) != v) return false
         i += 1
       }
@@ -816,17 +698,13 @@ object MediaCodecDemo extends Serializable {
     * equality certifies decode → histogram → argmax end to end.
     */
   def pixelHistogram256(bytes: Array[Byte]): Array[Long] = {
-    def le32(off: Int): Int =
-      (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    val w = le32(18); val h = le32(22)
-    val rowSize = (w * 3 + 3) / 4 * 4
+    val img = Bmp.read(bytes)
     val bins = new Array[Long](256)
     var y = 0
-    while (y < h) {
+    while (y < img.height) {
       var x = 0
-      while (x < w) {
-        bins(bytes(54 + y * rowSize + x * 3) & 0xFF) += 1
+      while (x < img.width) {
+        bins(img.blue(x, y)) += 1
         x += 1
       }
       y += 1
@@ -917,18 +795,17 @@ object MediaCodecDemo extends Serializable {
   val Q359Factor = 3
 
   def decimateStats(bytes: Array[Byte], r: Int): (Long, Long, Long, Long, Long) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val n = bb.getInt(40) / 2
-    val nOut = n / r
+    val pcm = Wav.pcm(bytes)
+    val nOut = pcm.n / r
     var sumOut = 0L; var sumAbs = 0L; var maxAbs = 0L; var straddle = 0L
     var g = 0
     while (g < nOut) {
       var s = 0L
-      val first = bb.getShort(44 + g * r * 2).toLong
+      val first = pcm(g * r).toLong
       var same = true
       var i = 0
       while (i < r) {
-        val v = bb.getShort(44 + (g * r + i) * 2).toLong
+        val v = pcm(g * r + i).toLong
         s += v
         if (v != first) same = false
         i += 1
@@ -1004,14 +881,9 @@ object MediaCodecDemo extends Serializable {
     val grads = pats.select(col("pattern")).as[Long]
       .mapPartitions { it =>
         it.map { p =>
-          val bytes = makePatternBmp(p.toInt)
-          def le32(off: Int): Int =
-            (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-              ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-          val w = le32(18); val h = le32(22)
-          val rowSize = (w * 3 + 3) / 4 * 4
-          def pix(x: Int, y: Int): Long =
-            (bytes(54 + y * rowSize + x * 3) & 0xFF).toLong
+          val img = Bmp.read(makePatternBmp(p.toInt))
+          val w = img.width; val h = img.height
+          def pix(x: Int, y: Int): Long = img.blue(x, y).toLong
           var gx = 0L; var gy = 0L
           var y = 0
           while (y < h) {
@@ -1111,12 +983,9 @@ object MediaCodecDemo extends Serializable {
     val det = pats.select(col("seed")).as[Long]
       .mapPartitions { it =>
         it.map { seed =>
-          val bytes = makePatternWav(seed.toInt)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val n = bb.getInt(40) / 2
-          def a(i: Int): Long =
-            if (i < 0 || i >= n) 0L else bb.getShort(44 + i * 2).toLong
+          val pcm = Wav.pcm(makePatternWav(seed.toInt))
+          val n = pcm.n
+          def a(i: Int): Long = if (i < 0 || i >= n) 0L else pcm(i).toLong
           val k = (seed * 3 + 2).toInt
           def b(i: Int): Long = a(i - k)
           val scores = (0 until 16).map { lag =>
@@ -1190,19 +1059,12 @@ object MediaCodecDemo extends Serializable {
     val patches = pats.select(col("pattern")).as[Long]
       .mapPartitions { it =>
         it.flatMap { p =>
-          val bytes = makePatternBmp(p.toInt)
-          def le32(off: Int): Int =
-            (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-              ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-          val w = le32(18); val h = le32(22)
-          val rowSize = (w * 3 + 3) / 4 * 4
-          def pix(x: Int, y: Int): Long =
-            (bytes(54 + y * rowSize + x * 3) & 0xFF).toLong
+          val img = Bmp.read(makePatternBmp(p.toInt))
           var total = 0L
-          val rows = for (ty <- 0 until h / 8; tx <- 0 until w / 8) yield {
+          val rows = for (ty <- 0 until img.height / 8; tx <- 0 until img.width / 8) yield {
             var s = 0L; var mn = 255L; var mx = 0L
             for (dy <- 0 until 8; dx <- 0 until 8) {
-              val v = pix(tx * 8 + dx, ty * 8 + dy)
+              val v = img.blue(tx * 8 + dx, ty * 8 + dy).toLong
               s += v; if (v < mn) mn = v; if (v > mx) mx = v
             }
             total += s
@@ -1262,19 +1124,12 @@ object MediaCodecDemo extends Serializable {
     val runs = pats.select(col("pattern")).as[Long]
       .mapPartitions { it =>
         it.map { p =>
-          val bytes = makePatternBmp(p.toInt)
-          def le32(off: Int): Int =
-            (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-              ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-          val w = le32(18); val h = le32(22)
-          val rowSize = (w * 3 + 3) / 4 * 4
-          def pix(x: Int, y: Int): Long =
-            (bytes(54 + y * rowSize + x * 3) & 0xFF).toLong
+          val img = Bmp.read(makePatternBmp(p.toInt))
           var nRuns = 0L; var nPix = 0L
-          for (y <- 0 until h) {
+          for (y <- 0 until img.height) {
             var prev = -1L
-            for (x <- 0 until w) {
-              val q = pix(x, y) / 64
+            for (x <- 0 until img.width) {
+              val q = img.blue(x, y) / 64L
               nPix += 1
               if (q != prev) { nRuns += 1; prev = q }
             }
@@ -1331,15 +1186,13 @@ object MediaCodecDemo extends Serializable {
     val costs = pats.select(col("seed")).as[Long]
       .mapPartitions { it =>
         it.map { p =>
-          val bytes = makePatternWav(p.toInt)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val n = bb.getInt(40) / 2
+          val pcm = Wav.pcm(makePatternWav(p.toInt))
+          val n = pcm.n
           var bits = 0L
           var prev = 0L
           var i = 0
           while (i < n) {
-            val s = bb.getShort(44 + i * 2).toLong
+            val s = pcm(i).toLong
             bits += (if (i == 0) 16L
                      else java.lang.Long.toBinaryString(math.abs(s - prev)).length + 1L)
             prev = s

@@ -181,7 +181,7 @@ class OperatorsSpec extends SparkSuite {
   }
 
   test("BMP header probe: constructed image parses back to its dimensions") {
-    val bytes = Multimodal.makeBmp(33, 21)
+    val bytes = graft.functions.Bmp.make(33, 21)
     val meta = Multimodal.parseBmpHeader(7L, bytes)
     assert(meta.contains(Multimodal.MediaMeta(7L, bytes.length.toLong, 33L, 21L, 1L, "image/bmp")))
     // non-BMP bytes fall back to the stub
