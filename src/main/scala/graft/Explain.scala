@@ -1,69 +1,78 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins._
 
 /** Dev tool: print the formatted physical plan and wall time for the named
   * queries (all queries if none named). Usage:
   *   sbt "runMain graft.Explain q35_similarity_ann_lsh [more...]"
+  * `--scan-audit` as the first argument prints only the `[scan-audit]`
+  * lines (scans, exchanges and joins per query) without running anything.
   * Env: SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_CPUS.
   */
 object Explain {
 
-  /** Per-table file-scan counts over the whole physical plan, descending
-    * into broadcast/scalar subqueries, and expanding each DISTINCT cached
-    * relation once (its build cost is paid once at runtime). A fact table
-    * appearing more than ~3× in one plan means some branch forks the
-    * lineage back to the raw scan — the q150 bug class from round 4.
+  /** Every node of the physical plan, once: adaptive plans are expanded,
+    * subqueries walked, each DISTINCT cached relation's build walked once
+    * (its cost is paid once at runtime), and each DISTINCT exchange walked
+    * once — `ReusedExchangeExec` edges are followed (an exchange only
+    * reachable through a reuse reference still moves data once) but
+    * identity-deduped, so original + reuse never double-count.
     */
-  def scanCounts(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val seen = scala.collection.mutable.Set.empty[Int]
-    def walk(p: SparkPlan): Seq[String] = p match {
+  def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case s: InMemoryTableScanExec =>
-        if (seen.add(System.identityHashCode(s.relation.cacheBuilder)))
-          walk(s.relation.cachedPlan)
-        else Nil
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.headOption
-          .map(p => p.getName.stripSuffix(".parquet")).toSeq
-      case other => (other.children ++ other.subqueries).flatMap(walk)
+        if (seen.add(s.relation.cacheBuilder)) walk(s.relation.cachedPlan) else Nil
+      case r: ReusedExchangeExec => walk(r.child)
+      case e: Exchange if !seen.add(e) => Nil
+      case other => other +: (other.children ++ other.subqueries).flatMap(walk)
     }
     walk(df.queryExecution.executedPlan)
-      .groupBy(identity).view.mapValues(_.size).toMap
   }
 
-  /** Shuffle-exchange count over the whole physical plan (subqueries and
-    * cached-relation builds included, each cache expanded once) — the
-    * per-query "how many times does data move" number for scale audits.
-    * Each DISTINCT exchange counts once: `ReusedExchangeExec` edges are
-    * followed (an exchange only reachable through a reuse reference still
-    * moves data once) but identity-deduped, so original + reuse never
-    * double-count and an exchange's upstream is walked exactly once.
+  /** Per-table file-scan counts. A fact table appearing more than ~3× in
+    * one plan means some branch forks the lineage back to the raw scan —
+    * the q150 bug class from round 4.
     */
-  def exchangeCount(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
-    val seen = scala.collection.mutable.Set.empty[Int]
-    val seenEx = scala.collection.mutable.Set.empty[Int]
-    def walk(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: InMemoryTableScanExec =>
-        if (seen.add(System.identityHashCode(s.relation.cacheBuilder)))
-          walk(s.relation.cachedPlan)
-        else 0
-      case r: ReusedExchangeExec => walk(r.child)
-      case e: ShuffleExchangeLike =>
-        if (seenEx.add(System.identityHashCode(e)))
-          1 + (e.children ++ e.subqueries).map(walk).sum
-        else 0
-      case other => (other.children ++ other.subqueries).map(walk).sum
-    }
-    walk(df.queryExecution.executedPlan)
+  def scanCounts(df: DataFrame): Map[String, Int] =
+    planNodes(df).collect { case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.headOption.map(_.getName.stripSuffix(".parquet"))
+    }.flatten.groupBy(identity).view.mapValues(_.size).toMap
+
+  /** Shuffle-exchange count — the per-query "how many times does data
+    * move" number for scale audits.
+    */
+  def exchangeCount(df: DataFrame): Int =
+    planNodes(df).count(_.isInstanceOf[ShuffleExchangeLike])
+
+  /** Join-operator counts, keyed by operator and, where it has one, its
+    * build side: removing a broadcast hint must leave these unchanged.
+    */
+  def joinCounts(df: DataFrame): Map[String, Int] = {
+    def side(b: BuildSide) = if (b == BuildLeft) "left" else "right"
+    planNodes(df).collect {
+      case j: BroadcastHashJoinExec => s"BroadcastHashJoin(${side(j.buildSide)})"
+      case j: ShuffledHashJoinExec => s"ShuffledHashJoin(${side(j.buildSide)})"
+      case j: BroadcastNestedLoopJoinExec => s"BroadcastNestedLoopJoin(${side(j.buildSide)})"
+      case _: SortMergeJoinExec => "SortMergeJoin"
+      case _: CartesianProductExec => "CartesianProduct"
+    }.groupBy(identity).view.mapValues(_.size).toMap
+  }
+
+  /** One `[scan-audit]` line: scans, shuffle exchanges and joins. */
+  def auditLine(name: String, df: DataFrame): String = {
+    def counts(m: Map[String, Int]) =
+      m.toSeq.sortBy { case (k, n) => (-n, k) }.map { case (k, n) => s"$k×$n" }.mkString(", ")
+    s"[scan-audit] $name: ${counts(scanCounts(df))}; exchanges=${exchangeCount(df)}; " +
+      s"joins=${counts(joinCounts(df))}"
   }
 
   def main(args: Array[String]): Unit = {
@@ -76,14 +85,12 @@ object Explain {
     val names = if (qargs.nonEmpty) qargs else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val scans = scanCounts(df).toSeq.sortBy(-_._2)
-        .map { case (t, n) => s"$t×$n" }.mkString(", ")
-      if (auditOnly) {
-        println(s"[scan-audit] $name: $scans; exchanges=${exchangeCount(df)}")
-      } else {
+      if (!auditOnly) {
         println(s"\n========== $name ==========")
         df.explain("formatted")
-        println(s"[scan-audit] $name: $scans; exchanges=${exchangeCount(df)}")
+      }
+      println(auditLine(name, df))
+      if (!auditOnly) {
         val t0 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         println(f"[explain] $name took ${(System.nanoTime() - t0) / 1e9}%.2f s")

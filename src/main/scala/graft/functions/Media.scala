@@ -126,5 +126,13 @@ object Wav {
     def sampleRate: Long = b.getInt(24) & 0xFFFFFFFFL
     def bitsPerSample: Long = b.getShort(34) & 0xFFFFL
     def dataSize: Long = b.getInt(40) & 0xFFFFFFFFL
+
+    /** Samples per channel (data size / frame size); None when a frame,
+      * channels × bits per sample, is under one byte.
+      */
+    def frames: Option[Long] = {
+      val frameBytes = channels * bitsPerSample / 8
+      if (frameBytes == 0) None else Some(dataSize / frameBytes)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -285,7 +286,7 @@ object Cdc {
           col("o_orderstatus"), col("o_totalprice")))
     val hist = scd2Delta(orders, evolved, "o_orderkey",
       Seq("o_orderstatus", "o_totalprice"),
-      v1Date = "2024-01-01", v2Date = "2024-02-01").localCheckpoint() // changed-rows-sized SCD2 delta; read by 3 readout legs
+      v1Date = "2024-01-01", v2Date = "2024-02-01").pin(SizedBy("changed-rows")) // SCD2 delta; read by 3 readout legs
     val changedKeys = hist.select(col("o_orderkey")).distinct()
     def asOf(t: String): DataFrame =
       hist.filter(col("valid_from") <= lit(t) &&

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.functions.TextKeys._
 import graft.sources.Tables
 
@@ -582,20 +583,17 @@ object Curation {
     val wB = Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, -1) // bucket-summary-sized offsets frame
     val wAll = Window.orderBy(col("bucket")) // bucket-summary-sized offsets frame
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // r17: offsets pinned (bucket-summary-sized; read by the rank join AND
-    // the corpus-count readout) and the global rank frame pinned
-    // (doc-count-sized narrow, 2 longs/row) — unpinned, the target-rank
-    // join re-embedded the whole two-phase rank lineage (documents x4)
+    // offsets and the global rank frame are each read by two joins
     val offsets = gb.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
       .withColumn("off", coalesce(sum(col("bn")).over(wB), lit(0L)))
       .withColumn("nn", sum(col("bn")).over(wAll))
       .select(col("bucket"), col("off"), col("nn"))
-      .localCheckpoint() // bucket-summary-sized offsets frame
+      .pin(SizedBy("bucket-summary")) // offsets frame
     val g = gb.withColumn("lrn", row_number().over(
         Window.partitionBy(col("bucket")).orderBy(col("gv"), col("gid"))))
       .join(broadcast(offsets), Seq("bucket"))
       .select(col("gv"), (col("off") + col("lrn")).as("gr"))
-      .localCheckpoint() // doc-count-sized narrow (value, rank)
+      .pin(SizedBy("doc-count")) // narrow (value, rank)
     // per-source ranks: source is the documented low-cardinality-window
     // tradeoff (20 sources here; see SCALE.md) — the corpus count N rides
     // in from the bucket table, not from a whole-corpus window
@@ -848,7 +846,7 @@ object Curation {
       .agg(sum(size(words(col("text")))).cast("bigint").as("avail"))
       .withColumn("wt", expr(
         "CASE WHEN source IN ('src0', 'src1', 'src2', 'src3', 'src4') THEN 2L ELSE 1L END"))
-      .localCheckpoint() // sources-sized inventory; read by totals + plan
+      .pin(SizedBy("sources")) // inventory; read by totals + plan
     val tot = st.agg(expr("cast(sum(avail) as bigint)").as("total"),
       expr("cast(sum(wt) as bigint)").as("wsum"))
     val fin = st.crossJoin(broadcast(tot))
@@ -864,7 +862,7 @@ object Curation {
           .as("achieved_tokens"))
       .withColumn("deficit_tokens",
         expr("greatest(needed_tokens - achieved_tokens, 0L)"))
-      .localCheckpoint() // sources-sized plan; read by its own total + output
+      .pin(SizedBy("sources")) // plan; read by its own total + output
     val at = fin.agg(expr("cast(sum(achieved_tokens) as bigint)").as("ach_total"))
     fin.crossJoin(broadcast(at))
       .select(col("source"), col("avail").as("avail_tokens"), col("target_share"),
@@ -974,14 +972,9 @@ object Curation {
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val survivors = docs.join(keepIds, Seq("doc_id"), "left_semi")
-    // per-doc frame, read by the gate and both counts — localCheckpoint
-    // is single-job-scoped by design here: the frame is doc-count-sized
-    // (two BIGINTs per surviving doc), and on executor loss the query
-    // re-runs rather than resuming (a persisted-artifact version would
-    // use the q286 pattern; this is a one-shot report, not a shared
-    // derivation)
+    // per-doc frame, read by the gate and both counts
     val cov = graft.operators.Dedup.substringDupCoverage(survivors, k = 8)
-      .localCheckpoint() // doc-count-sized narrow coverage (note above)
+      .pin(SizedBy("doc-count")) // narrow coverage (note above)
     val L = Q275SeqLen
     cov.agg(count(lit(1)).as("n_after_dedup"),
         expr("cast(count_if(covered * 2 < n_tokens) as bigint)").as("n_after_gate"),
@@ -1141,7 +1134,7 @@ object Curation {
       .withColumn("mt", expr("CASE WHEN tot = 0 THEN nsrc ELSE tot END"))
       .withColumn("wbase", expr("m * 1000000 div mt"))
       .withColumn("rem", expr("m * 1000000 % mt"))
-      .localCheckpoint() // sources-sized weight frame; read by the rank leg and the leftover total
+      .pin(SizedBy("sources")) // weight frame; read by the rank leg and the leftover total
     val wR = Window.orderBy(col("rem").desc, col("source").asc) // |sources|-sized weight frame
     sized.withColumn("rk", row_number().over(wR))
       .crossJoin(broadcast(sized.agg(
@@ -1287,7 +1280,7 @@ object Curation {
         // oracle's md5 replay agrees on every compared aggregate w.h.p.)
         internalKey(col("bg")).as("gk"))
       .distinct()
-      .localCheckpoint() // vocab-sized distinct (source, gram) frame; read by all rounds
+      .pin(SizedBy("vocab")) // distinct (source, gram) frame; read by all rounds
     val universe = g.agg(countDistinct(col("gk")).as("u"))
     var covered: DataFrame = null
     var selected = List.empty[String]
@@ -1391,7 +1384,7 @@ object Curation {
       .select(col("source"),
         certifiedKey(col("t")).as("th"))
       .groupBy(col("source"), col("th")).agg(count(lit(1)).as("w"))
-      .localCheckpoint() // vocab-sized (source x token) count table, read twice
+      .pin(SizedBy("vocab")) // (source x token) count table, read twice
     val tot = cnt.groupBy(col("source")).agg(expr("cast(sum(w) as bigint)").as("tw"))
     val a = cnt.select(col("source").as("sa"), col("th"), col("w").as("wa"))
     val b = cnt.select(col("source").as("sb"), col("th"), col("w").as("wb"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.functions.TextKeys._
 import graft.sources.Tables
 
@@ -443,7 +444,7 @@ object Dedup {
     *    with adversarial long paths would want the O(log n)-round
     *    alternating large-star/small-star variant, which swaps this loop
     *    body, not the surrounding pipeline;
-    *  - `localCheckpoint` after every round truncates lineage so round N
+    *  - a pin after every round truncates lineage so round N
     *    does not replay rounds 1..N-1 (and lets the round-(N-1) RDDs be
     *    dropped by the context cleaner once unreferenced);
     *  - convergence is certified by Σlabels, one scalar action per round:
@@ -459,7 +460,7 @@ object Dedup {
     var labels = nodes.select(col(nodes.columns.head).as("id"))
       .distinct()
       .withColumn("component", col("id"))
-      .localCheckpoint() // node-sized (pair-incident ids)
+      .pin(SizedBy("node")) // pair-incident ids
     var prevSum = labels.agg(sum(col("component").cast("decimal(38,0)")))
       .head.getDecimal(0)
     var converged = false
@@ -469,7 +470,7 @@ object Dedup {
         .select(edges("b").as("id"), col("component"))
       val next = labels.select(col("id"), col("component")).union(propagated)
         .groupBy(col("id")).agg(min(col("component")).as("component"))
-        .localCheckpoint() // node-sized round frame
+        .pin(SizedBy("node")) // round frame
       val nextSum = next.agg(sum(col("component").cast("decimal(38,0)")))
         .head.getDecimal(0)
       converged = nextSum.compareTo(prevSum) == 0
@@ -502,7 +503,7 @@ object Dedup {
     * O(log² n) worst case (≈7 rounds for a 512-chain vs 512). Same
     * convergence certificate as [[connectedComponents]]: per-node
     * closed-neighborhood minima only ever decrease, so an unchanged
-    * Σmin (DECIMAL(38,0), overflow-safe) is the fixpoint; `localCheckpoint`
+    * Σmin (DECIMAL(38,0), overflow-safe) is the fixpoint; a pin
     * truncates lineage per round. Returns (id, component) like
     * [[connectedComponents]].
     */
@@ -545,7 +546,7 @@ object Dedup {
     var edges = pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint() // edge-sized (shrinks per round)
+      .pin(SizedBy("edge")) // shrinks per round
 
     def labelSum(e: DataFrame) =
       e.select(least(col("a"), col("b")).as("m"), greatest(col("a"), col("b")).as("id"))
@@ -556,7 +557,7 @@ object Dedup {
     var converged = prevSum == null // no edges ⇒ nothing to do
     var round = 0
     while (!converged && round < maxRounds) {
-      edges = smallStar(largeStar(edges)).distinct().localCheckpoint() // edge-sized round frame
+      edges = smallStar(largeStar(edges)).distinct().pin(SizedBy("edge")) // round frame
       val nextSum = labelSum(edges)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
@@ -853,15 +854,12 @@ object Dedup {
     */
   def prefixFilterJoin(docs: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r17: tokenize ONCE. The sorted distinct-token arrays feed every
-    // downstream frame — |x| is their in-row size (the old separate `sizes`
-    // aggregation), the word stream is their explode, and the verification
-    // join reads them directly. Before, each consumer re-derived its frame
-    // from `docs` and the self-join doubled that: 8 corpus scans for one
-    // tokenization's worth of information.
+    // tokenize ONCE: the sorted distinct-token arrays feed every downstream
+    // frame (|x| is their in-row size, the word stream their explode, and the
+    // verification join reads them directly)
     val toks = docs.select(col("doc_id"),
       array_sort(array_distinct(words(col("text")))).as("toks"))
-      .localCheckpoint() // candidate-population-sized (docs pre-filtered to the join's id range)
+      .pin(SizedBy("candidate-population")) // docs pre-filtered to the join's id range
     val wordRows = toks.select(col("doc_id"), size(col("toks")).as("n"),
       explode(col("toks")).as("word"))
     // global document frequency; rarest-first, ties by word → total order
@@ -918,12 +916,10 @@ object Dedup {
     */
   def q157ContainmentJoin(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d).filter(col("doc_id") < 200)
-    // r17: pinned — sizes and both inverted-index join sides each re-ran
-    // the tokenize pass (documents x4); population-bounded (doc_id < 200),
-    // the q140 pin class
+    // read by sizes and both inverted-index join sides
     val wordRows = docs.select(col("doc_id"),
       explode(array_distinct(words(col("text")))).as("word"))
-      .localCheckpoint() // doc×word-sized candidate-population tokens
+      .pin(SizedBy("doc×word")) // candidate-population tokens
     val sizes = wordRows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = wordRows.as("a")
     val b = wordRows.as("b")
@@ -1239,22 +1235,18 @@ object Dedup {
   def incrementalNearDupMatches(corpusDocs: DataFrame, bands: DataFrame,
                                 batch: DataFrame,
                                 threshold: Double): DataFrame = {
-    // ONE signature pass over the batch, pinned (batch-sized): the band
-    // probe and the shingle-verification side both derive from it instead
-    // of re-running tokenize/shingle/minhash twice per probe (q248 pays
-    // this once per micro-batch)
+    // ONE signature pass over the batch: the band probe and the
+    // shingle-verification side both derive from it
     val sigs = minhashSignatures(batch)
       .select(col("doc_id").as("in_id"), col("shingles"), col("sig"))
-      .localCheckpoint() // batch-sized signatures
+      .pin(SizedBy("batch")) // signatures
     val inB = sigs.select(col("in_id"),
       posexplode(expr(BandKeysExpr)).as(Seq("band_id", "band_key")))
     // the candidate list is read twice (verification join + corpus prune)
-    // and is batch-sized — localCheckpoint pins it so the index probe runs
-    // once instead of re-embedding per reference
     val cand = inB
       .join(bands.withColumnRenamed("doc_id", "ref_id"), Seq("band_id", "band_key"))
       .select(col("in_id"), col("ref_id")).distinct()
-      .localCheckpoint() // candidate-pairs-sized (capped)
+      .pin(SizedBy("candidate-pairs")) // capped
     val sIn = sigs.select(col("in_id"), col("shingles").as("sh_in"))
     val sRef = minhashSignatures(
         corpusDocs.join(cand.select(col("ref_id")).distinct(),
@@ -1954,10 +1946,9 @@ object Dedup {
         when(col("doc_id") % 20 === 0, concat(col("text"), lit(" " + Q305Span)))
           .otherwise(col("text")))
     val sel = winnowSelect(planted, Q305K, Q305W, keep = Seq("lang"))
-      // the selected-fingerprint frame IS the winnowing index (~2/(w+1)
-      // of gram count); three consumers read it — pinned job-scope here,
-      // persisted as the q316 artifact in a 100 TB deployment
-      .localCheckpoint() // index-sized, ~2/(w+1) of grams (note above)
+      // the selected-fingerprint frame IS the winnowing index (the persisted
+      // q316 artifact at scale); three consumers read it
+      .pin(SizedBy("index")) // ~2/(w+1) of grams (note above)
     // r17: one (doc, fingerprint) distinct (the r16 form built the same
     // distinct subtree twice — once for the df filter, once to join it
     // back); over the distinct frame countDistinct(doc) per sh IS the row
@@ -2110,8 +2101,8 @@ object Dedup {
         expr("""array_join(transform(sequence(0, 19),
                  j -> concat('nv', cast(doc_id as string), 'x', cast(j as string))), ' ')""")
           .as("text"))
-    val batch = copies.unionByName(novel).localCheckpoint() // batch-sized fixture
-    val sel = winnowSelect(batch, Q305K, Q305W).localCheckpoint() // batch-sized fixture selection
+    val batch = copies.unionByName(novel).pin(SizedBy("batch")) // fixture
+    val sel = winnowSelect(batch, Q305K, Q305W).pin(SizedBy("batch")) // fixture selection
     val idx = winnowIndexTable(spark, d)
       .select(col("doc_id").as("ref_id"), col("sh"))
     // hit counts ride the per-hash df SUMMARY (1 row per hash — immune
@@ -2123,16 +2114,14 @@ object Dedup {
     // 100 TB that leg joins a capped per-hash ref list with a driven
     // overflow report (the q223/q224 MaxBucketSize discipline).
     val dfSum = idx.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    // r17: bsel pinned (batch-sized distinct fingerprints, two consumers)
-    // and broadcast into both index joins — the probe side must never make
-    // the INDEX shuffle (the "only the batch moves" design, now hinted so
-    // the stats-less pin cannot fall back to a sort-merge join)
+    // two index joins read bsel; its measured size broadcasts it, so only
+    // the batch moves, never the INDEX
     val bsel = sel.select(col("doc_id"), col("sh")).distinct()
-      .localCheckpoint() // batch-sized distinct fingerprints
-    val hits = broadcast(bsel).join(dfSum, "sh")
+      .pin(SizedBy("batch")) // distinct fingerprints
+    val hits = bsel.join(dfSum, "sh")
       .groupBy(col("doc_id"))
       .agg(expr("cast(sum(df) as bigint)").as("n_hit_pairs"))
-      .join(broadcast(bsel).join(idx, "sh").groupBy(col("doc_id"))
+      .join(bsel.join(idx, "sh").groupBy(col("doc_id"))
         .agg(countDistinct(col("ref_id")).as("n_refs_hit")), "doc_id")
     sel.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
       .join(broadcast(hits), Seq("doc_id"), "left")
@@ -2236,7 +2225,7 @@ object Dedup {
                  j -> concat('fz', cast(doc_id as string), 'y', cast(j as string))), ' ')""")
           .as("text"),
         lit("fresh").as("kind"))
-    val batch = copies.unionByName(edits).unionByName(fresh).localCheckpoint() // batch-sized fixture
+    val batch = copies.unionByName(edits).unionByName(fresh).pin(SizedBy("batch")) // fixture
     val corpusHash = base
       .select(certifiedKey(col("text")).as("th"))
       .distinct()
@@ -2417,14 +2406,12 @@ object Dedup {
     val keys = Tables.orders(spark, d).select(col("o_orderkey").as("key"))
     val build = keys.filter(col("key") % 2 === 0)
     val probe = keys.filter(col("key") % 2 === 1)
-    // r17: both side counts in ONE scan, pinned — the r16 1-row geometry
-    // frame re-embedded the build scan under every crossJoin consumer
-    // (orders scanned 8x across the audit)
+    // both side counts in ONE scan
     val geom = keys.agg(
         expr("cast(count_if(key % 2 = 0) as bigint)").as("n_build"),
         expr("cast(count_if(key % 2 = 1) as bigint)").as("n_probe"))
       .withColumn("m_bits", col("n_build") * 8)
-      .localCheckpoint() // 1-row geometry frame (both position passes + readout)
+      .pin(Rows(1)) // geometry frame (both position passes + readout)
     val seeds = Q358Seeds.zipWithIndex
       .map { case ((a, b), i) => (i.toLong, a, b) }
       .toDF("hi", "ha", "hb")
@@ -2436,7 +2423,7 @@ object Dedup {
     val bits = positions(build).select(col("pos")).distinct()
       // the stored filter of a deployment (where it is the persisted
       // artifact); read by the probe semi-join and the set_bits readout
-      .localCheckpoint() // bit-population-sized (≤ m_bits dense longs; the persisted filter in a deployment)
+      .pin(SizedBy("bit-population")) // ≤ m_bits dense longs; the persisted filter in a deployment
     val present = positions(probe)
       .join(bits, Seq("pos"), "left_semi")
       .groupBy(col("key")).agg(count(lit(1)).as("n_present"))

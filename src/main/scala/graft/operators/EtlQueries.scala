@@ -1,6 +1,7 @@
 package graft.operators
 
 
+import graft.core.Pin._
 import graft.crypto.CryptoFunctions
 import graft.functions.TextKeys._
 import graft.sources.Tables
@@ -1660,7 +1661,7 @@ object EtlQueries {
     val cls = j.groupBy(col("cls"))
       .agg(count(lit(1)).as("n"),
         expr("cast(sum(cast(k % 1000000007 * (coalesce(sc, 0) % 1000000007) % 1000000007 as decimal(38,0))) as decimal(38,0))").as("ckp"))
-      .localCheckpoint() // 4-row class frame, read by counts + checksum
+      .pin(Rows(4)) // class frame, read by counts + checksum
     val ckApplied = cls.filter(col("cls") =!= "delete")
       .agg(expr("cast(sum(ckp) % 1000000007 as bigint)").as("ck"))
     val ckSrc = source.agg(expr(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -299,7 +300,7 @@ object EventAnalytics {
     * SLOWER than everything else combined) — and the neighbor VALUES come
     * back via two joins on (user, hour) against the sparse points table.
     * The points aggregate feeds four consumers (bounds, grid join, both
-    * value joins), so it is `localCheckpoint`ed once (~20k rows at sf0.1)
+    * value joins), so it is pinned once (~20k rows at sf0.1)
     * instead of re-aggregated four times — the q97 lineage-truncation
     * pattern; this took the query from 12 s to ~4 s. The grid is
     * generated from per-user bounds (q106's span-explode rule — never
@@ -325,7 +326,7 @@ object EventAnalytics {
         expr("cast(round(value * 100) as bigint)").as("vc"))
       .groupBy(col("user_id"), col("h"))
       .agg(expr("cast(sum(cast(vc as decimal(38,0))) as bigint)").as("v"))
-      .localCheckpoint() // user-hour-sized aggregate
+      .pin(SizedBy("user-hour")) // aggregate
     val grid = pts.groupBy(col("user_id"))
       .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
       .select(col("user_id"), explode(expr("sequence(h0, h1)")).as("h"))
@@ -709,7 +710,7 @@ object EventAnalytics {
       .filter(col("t") > col("t1"))
       .groupBy(col("user_id")).agg(min(col("t")).as("t2"), min(col("t1")).as("t1m"))
       .select(col("user_id"), (col("t2") - col("t1m")).as("lat_us"))
-      .localCheckpoint() // converting-users-sized latency frame (r17: BucketRank reads it twice; unpinned each read re-ran the two funnel joins — events x4)
+      .pin(SizedBy("converting-users")) // latency frame (r17: BucketRank reads it twice; unpinned each read re-ran the two funnel joins — events x4)
     BucketRank.select(p2.withColumn("__g", lit(1)), "__g",
         bucket = expr("lat_us div 1000000000"),
         ord = Seq(col("lat_us"), col("user_id")),
@@ -1702,7 +1703,7 @@ object EventAnalytics {
       .groupBy(col("user_id"), (col("user_id") % 2).as("arm"))
       .agg(expr("cast(sum(CASE WHEN d < c THEN cents ELSE 0 END) as bigint)").as("pre"),
         expr("cast(sum(CASE WHEN d >= c THEN cents ELSE 0 END) as bigint)").as("post"))
-      .localCheckpoint() // users-sized; moments and arm rollups derive from it
+      .pin(SizedBy("users")) // moments and arm rollups derive from it
     val th = u.agg(
         count(lit(1)).as("n"),
         expr("cast(sum(cast(pre as decimal(38,0))) as bigint)").as("sp"),
@@ -2029,7 +2030,7 @@ object EventAnalytics {
       .filter(col("event_type") === "purchase")
       .groupBy(expr("datediff(date_trunc('DAY', ts), DATE '2024-01-01')").as("day"))
       .agg(expr("cast(sum(cast(round(value * 100) as bigint)) as bigint)").as("rc"))
-      .localCheckpoint() // day-sized; pairs, ranks, and moments all read it
+      .pin(SizedBy("day")) // pairs, ranks, and moments all read it
     val a = daily.select(col("day").as("d1"), col("rc").as("c1"))
     val b = daily.select(col("day").as("d2"), col("rc").as("c2"))
     val pairs = a.join(b, col("d1") < col("d2"))
@@ -2141,15 +2142,14 @@ object EventAnalytics {
     * exact overlap still emit (left join from the type-pair frame).
     */
   def q271AudienceOverlap(spark: SparkSession, d: String): DataFrame = {
-    // r17: ua pinned (|users|×|types|-sized, the q407 class) — the
-    // per-type rollup and both self-join sides each re-ran the corpus
-    // distinct (events x4 before); perType pinned (|types| rows, 2 sides)
+    // ua is read by the per-type rollup and both self-join sides, perType
+    // by two
     val ua = Tables.events(spark, d)
       .select(col("event_type"), col("user_id")).distinct()
-      .localCheckpoint() // |users|x|types|-sized distinct audience frame
+      .pin(SizedBy("|users|x|types|")) // distinct audience frame
     val perType = ua.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), expr("hll_sketch_agg(user_id, 12)").as("sk"))
-      .localCheckpoint() // |types|-row sketch frame
+      .pin(SizedBy("|types|")) // sketch frame
     val exact = ua.as("a").join(ua.as("b"),
         col("a.user_id") === col("b.user_id") &&
           col("a.event_type") < col("b.event_type"))
@@ -2210,9 +2210,7 @@ object EventAnalytics {
   def q304Pagerank(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    // the K²-row edge frame and K-row node frame feed every iteration —
-    // pin both (config-sized, the q298 rule) so the events scan that
-    // aggregates transitions runs once, not once per power iteration
+    // the K²-row edge frame and K-row node frame feed every iteration
     val edges = Tables.events(spark, d)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type").as("src"))
@@ -2220,12 +2218,12 @@ object EventAnalytics {
       .filter(col("dst").isNotNull)
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // K^2-sized transition counts
+      .pin(SizedBy("K^2")) // transition counts
     val nodes = Tables.events(spark, d).select(col("event_type").as("node"))
-      .distinct().localCheckpoint() // K-sized node list
+      .distinct().pin(SizedBy("K")) // node list
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
     val tot = edges.groupBy(col("src")).agg(expr("cast(sum(n) as bigint)").as("tot"))
-      .localCheckpoint() // K-sized out-degree frame (read by every iteration)
+      .pin(SizedBy("K")) // out-degree frame (read by every iteration)
     val r0 = nodes.crossJoin(broadcast(nn))
       .select(col("node"), expr("cast(1000000000000 div n_nodes as bigint)").as("r"))
     // r17: each iterate is pinned — the foldLeft otherwise chains iteration
@@ -2235,7 +2233,7 @@ object EventAnalytics {
     val rFinal = (1 to 3).foldLeft(r0) { (rank, _) =>
       val inflow = edges
         .join(broadcast(rank.withColumnRenamed("node", "src")), "src")
-        .join(broadcast(tot), "src")
+        .join(tot, "src")
         .withColumn("c", expr("(85 * ((r * n) div tot)) div 100"))
         .groupBy(col("dst").as("node"))
         .agg(expr("cast(sum(c) as bigint)").as("inflow"))
@@ -2244,10 +2242,10 @@ object EventAnalytics {
         .crossJoin(broadcast(nn))
         .select(col("node"), expr(
           "cast((1000000000000 * 15) div (100 * n_nodes) + inflow as bigint)").as("r"))
-        .localCheckpoint() // K-sized rank iterate
+        .pin(SizedBy("K")) // rank iterate
     }
     val wr = Window.orderBy(col("r").desc, col("node").asc) // |nodes|-sized rank frame (event-type graph)
-    rFinal.join(broadcast(tot.withColumnRenamed("src", "node")), Seq("node"), "left")
+    rFinal.join(tot.withColumnRenamed("src", "node"), Seq("node"), "left")
       .na.fill(0L, Seq("tot"))
       .select(col("node"), col("tot").as("out_transitions"),
         col("r").as("pr_pico"),
@@ -2426,7 +2424,7 @@ object EventAnalytics {
         when(col("nxt").isNotNull, datediff(col("nxt"), col("dd")))
           .otherwise(datediff(col("md"), col("dd"))).cast("long").as("t"),
         col("nxt").isNotNull.as("death"))
-      .localCheckpoint() // order-count-sized narrow (t, death) intervals (r17: the totals and by-t rollups each re-ran the window pass — orders x4)
+      .pin(SizedBy("order-count")) // narrow (t, death) intervals (r17: the totals and by-t rollups each re-ran the window pass — orders x4)
     val tot = iv.agg(count(lit(1)).as("n_intervals"),
       expr("cast(count_if(NOT death) as bigint)").as("n_censored"))
     val byT = iv.groupBy(col("t")).agg(count(lit(1)).as("c_all"),
@@ -2606,7 +2604,7 @@ object EventAnalytics {
     val daily = Tables.events(spark, d)
       .groupBy(expr("CAST(ts AS DATE)").as("day"))
       .agg(count(lit(1)).as("x"))
-      .localCheckpoint() // |days|-sized daily frame, both join sides
+      .pin(SizedBy("|days|")) // daily frame, both join sides
     val lags = spark.range(1, 15).select(col("id").as("lag"))
     val a = daily.select(col("day"), col("x").as("xa"))
     val b = daily.select(col("day").as("day2"), col("x").as("xb"))
@@ -2733,7 +2731,7 @@ object EventAnalytics {
     val byType = flagged.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         expr("cast(sum(inv) as bigint)").as("n_inversions"))
-      .localCheckpoint() // |types|-sized rollup, read by totals + final join
+      .pin(SizedBy("|types|")) // rollup, read by totals + final join
     val g = byType.agg(expr("cast(sum(n_events) as bigint)").as("tn"),
       expr("cast(sum(n_inversions) as bigint)").as("ti"))
     byType.crossJoin(broadcast(g)) // 1-row global totals
@@ -2782,7 +2780,7 @@ object EventAnalytics {
       .groupBy(col("user_id"), col("event_type"))
       .agg(expr("min(unix_micros(ts))").as("s"),
         expr("max(unix_micros(ts))").as("e"))
-      .localCheckpoint() // |users|x|types|-sized span frame, both join sides
+      .pin(SizedBy("|users|x|types|")) // span frame, both join sides
     val a = iv.select(col("user_id"), col("event_type").as("ta"),
       col("s").as("s1"), col("e").as("e1"))
     val b = iv.select(col("user_id"), col("event_type").as("tb"),
@@ -2861,9 +2859,9 @@ object EventAnalytics {
       .select(col("c_mktsegment").as("seg"),
         expr("cast(round(c_acctbal * 100) as bigint)").as("x"))
     val cs = cust.groupBy(col("x"), col("seg")).agg(count(lit(1)).as("cg"))
-      .localCheckpoint() // value-domain-sized (≤1.1M cent values × 5 segs)
+      .pin(SizedBy("value-domain")) // ≤1.1M cent values × 5 segs
     val xcnt = cs.groupBy(col("x")).agg(expr("cast(sum(cg) as bigint)").as("c"))
-      .localCheckpoint() // value-domain-sized (≤1.1M distinct cent values)
+      .pin(SizedBy("value-domain")) // ≤1.1M distinct cent values
     val off = xcnt.withColumn("b", expr("x div 10000"))
       .groupBy(col("b")).agg(expr("cast(sum(c) as bigint)").as("bc"))
       .withColumn("boff", expr("cast(coalesce(sum(bc) OVER (ORDER BY b ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as bigint)"))
@@ -2874,15 +2872,14 @@ object EventAnalytics {
       .join(broadcast(off), "b")
       .withColumn("cum", sum(col("c")).over(wx))
       .select(col("x"), expr("2 * (boff + cum - c + 1) + c - 1").as("r2"))
-    // r17: broadcast(rank2) — the rank frame is cents-domain-bounded at any
-    // corpus size (the q402 rule), so the per-value count frame never
-    // shuffles on x; perSeg pinned (5 rows) — the H aggregate and the final
-    // readout each re-embedded the whole rank-join lineage before
+    // the rank frame is cents-domain-bounded at any corpus size (the q402
+    // rule), so the per-value count frame never shuffles on x; perSeg is
+    // read by the H aggregate and the final readout
     val perSeg = cs.join(broadcast(rank2), "x")
       .groupBy(col("seg"))
       .agg(expr("cast(sum(cg) as bigint)").as("n_g"),
         expr("cast(sum(cast(cg as decimal(38,0)) * r2) as decimal(38,0))").as("r2s"))
-      .localCheckpoint() // 5 rows (one per market segment)
+      .pin(Rows(5)) // one per market segment
     val ties = xcnt.agg(
       expr("cast(sum(c) as bigint)").as("n"),
       expr("cast(sum(cast(c as decimal(38,0)) * c * c - c) as decimal(38,0))").as("t3"))
@@ -2947,7 +2944,7 @@ object EventAnalytics {
     val daily = Tables.events(spark, d)
       .groupBy(col("event_type"), expr("CAST(ts AS DATE)").as("day"))
       .agg(count(lit(1)).as("x"))
-      .localCheckpoint() // |days|x|types|-sized daily frame, read twice
+      .pin(SizedBy("|days|x|types|")) // daily frame, read twice
     val a = daily.select(col("event_type").as("ta"), col("day"), col("x").as("xa"))
     val b = daily.select(col("event_type").as("tb"), col("day"), col("x").as("xb"))
     a.join(b, "day").filter(col("ta") < col("tb"))
@@ -3146,11 +3143,11 @@ object EventAnalytics {
         expr("max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)").as("conv"))
     val m = users.filter(col("conv") === 1)
       .groupBy(col("mask")).agg(count(lit(1)).as("cm"))
-      .localCheckpoint() // 16-row converted-mask frame, read by the lattice
+      .pin(Rows(16)) // converted-mask frame, read by the lattice
     val sets = spark.range(16).select(col("id").as("s"))
     val v = sets.join(m, expr("(mask & ~s) & 15 = 0"), "left")
       .groupBy(col("s")).agg(expr("cast(coalesce(sum(cm), 0) as bigint)").as("v"))
-      .localCheckpoint() // 16-row coalition-value table, read 3 times
+      .pin(Rows(16)) // coalition-value table, read 3 times
     val chans = spark.range(4)
       .select(col("id").as("ci"), expr("shiftleft(1L, cast(id as int))").as("cbit"),
         expr("element_at(array('click','view','signup','error'), cast(id + 1 as int))").as("channel"))
@@ -3227,10 +3224,10 @@ object EventAnalytics {
         "o_custkey")
     val g = spend.groupBy(col("nat"))
       .agg(count(lit(1)).as("n_g"), expr("cast(sum(x) as bigint)").as("x_g"))
-      .localCheckpoint() // |nations|-row group frame, read by 3 terms
+      .pin(SizedBy("|nations|")) // group frame, read by 3 terms
     val tot = g.agg(expr("cast(sum(n_g) as bigint)").as("nn"),
       expr("cast(sum(x_g) as bigint)").as("xx"))
-    val within = spend.join(broadcast(g), "nat")
+    val within = spend.join(g, "nat")
       .withColumn("lq", expr(
         "CAST(round(ln(CAST(x AS DOUBLE) * n_g / CAST(x_g AS DOUBLE)) * 1000000) AS BIGINT)"))
       .groupBy(col("nat"))
@@ -3239,7 +3236,7 @@ object EventAnalytics {
       .withColumn("lb", expr(
         "CAST(round(ln(CAST(x_g AS DOUBLE) * nn / (CAST(xx AS DOUBLE) * n_g)) * 1000000) AS BIGINT)"))
       .withColumn("tb_g", expr("cast(cast(x_g as decimal(38,0)) * lb as decimal(38,0))"))
-      .localCheckpoint() // |nations|-row term frame, read by rows + totals
+      .pin(SizedBy("|nations|")) // term frame, read by rows + totals
     val totalT = spend.crossJoin(broadcast(tot))
       .withColumn("lq", expr(
         "CAST(round(ln(CAST(x AS DOUBLE) * nn / CAST(xx AS DOUBLE)) * 1000000) AS BIGINT)"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.sources.Tables
 
 import org.apache.spark.sql.functions._
@@ -179,7 +180,7 @@ object Linkage {
       .select(col("bucket"), col("off"))
     val ranked = local.join(broadcast(offsets), Seq("bucket"))
       .select(col("id"), col("name"), (col("off") + col("rn")).as("gr"))
-      .localCheckpoint() // customer-count-sized narrow rank frame (r17: both adjacency-join sides re-ran the two-phase rank unpinned — customer x4)
+      .pin(SizedBy("customer-count")) // narrow rank frame (r17: both adjacency-join sides re-ran the two-phase rank unpinned — customer x4)
     // each record targets its two successor ranks via ONE exploded
     // equi-join (a union of per-offset joins would re-embed the rank
     // lineage once per offset — the scan-ceiling test caught exactly that)

@@ -160,9 +160,7 @@ object Multimodal {
     * fixed offsets for canonical files), zero codec dependencies.
     */
   def parseWavHeader(docId: Long, bytes: Array[Byte]): Option[AudioMeta] =
-    Wav.probe(bytes).map { p =>
-      val frameBits = p.channels * p.bitsPerSample
-      val nSamples = if (frameBits == 0) 0L else p.dataSize / (frameBits / 8)
+    for (p <- Wav.probe(bytes); nSamples <- p.frames) yield {
       val durationMs = if (p.sampleRate == 0) 0L else nSamples * 1000L / p.sampleRate
       AudioMeta(docId, bytes.length.toLong, p.sampleRate, p.channels, nSamples,
         durationMs, "audio/wav")

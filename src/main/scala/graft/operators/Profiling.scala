@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.functions.TextKeys._
 import graft.sources.Tables
 
@@ -173,12 +174,10 @@ object Profiling {
     val local = o.withColumn("__local_rank",
       row_number().over(Window.partitionBy(col("__bucket"))
         .orderBy(col("o_totalprice"), col("o_orderkey"))).cast("long"))
-    // r17: bucket counts pinned — offsets AND the global row count derive
-    // from the same tiny frame, so the third orders scan (a bare count)
-    // drops out (orders 3 → 2 scans, the two-phase floor)
+    // offsets AND the global row count derive from the bucket counts
     val bcnt = o.groupBy(col("__bucket"))
       .agg(count(lit(1)).as("__bucket_n"))
-      .localCheckpoint() // bucket-summary-sized counts
+      .pin(SizedBy("bucket-summary")) // counts
     val offsets = bcnt
       .withColumn("__offset",
         coalesce(sum(col("__bucket_n")).over(Window.orderBy(col("__bucket")) // bucket-summary-sized offsets frame
@@ -544,12 +543,10 @@ object Profiling {
         .groupBy(col("g"))
         .agg(min(ord).as(out),
           (min(col("__n")).as("n") +: carry.map(c => min(col(c)).as(c))): _*)
-    // the 3-row median frame is referenced through `dev` on BOTH sides of
-    // the MAD selection (bucket counts + rank join); localCheckpoint pins
-    // it so its two corpus passes run once, not once per re-embed — total
-    // corpus passes stay at 5 (2 med + 2 MAD + 1 classify), all parallel
-    val med = pickMiddle(x, col("c"), "m").localCheckpoint() // 3-row median frame (note above)
-    val dev = x.join(broadcast(med.select(col("g"), col("m"))), Seq("g"))
+    // the 3-row median frame is read through `dev` on BOTH sides of the
+    // MAD selection (bucket counts + rank join)
+    val med = pickMiddle(x, col("c"), "m").pin(Rows(3))
+    val dev = x.join(med.select(col("g"), col("m")), Seq("g"))
       .withColumn("dev", abs(col("c") - col("m")))
     val mad = pickMiddle(dev, col("dev"), "mad", carry = Seq("m"))
     x.join(broadcast(mad), Seq("g"))
@@ -758,7 +755,7 @@ object Profiling {
         expr("CAST(floor(c_acctbal / 1000) AS BIGINT)").as("bal_band"))
       .groupBy(col("c_nationkey"), col("bal_band"))
       .agg(count(lit(1)).as("n"), countDistinct(col("c_mktsegment")).as("l"))
-      .localCheckpoint() // QI-group-sized; read by totals + k-level risk
+      .pin(SizedBy("QI-group")) // read by totals + k-level risk
     val tot = g.agg(expr("cast(sum(n) as bigint)").as("n_rows"),
       count(lit(1)).as("n_groups"),
       expr("cast(min(n) as bigint)").as("min_group_size"),
@@ -878,7 +875,7 @@ object Profiling {
         size(words(col("text"))).cast("bigint").as("nt"),
         col("n_chars").cast("long").as("nc"),
         internalKey(col("text")).as("th"))
-      .localCheckpoint() // doc-count-sized narrow (5 longs/row)
+      .pin(SizedBy("doc-count")) // narrow (5 longs/row)
     val m1 = per.agg(
       count(lit(1)).as("n_docs"),
       expr("cast(sum(nt) as bigint)").as("n_tokens"),
@@ -979,11 +976,10 @@ object Profiling {
     import org.apache.spark.sql.expressions.Window
     val binned = Tables.documents(spark, d)
       .select(col("source"), expr("least(n_chars div 256, 15)").as("bin"))
-    // r17: the corpus-wide histogram and total are rollups of the finest
-    // (source, bin) cube — pin it once and derive them (documents 4 → 1
-    // scans; the cube is |sources|×16 regardless of corpus size)
+    // the corpus-wide histogram and total are rollups of the (source, bin)
+    // cube
     val perSrc = binned.groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // |sources|×16-sized count cube
+      .pin(SizedBy("|sources|×16")) // count cube
     val srcTot = perSrc.groupBy(col("source")).agg(expr("cast(sum(c) as bigint)").as("n_docs"))
     val corpus = perSrc.groupBy(col("bin")).agg(expr("cast(sum(c) as bigint)").as("cc"))
     val tot = perSrc.agg(expr("cast(sum(c) as bigint)").as("nn"))
@@ -1339,16 +1335,13 @@ object Profiling {
     * riding every row. Full oracle.
     */
   def q380SeasonalIndex(spark: SparkSession, d: String): DataFrame = {
-    // r17: daily pinned (|days|-sized, the q343 argument) — three
-    // consumers each re-ran the orders rollup (orders x5 before); idx
-    // pinned (7 rows) — its extremes aggregate and the day join each
-    // re-embedded both rollups
+    // daily has three consumers; idx two (its extremes and the day join)
     val daily = Tables.orders(spark, d)
       .select(expr("CAST(o_orderdate AS DATE)").as("day"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
       .groupBy(col("day")).agg(expr("cast(sum(cents) as bigint)").as("rev"))
       .withColumn("wd", expr("cast(dayofweek(day) - 1 as bigint)"))
-      .localCheckpoint() // |days|-sized daily revenue frame
+      .pin(SizedBy("|days|")) // daily revenue frame
     val wdAgg = daily.groupBy(col("wd")).agg(count(lit(1)).as("n_w"),
       expr("cast(sum(rev) as bigint)").as("s_w"))
     val tot = daily.agg(count(lit(1)).as("n_days"),
@@ -1356,10 +1349,10 @@ object Profiling {
     val idx = wdAgg.crossJoin(broadcast(tot)) // 1-row corpus totals
       .withColumn("idx_ppm", expr(
         "CAST(CAST(s_w AS DECIMAL(38,0)) * n_days * 1000000 div (CAST(n_w AS DECIMAL(38,0)) * s_tot) AS BIGINT)"))
-      .localCheckpoint() // 7 rows (weekday indexes)
+      .pin(Rows(7)) // weekday indexes
     val iex = idx.agg(expr("cast(max(idx_ppm) as bigint)").as("max_idx_ppm"),
       expr("cast(min(idx_ppm) as bigint)").as("min_idx_ppm"))
-    daily.join(broadcast(idx.select(col("wd"), col("n_w"), col("s_w"), col("idx_ppm"))), "wd")
+    daily.join(idx.select(col("wd"), col("n_w"), col("s_w"), col("idx_ppm")), "wd")
       .withColumn("ratio_ppm", expr(
         "CAST(CAST(rev AS DECIMAL(38,0)) * n_w * 1000000 div s_w AS BIGINT)"))
       .crossJoin(broadcast(iex)) // 1-row index extremes
@@ -1469,13 +1462,11 @@ object Profiling {
     val rows = Tables.customer(spark, d)
       .select(col("c_nationkey"), col("c_mktsegment"),
         expr("CAST(floor(c_acctbal / 1000) AS BIGINT)").as("bal_band"))
-    // r17: the segment totals, group sizes, and corpus total are all
-    // rollups of the finest (QI-group × segment) count cube — pin it once
-    // and derive the other three (customer 8 → 1 scans); t pinned
-    // (QI-group-sized) for its two consumers
+    // the segment totals, group sizes and corpus total are rollups of the
+    // (QI-group × segment) count cube; t has two consumers
     val cnt = rows.groupBy(col("c_nationkey"), col("bal_band"), col("c_mktsegment"))
       .agg(count(lit(1)).as("c_gs"))
-      .localCheckpoint() // QI-group×segment-sized count cube
+      .pin(SizedBy("QI-group×segment")) // count cube
     val segs = cnt.groupBy(col("c_mktsegment"))
       .agg(expr("cast(sum(c_gs) as bigint)").as("c_s"))
     val grps = cnt.groupBy(col("c_nationkey"), col("bal_band"))
@@ -1490,7 +1481,7 @@ object Profiling {
         expr("""CAST(sum(abs(CAST(c_gs AS DECIMAL(38,0)) * nn - CAST(c_s AS DECIMAL(38,0)) * n_g)) * 1000000
                div (2 * CAST(max(n_g) AS DECIMAL(38,0)) * max(nn)) AS BIGINT)""")
           .as("t_ppm"))
-      .localCheckpoint() // QI-group-sized t frame
+      .pin(SizedBy("QI-group")) // t frame
     val mx = t.agg(expr("cast(max(t_ppm) as bigint)").as("t_max_ppm"),
       count(lit(1)).as("n_groups"))
     t.crossJoin(broadcast(mx)) // 1-row verdict
@@ -1548,10 +1539,8 @@ object Profiling {
     */
   def q397HllIntersection(spark: SparkSession, d: String): DataFrame = {
     val srcs = Seq("src0", "src1", "src2", "src3")
-    // r17: ONE shingle pass — the register build is duplicate-insensitive
-    // (per-bucket max), so it derives from the distinct (source, md) sets
-    // the exact audit side materializes anyway; the second corpus
-    // explode+md5 pass drops out (documents 2 → 1 scans)
+    // ONE shingle pass: the registers are duplicate-insensitive (per-bucket
+    // max), so they derive from the exact audit's distinct (source, md) sets
     val hv = Tables.documents(spark, d)
       .filter(col("source").isin(srcs: _*))
       .select(col("source"), explode(expr(
@@ -1559,12 +1548,12 @@ object Profiling {
            THEN transform(sequence(1, length(text) - 7, 4), i -> substring(text, i, 8))
            ELSE array() END""")).as("s"))
       .select(col("source"), expr("md5(s)").as("md")).distinct()
-      .localCheckpoint() // shingle-set-sized: the audit's exact distinct sets
+      .pin(SizedBy("shingle-set")) // the audit's exact distinct sets
     val sh = hv.select(col("source"),
         expr("CAST(conv(substring(md, 1, 2), 16, 10) AS BIGINT) % 64").as("bucket"),
         expr("CAST(61 - length(bin(CAST(conv(substring(md, 3, 15), 16, 10) AS BIGINT))) AS BIGINT)").as("rank"))
     val regs = sh.groupBy(col("source"), col("bucket")).agg(max(col("rank")).as("reg"))
-      .localCheckpoint() // 4x64-row register frame, read by 3 estimates
+      .pin(Rows(256, "4x64")) // register frame, read by 3 estimates
     import spark.implicits._
     val pairs = Seq(("src0", "src1"), ("src0", "src2"), ("src1", "src2"),
       ("src0", "src3")).toDF("sa", "sb")
@@ -1692,20 +1681,18 @@ object Profiling {
     val oc = Tables.orders(spark, d)
       .groupBy(col("o_custkey").as("c_custkey"))
       .agg(count(lit(1)).as("y"))
-    // r17: pinned (was a `def` — three consumers each re-ran the customer
-    // scan + orders rollup join); customer-count-sized narrow (3 longs/row),
-    // the feature-pin class
+    // three consumers read it
     val base = Tables.customer(spark, d)
       .select(col("c_custkey"), expr("cast(round(c_acctbal * 100) as bigint)").as("x"))
       .join(oc, Seq("c_custkey"), "left")
       .na.fill(0L, Seq("y"))
-      .localCheckpoint() // customer-count-sized narrow (3 longs/row)
+      .pin(SizedBy("customer-count")) // narrow (3 longs/row)
     // per-value count frames: x is bounded by the cents domain, y by the
     // max per-customer order count — both corpus-size-independent
     val xcnt = base.groupBy(col("x")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // value-domain-sized (≤1.1M distinct cent values at any SF)
+      .pin(SizedBy("value-domain")) // ≤1.1M distinct cent values at any SF
     val ycnt = base.groupBy(col("y")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // value-domain-sized (≤ max orders/customer rows)
+      .pin(SizedBy("value-domain")) // ≤ max orders/customer rows
     // two-phase min-rank over x: bucket totals (≤1,100 rows) → offsets →
     // within-bucket running count; never a global ORDER BY window
     val xb = xcnt.withColumn("b", expr("x div 10000"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.sources.Tables
 
 import org.apache.spark.sql.expressions.Window
@@ -1071,18 +1072,14 @@ object Relational {
     */
   def q161RfmSegmentation(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r17: pinned — the r16 foldLeft threaded each quintile through the
-    // next, and quintile2 reads its input twice (local ranks + bucket
-    // offsets), so the per-customer subtree re-embedded 2^3 = 8 times
-    // (orders scanned 8x, 23 exchanges). The three quintiles are
-    // independent functions of this frame; rank each against the pin and
-    // join the three (custkey, quintile) columns back.
+    // each quintile ranks independently against this frame (quintile2
+    // reads its input twice); the three (custkey, quintile) columns join back
     val per = Tables.orders(spark, d)
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("n_orders"),
         expr("cast(sum(cast(round(o_totalprice * 100) as bigint)) as bigint)").as("spend_c"))
-      .localCheckpoint() // customer-population-sized aggregate, read by all three quintile branches
+      .pin(SizedBy("customer-population")) // aggregate, read by all three quintile branches
     // Round 13: each quintile was ntile(5) over an UNPARTITIONED window —
     // the whole per-customer frame through one task. Now the two-phase
     // form (q199/BucketRank pattern): bucket sorts consistently with the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.functions.TextKeys._
 import graft.sources.Tables
 
@@ -291,16 +292,13 @@ object Sampling {
     // per-language targets from exactly-summed sqrt weights
     val c = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       .withColumn("w", expr("CAST(sqrt(CAST(n AS DOUBLE)) AS DECIMAL(25,15))"))
-    // the 5-row target frame and the ≤(langs × buckets)-row offset frame
-    // are each referenced from several branches below; localCheckpoint pins
-    // them (the q176 rule) so their corpus passes run once, not per
-    // re-embed — 4 parallel corpus passes total
+    // the target and offset frames are each read by several branches below
     val tgt = c
       .crossJoin(broadcast(c.agg(expr("sum(w)").as("wtot"))))
       .withColumn("target", expr(
         s"CAST(floor($Q227Budget.0 * CAST(w AS DOUBLE) / CAST(wtot AS DOUBLE)) AS BIGINT)"))
       .select(col("lang"), col("n"), col("target"))
-      .localCheckpoint() // languages-sized target frame
+      .pin(SizedBy("languages")) // target frame
     // bucket offsets in hash order, per language — a compact frame
     val off = docs.groupBy(col("lang"), col("b")).agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
@@ -308,8 +306,8 @@ object Sampling {
           .partitionBy(col("lang")).orderBy(col("b"))
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
         lit(0L)))
-      .join(broadcast(tgt.select(col("lang"), col("target"))), Seq("lang"))
-      .localCheckpoint() // (lang, bucket)-sized offsets
+      .join(tgt.select(col("lang"), col("target")), Seq("lang"))
+      .pin(SizedBy("(lang, bucket)")) // offsets
     val whole = off.filter(col("off") + col("cnt") <= col("target"))
       .select(col("lang"), col("b"))
     val crossing = off.filter(col("off") < col("target") &&
@@ -385,7 +383,7 @@ object Sampling {
       .groupBy(col("user_id"), col("split"))
       .agg(count(lit(1)).as("ne"),
         expr("cast(count_if(event_type = 'purchase') as bigint)").as("np"))
-      .localCheckpoint() // users × 2 rows; every readout below derives from it
+      .pin(SizedBy("users × 2")) // every readout below derives from it
     val hist = us.groupBy(col("user_id"))
       .agg(max(when(col("split") === "train", 1).otherwise(0)).as("has_train"))
     us.join(hist, "user_id")
@@ -492,7 +490,7 @@ object Sampling {
     val counts = Tables.documents(spark, d)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint() // stratum-sized count frame: every later step derives from it
+      .pin(SizedBy("stratum")) // count frame: every later step derives from it
     val total = counts.agg(sum(col("n_docs")).as("t"))
     counts.crossJoin(broadcast(total))
       .withColumn("base", expr(s"($QuotaTotal * n_docs) div t"))
@@ -602,10 +600,9 @@ object Sampling {
     */
   def q261SplitContamination(spark: SparkSession, d: String): DataFrame = {
     val corpus = Dedup.q97Corpus(spark, d)
-    // r17: pinned — both self-join sides re-ran the corpus tokenize+shingle
-    // pass (documents x6 with the fold probes); the q311 pin class
+    // both self-join sides read it
     val sh = Dedup.shingles3(corpus)
-      .localCheckpoint() // doc×gram-sized shingle frame
+      .pin(SizedBy("doc×gram")) // shingle frame
     val pairs = sh.as("a").join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -657,14 +654,12 @@ object Sampling {
     */
   def q298MixtureSweep(spark: SparkSession, d: String): DataFrame = {
     // the languages-sized aggregate feeds both the weight rows and the
-    // per-τ totals — pin it (the q176/q227 rule) so the corpus pass runs
-    // once, not once per re-embed; single-job scope is fine for a 5-row
-    // frame that exists only inside this query
+    // per-τ totals
     val c = Tables.documents(spark, d)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(words(col("text")))).cast("bigint").as("n_tokens"))
-      .localCheckpoint() // languages-sized (5 rows)
+      .pin(SizedBy("languages")) // 5 rows
     val w = c.select(col("lang"), col("n_docs"), col("n_tokens"),
         explode(expr("array(1000, 500, 250, 0)")).as("tau_milli"))
       .withColumn("w_micro", expr(
@@ -792,7 +787,7 @@ object Sampling {
       .agg(expr("cast(sum(n_tok) as bigint)").as("bsum"))
       .withColumn("off", coalesce(sum(col("bsum")).over(wB), lit(0L)))
       .select(col("bucket"), col("off"))
-      .localCheckpoint() // bucket-sized (≤2^20 rows by construction); read by the totals AND detail legs
+      .pin(SizedBy("bucket")) // (≤2^20 rows by construction); read by the totals AND detail legs
     val wLocal = Window.partitionBy(col("bucket"))
       .orderBy(col("h"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -995,12 +990,12 @@ object Sampling {
     */
   def q361MixingRuns(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r17: pinned — three consumers (inner starts, bucket endpoints, the
-    // per-source rollup) each re-ran the scan + md5 pass (documents x4)
+    // read by the inner starts, the bucket endpoints and the per-source
+    // rollup
     val base = Tables.documents(spark, d).select(col("doc_id"), col("source"))
       .withColumn("h", certifiedKey(concat(lit("mix#"), col("doc_id").cast("string"))))
       .withColumn("b", expr("h div 1099511627776")) // 2^40: ≤ 2^20 buckets
-      .localCheckpoint() // doc-count-sized narrow (id, source, hash)
+      .pin(SizedBy("doc-count")) // narrow (id, source, hash)
     val wB = Window.partitionBy(col("b")).orderBy(col("h"), col("doc_id"))
     // starts visible INSIDE a bucket (predecessor in the same bucket)
     val inner = base.withColumn("prev", lag(col("source"), 1).over(wB))
@@ -1019,7 +1014,7 @@ object Sampling {
       .join(inner, Seq("source"), "left").na.fill(0L, Seq("inner_starts"))
       .join(bucketStarts, Seq("source"), "left").na.fill(0L, Seq("first_starts"))
       .withColumn("n_runs", col("inner_starts") + col("first_starts"))
-      .localCheckpoint() // |sources|-row rollup (read by itself + its total)
+      .pin(SizedBy("|sources|")) // rollup (read by itself + its total)
     perSource
       .crossJoin(broadcast(perSource.agg(expr("cast(sum(n_docs) as bigint)").as("nn")))) // 1-row total
       .withColumn("exp_runs_micro", expr(

@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.functions.TextKeys._
 import graft.sources.Tables
 
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -487,7 +489,7 @@ object Similarity {
     * sit in one planted cluster, collapsing recall — Round6Spec shows it);
     * 2 trained rounds spread the centroids to the cluster structure while
     * staying bit-reproducible (exact-decimal means, argmax ties by cid).
-    * Each round's ≤K-row result is localCheckpoint-pinned so the training
+    * Each round's ≤K-row result is pinned so the training
     * lineage executes once per round — downstream references (assignment,
     * probe ranking) read the K-row table, not a re-derivation; at 100 TB
     * each round is one parallel corpus pass (K-row broadcast argmax +
@@ -498,7 +500,7 @@ object Similarity {
   def trainedCentroids(emb: DataFrame, rounds: Int = IvfTrainRounds,
                        k: Int = IvfK): DataFrame =
     (0 until rounds).foldLeft(seedCentroids(emb, k)) {
-      (cent, _) => kmeansIteration(emb, cent).localCheckpoint() // K rows per training round
+      (cent, _) => kmeansIteration(emb, cent).pin(SizedBy("K")) // per training round
     }
 
   /** One Lloyd (k-means) iteration at cluster scale: assign (K-row
@@ -820,6 +822,31 @@ object Similarity {
               c.ce[1] AS c0, c.ce[33] AS c32
        FROM m JOIN cent$IvfTrainRounds c ON c.cid = m.cid ORDER BY m.cid"""
 
+  /** The evaluation prelude of q241, q416 and q322: the 10-query sample
+    * off the stored assignment table (pinned: ground truth, the probe
+    * ranking and the candidate search all read it), the exact ranking
+    * window `wq` (quantized cosine, vec_id tie-break), every other vector
+    * scored against every query, and the brute-force top-10 per query.
+    */
+  private final case class IvfEval(queries: DataFrame, wq: WindowSpec,
+                                   scored: DataFrame, bftop: DataFrame)
+
+  private def ivfEval(spark: SparkSession, assigned: DataFrame): IvfEval = {
+    val queries = assigned.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("ed").as("qe"))
+      .pin(Rows(10)) // read by three consumers
+    val wq = Window.partitionBy(col("qid"))
+      .orderBy(col("cos_u").desc, col("vec_id").asc)
+    val scored = assigned.select(col("vec_id"), col("ed"))
+      .crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("cos", cosineCols(spark, "ed", "qe"))
+      .withColumn("cos_u", expr("cast(round(cos * 1000000) as bigint)"))
+    val bftop = scored.withColumn("rn", row_number().over(wq))
+      .filter(col("rn") <= 10).select(col("qid"), col("vec_id"))
+    IvfEval(queries, wq, scored, bftop)
+  }
+
   // ---------------------------------------------------------------- q241
   /** IVF index RECALL@k evaluation — the index-quality gate that decides
     * nprobe/K before anyone serves a query from the stored lists: for a
@@ -843,24 +870,12 @@ object Similarity {
     * all come from the stored assignment table.
     */
   def q241IvfRecall(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cent = ivfCentroidTable(spark, d)
     val assigned = ivfAssignTable(spark, d)
-    val queries = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("ed").as("qe"))
-      .localCheckpoint() // 10 rows, read by three consumers
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_u").desc, col("vec_id").asc)
-    val scored = assigned.select(col("vec_id"), col("ed"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", cosineCols(spark, "ed", "qe"))
-      .withColumn("cos_u", expr("cast(round(cos * 1000000) as bigint)"))
-    val bftop = scored.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10).select(col("qid"), col("vec_id"))
+    val IvfEval(queries, wq, _, bftop) = ivfEval(spark, assigned)
     val wp = Window.partitionBy(col("qid"))
       .orderBy(col("sim_u").desc, col("cid").asc)
-    val probes = cent.crossJoin(broadcast(queries))
+    val probes = cent.crossJoin(queries)
       .withColumn("sim", cosineCols(spark, "ce", "qe"))
       .withColumn("sim_u", expr("cast(round(sim * 1000000) as bigint)"))
       .withColumn("rn", row_number().over(wp))
@@ -898,19 +913,9 @@ object Similarity {
     * the sweep, and both rankings.
     */
   def q416NprobeCurve(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cent = ivfCentroidTable(spark, d)
     val assigned = ivfAssignTable(spark, d)
-    val queries = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("ed").as("qe"))
-      .localCheckpoint() // 10 rows, read by three consumers
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_u").desc, col("vec_id").asc)
-    val scored = assigned.select(col("vec_id"), col("ed"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", cosineCols(spark, "ed", "qe"))
-      .withColumn("cos_u", expr("cast(round(cos * 1000000) as bigint)"))
+    val IvfEval(queries, _, scoredAll, bftop) = ivfEval(spark, assigned)
     // NOT pinned (r17, measured): scored is read by the brute-force top-10
     // AND the sweep join, but both consumers are cheap broadcast-built
     // branches locally — a localCheckpoint here regressed the interleaved
@@ -918,12 +923,10 @@ object Similarity {
     // the duplicated cosine pass at fixture scale). The duplicate corpus
     // pass is the 100 TB cost; the no-pin fix is a single-window dominance
     // rewrite (rank-within-nprobe as running count_ifs), left undone.
-      .select(col("qid"), col("vec_id"), col("cos_u"))
-    val bftop = scored.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10).select(col("qid"), col("vec_id"))
+    val scored = scoredAll.select(col("qid"), col("vec_id"), col("cos_u"))
     val wp = Window.partitionBy(col("qid"))
       .orderBy(col("sim_u").desc, col("cid").asc)
-    val probes = cent.crossJoin(broadcast(queries))
+    val probes = cent.crossJoin(queries)
       .withColumn("sim", cosineCols(spark, "ce", "qe"))
       .withColumn("sim_u", expr("cast(round(sim * 1000000) as bigint)"))
       .withColumn("pr", row_number().over(wp))
@@ -1430,9 +1433,7 @@ object Similarity {
     // (vec 900000 = vec 0) rides the artifact so the certificate is
     // reproducible from the stored table alone.
     val lf = pqLfTable(spark, d)
-    // 1 024 rows, read 3× — KB-sized and single-job-scoped by design: a
-    // lost executor just recomputes it from the stored long form
-    val cent1 = pqCodebook(lf).localCheckpoint() // 1 024 rows, read 3x (note above)
+    val cent1 = pqCodebook(lf).pin(Rows(1024)) // read 3x
     val codes = pqAssign(lf, cent1)
     val adcTable = cent1
       .join(lf.filter(col("vec_id") === 0)
@@ -1582,7 +1583,7 @@ object Similarity {
     val topk = scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 10)
       .select(col("dims"), col("vec_id"))
-      .localCheckpoint() // 30 rows, read twice (per-width + ground truth)
+      .pin(Rows(30)) // read twice (per-width + ground truth)
     val gt = topk.filter(col("dims") === 64).select(col("vec_id").as("gtid"))
     topk.join(broadcast(gt), topk("vec_id") === gt("gtid"), "left")
       .groupBy(col("dims").cast("long").as("dims"))
@@ -1784,7 +1785,7 @@ object Similarity {
         expr("cast(round(x * 1000000) as bigint)").as("xq"))
     val cent = lf.groupBy(col("label"), col("j"))
       .agg(expr("cast((sum(xq + 10000000) div count(*)) - 10000000 as bigint)").as("cq"))
-      .localCheckpoint() // K·dims = 640 rows, read by both matrix sides
+      .pin(Rows(640, "K·dims")) // read by both matrix sides
     val a = cent.select(col("label").as("label_a"), col("j"), col("cq").as("ca"))
     val b = cent.select(col("label").as("label_b"), col("j"), col("cq").as("cb"))
     val dots = a.join(b, "j")
@@ -1873,7 +1874,7 @@ object Similarity {
     // A/B fold — the re-derived branch is a broadcast join over the
     // bucketed stored tables, cheaper locally than the pin barrier.
     val lf = pqLfTable(spark, d)
-    val cent1 = pqCodebook(lf).localCheckpoint() // 1 024 rows, read twice
+    val cent1 = pqCodebook(lf).pin(Rows(1024)) // read twice
     val candLf = lf.join(candIds.select(col("vec_id")), Seq("vec_id"), "left_semi")
     val codes = pqAssign(candLf, cent1)
     val adcTable = cent1
@@ -2153,7 +2154,7 @@ object Similarity {
       // lazy: the query's own action materializes it, so the three
       // consumers share the cached partitions within the one job and no
       // separate checkpoint job serializes the stage DAG
-      .localCheckpoint(false) // mining-pair-sized (3 longs/row)
+      .pinLazily(SizedBy("mining-pair")) // 3 longs/row
     val wa = Window.partitionBy(col("va")).orderBy(col("dot").desc, col("vb").asc)
     val wb = Window.partitionBy(col("vb")).orderBy(col("dot").desc, col("va").asc)
     val sa = dots.withColumn("rn", row_number().over(wa)).filter(col("rn") <= k)
@@ -2238,10 +2239,8 @@ object Similarity {
       .join(broadcast(labels.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"))), "qid")
       .withColumn("grade", when(col("label") === col("qlabel"), 1L).otherwise(0L))
-      // both consumers (top-10 DCG and the width-64 n_rel count) re-embedded
-      // the whole ×64 long-form dot join + label joins without this pin —
-      // pq_lf and embeddings each scanned 4×.
-      .localCheckpoint() // slice-sized: ≤ 2·nQ rows per scored vector, 5 narrow cols (q357 dots-pin class)
+      // read by the top-10 DCG and the width-64 n_rel count
+      .pin(SizedBy("slice")) // ≤ 2·nQ rows per scored vector, 5 narrow cols (q357 dots-pin class)
     val w = Window.partitionBy(col("width"), col("qid"))
       .orderBy(col("dot").desc, col("vec_id").asc)
     val top = graded.withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
@@ -2551,7 +2550,7 @@ object Similarity {
     val l0 = Tables.embeddings(spark, d).filter(col("vec_id") < Q314Slice)
       .select(col("vec_id"), col("label").cast("long").as("tl"))
       .withColumn("lab", expr("CASE WHEN vec_id % 5 = 0 THEN tl END"))
-      .localCheckpoint() // slice-sized (≤Q314Slice rows × 3 longs); read by both legs of round 1
+      .pin(SizedBy("slice")) // (≤Q314Slice rows × 3 longs); read by both legs of round 1
     def propagate(prev: DataFrame): DataFrame = {
       val nbrLabs = prev.filter(col("lab").isNotNull)
         .select(col("vec_id").as("nbr_id"), col("lab").as("nlab"))
@@ -2565,7 +2564,7 @@ object Similarity {
           coalesce(col("lab"), col("wlab")).as("lab"))
     }
     val l1 = propagate(l0)
-      .localCheckpoint() // slice-sized; read by both round-2 legs + the readout join
+      .pin(SizedBy("slice")) // read by both round-2 legs + the readout join
     val l2 = propagate(l1)
     l2.join(l1.select(col("vec_id"), col("lab").as("lab1")), "vec_id")
       .groupBy(col("tl").as("label"))
@@ -2649,27 +2648,24 @@ object Similarity {
     */
   def q345TriangleCensus(spark: SparkSession, d: String): DataFrame = {
     val g = knnGraphTable(spark, d).select(col("vec_id"), col("nbr_id"))
-    // r17: und fed FIVE consumers (degree x2, both wedge sides, the
-    // closure side) and tri two — each re-embedding the stored-graph scan
-    // and the symmetrize+distinct exchange (knn_graph x10 before). All
-    // three frames are slice-bounded (|E| ≤ Q314Slice·k; triangles bounded
-    // by the wedge closure), so they pin.
+    // und feeds five consumers (degree x2, both wedge sides, the closure
+    // side) and tri two; all three are slice-bounded (|E| ≤ Q314Slice·k)
     val und = g.filter(col("vec_id") =!= col("nbr_id"))
       .select(least(col("vec_id"), col("nbr_id")).as("u"),
         greatest(col("vec_id"), col("nbr_id")).as("v"))
       .distinct()
-      .localCheckpoint() // edge-set-sized symmetrized graph
+      .pin(SizedBy("edge-set")) // symmetrized graph
     val deg = und.select(col("u").as("x"))
       .unionAll(und.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).cast("long").as("deg"))
-      .localCheckpoint() // vertex-count-sized degrees
+      .pin(SizedBy("vertex-count")) // degrees
     val wedges = und.select(col("u").as("a"), col("v").as("b"))
       .join(und.select(col("u").as("a"), col("v").as("c")), "a")
       .filter(col("b") < col("c"))
     val tri = wedges.join(
       und.select(col("u").as("b"), col("v").as("c")), Seq("b", "c"))
       .select(col("a"), col("b"), col("c"))
-      .localCheckpoint() // triangle-set-sized (closed wedges)
+      .pin(SizedBy("triangle-set")) // closed wedges
     val perNode = tri.select(explode(array(col("a"), col("b"), col("c"))).as("x"))
       .groupBy(col("x")).agg(count(lit(1)).cast("long").as("n_tri"))
     val totals = tri.agg(count(lit(1)).cast("long").as("n_triangles"))
@@ -2760,9 +2756,7 @@ object Similarity {
     val scores = lf.join(broadcast(cent), Seq("sub", "jj"))
       .groupBy(col("lbl"), col("vec_id"))
       .agg(expr("cast(sum(xq * s) as bigint)").as("score"))
-    // r17: pinned — the band-offset aggregate and the rank join both
-    // re-embedded the whole scoring lineage (pq_lf and the label table
-    // each scanned 4x before)
+    // read by the band-offset aggregate and the rank join
     val grouped = scores.join(labels, "vec_id")
       .withColumn("pos", expr("CASE WHEN lab = lbl THEN 1 ELSE 0 END"))
       .groupBy(col("lbl"), col("score"))
@@ -2770,7 +2764,7 @@ object Similarity {
         expr("cast(sum(1 - pos) as bigint)").as("n"))
       .withColumn("band",
         expr("(score + 1152921504606846976) div 17592186044416"))
-      .localCheckpoint() // score-distribution-sized ((lbl, score) rows)
+      .pin(SizedBy("score-distribution")) // ((lbl, score) rows)
     val wB = Window.partitionBy(col("lbl")).orderBy(col("band"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = grouped.groupBy(col("lbl"), col("band"))
@@ -2944,9 +2938,7 @@ object Similarity {
       .join(labels, "vec_id")
       .join(broadcast(labels.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("lab").as("qlab"))), "qid")
-    // r17: pinned — perQ feeds both the readout and its own 1-row mean
-    // aggregate; unpinned, the second consumer re-ran the whole dot+rank
-    // lineage (pq_lf and the label table each scanned 4x)
+    // perQ feeds the readout and its own 1-row mean
     val perQ = top.groupBy(col("qid"))
       .agg(expr("min(CASE WHEN lab = qlab THEN rn END)").as("first_rel_rank"))
       .withColumn("rr_micro", expr(
@@ -2954,7 +2946,7 @@ object Similarity {
           "ELSE 1000000 div first_rel_rank END"))
       .withColumn("first_rel_rank",
         coalesce(col("first_rel_rank").cast("long"), lit(0L)))
-      .localCheckpoint() // nQ rows
+      .pin(SizedBy("nQ"))
     perQ.crossJoin(broadcast(perQ.agg(
         expr(s"cast(sum(rr_micro) div $nQ as bigint)").as("mean_rr_micro"))))
       .select(col("qid"), col("first_rel_rank"), col("rr_micro"),
@@ -3017,14 +3009,12 @@ object Similarity {
     val cent = lf.join(labels, "vec_id")
       .groupBy(col("lab").as("lbl"), col("sub"), col("jj"))
       .agg(expr("cast(sum(xq) as bigint)").as("s"))
-    // r17: pinned — the calibration side reads it twice through
-    // BucketRank's two phases and the test side once more (pq_lf and the
-    // label table each scanned 6x before)
+    // read twice through BucketRank's two phases and once by the test side
     val scores = lf.join(broadcast(cent), Seq("sub", "jj"))
       .groupBy(col("lbl"), col("vec_id"))
       .agg(expr("cast(sum(xq * s) as bigint)").as("score"))
       .join(labels, "vec_id")
-      .localCheckpoint() // |labels|×vector-population-sized score rows
+      .pin(SizedBy("|labels|×vector-population")) // score rows
     val calib = scores.filter(col("vec_id") % 5 === 1 && col("lbl") === col("lab"))
       .select(col("vec_id"), (-col("score")).as("nc"))
       .withColumn("__g", lit(1))
@@ -3143,24 +3133,21 @@ object Similarity {
     val buckets = idx.select(col("vec_id"), col("bucket"))
     val qproj = idx.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), posexplode(col("ps")).as(Seq("i", "p")))
-    // r17: qbase (5 rows) and cand (probe-bucket-bounded) each fed 2-3
-    // consumers, re-embedding the stored-index scan per consumer
-    // (rp_lsh x4); pinned + broadcast-hinted, each stored table scans once
-    // per real pass
+    // qbase and cand each feed 2-3 consumers
     val qbase = idx.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("bucket"))
-      .localCheckpoint() // 5 query-bucket rows
+      .pin(Rows(5)) // query-bucket rows
     val wm = Window.partitionBy(col("qid")).orderBy(abs(col("p")).asc, col("i").asc)
     val flips = qproj.withColumn("rn", row_number().over(wm)).filter(col("rn") <= 3)
       .join(broadcast(qbase), "qid")
       .select(col("qid"), expr(
         "cast(bucket ^ shiftleft(cast(1 as bigint), cast(i as int)) as bigint)")
         .as("bucket"))
-    val probeSet = qbase.unionByName(flips).distinct().localCheckpoint() // ≤20 rows
+    val probeSet = qbase.unionByName(flips).distinct().pin(Rows(20))
     val cand = buckets.join(broadcast(probeSet), "bucket")
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"))
-      .localCheckpoint() // probe-bucket-sized candidate pairs
+      .pin(SizedBy("probe-bucket")) // candidate pairs
     val candBase = buckets.join(broadcast(qbase), "bucket")
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid")).agg(count(lit(1)).as("n_candidates_base"))
@@ -3315,7 +3302,7 @@ object Similarity {
         Window.orderBy(col("cos_u").desc, col("vec_id"))).cast("long")) // 50-row frame
       .select(col("vec_id").as("doc_id"), col("dr"))
     val common = sparseRanked.join(denseRanked, "doc_id")
-      .localCheckpoint() // ≤50 rows; both pair sides read it
+      .pin(Rows(50)) // both pair sides read it
     val pairs = common.select(col("doc_id").as("ida"), col("br").as("bra"),
         col("dr").as("dra"))
       .join(common.select(col("doc_id").as("idb"), col("br").as("brb"),
@@ -3400,22 +3387,10 @@ object Similarity {
     * both search paths and the sweep.
     */
   def q322NprobeSweep(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cent = ivfCentroidTable(spark, d)
     val assigned = ivfAssignTable(spark, d)
-    val queries = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("ed").as("qe"))
-      .localCheckpoint() // 10 rows, read by three consumers
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_u").desc, col("vec_id").asc)
-    val bftop = assigned.select(col("vec_id"), col("ed"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", cosineCols(spark, "ed", "qe"))
-      .withColumn("cos_u", expr("cast(round(cos * 1000000) as bigint)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10).select(col("qid"), col("vec_id"))
-      .localCheckpoint() // 100 rows of ground truth, one per sweep setting
+    val IvfEval(queries, _, _, truth) = ivfEval(spark, assigned)
+    val bftop = truth.pin(Rows(100)) // ground truth, read once per sweep setting
     val wp = Window.partitionBy(col("qid"))
       .orderBy(col("sim_u").desc, col("cid").asc)
     val probes = cent.crossJoin(broadcast(queries))
@@ -3521,7 +3496,7 @@ object Similarity {
       .filter(col("va") =!= col("vb"))
       .select(col("cid"), col("va"), col("vb"), expr(dotXaXb).as("dot"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= Q314K)
-      .localCheckpoint() // affected-cells-sized; read by three rollups
+      .pin(SizedBy("affected-cells")) // read by three rollups
     val before = g.join(broadcast(affected), "cid")
     val newEdges = after.select(col("cid"), col("va"), col("vb"))
       .join(before.select(col("vec_id").as("va"), col("nbr_id").as("vb")),
@@ -3644,7 +3619,7 @@ object Similarity {
       .groupBy(col("qid"), col("vec_id"))
       .agg(expr("cast(sum(xq * qx) as bigint)").as("dotx"),
         expr("cast(sum(xh * qh) as bigint)").as("dotc"))
-      .localCheckpoint() // slice-sized: 10 qid rows per vector, 4 longs each
+      .pin(SizedBy("slice")) // 10 qid rows per vector, 4 longs each
     val wx = Window.partitionBy(col("qid")).orderBy(col("dotx").desc, col("vec_id").asc)
     val wc = Window.partitionBy(col("qid")).orderBy(col("dotc").desc, col("vec_id").asc)
     val ex = dots.withColumn("rx", row_number().over(wx)).filter(col("rx") <= k)
@@ -3750,25 +3725,18 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("cid"))
     val indeg = graph.groupBy(col("nbr_id").as("vec_id"))
       .agg(count(lit(1)).as("indeg"))
-    // r17: every walk frame below is K-BOUNDED (nQ probe cells' members;
-    // entry/frontier/candidate sets ≤ 13 nodes per query) yet the walk's
-    // lineage re-embedded each one exponentially — c2 embeds c1 three
-    // ways, c1 embeds entry twice, entry embeds the assignment join —
-    // 38 ivf_assign / 28 knn_graph / 18 pq_lf scans, 24 exchanges. The
-    // earlier round's pin attempt regressed because a LogicalRDD carries
-    // no stats, so every consumer join fell back to a shuffle; the fix is
-    // pin + EXPLICIT broadcast hints at each use site (the hint restores
-    // what the estimator can no longer prove). Scans drop to one per
-    // stored table per real pass; exchanges 24 → 10.
+    // every walk frame below is K-BOUNDED (nQ probe cells' members;
+    // entry/frontier/candidate sets ≤ 13 nodes per query) and read by
+    // several later frames, so each is pinned and broadcast to its readers
     val members = probe.join(assign, Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
-      .localCheckpoint() // slice-sized: the nQ probe cells' members
+      .pin(SizedBy("slice")) // the nQ probe cells' members
     val entry = members.join(indeg, Seq("vec_id"), "left")
       .na.fill(0L, Seq("indeg"))
       .groupBy(col("qid"), col("cid"))
       .agg(max(struct(col("indeg"), (-col("vec_id")).as("ni"))).as("e"))
       .select(col("qid"), col("cid"), (-col("e.ni")).as("node"))
-      .localCheckpoint() // nQ rows: one entry node per query
+      .pin(SizedBy("nQ")) // one entry node per query
     def score(cands: DataFrame): DataFrame =
       lfs.withColumnRenamed("vec_id", "node").join(broadcast(cands), Seq("node"))
         .join(broadcast(qlf), Seq("qid", "sub", "jj"))
@@ -3779,21 +3747,21 @@ object Similarity {
           col("node") === graph("vec_id"))
         .select(col("qid"), col("nbr_id").as("node")))
       .distinct().filter(col("node") =!= col("qid"))
-      .localCheckpoint() // ≤ nQ·(k+1) rows: hop-1 candidates
+      .pin(SizedBy("nQ·(k+1)")) // hop-1 candidates
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("dot").desc, col("node").asc)
     val f1 = score(c1).withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3).select(col("qid"), col("node"))
-      .localCheckpoint() // beam-3 frontier: 3·nQ rows
+      .pin(SizedBy("3·nQ")) // beam-3 frontier
     val c2 = c1.unionByName(
         graph.join(broadcast(f1), col("node") === graph("vec_id"))
           .select(col("qid"), col("nbr_id").as("node")))
       .distinct().filter(col("node") =!= col("qid"))
-      .localCheckpoint() // ≤ 13·nQ rows: visited candidates
+      .pin(SizedBy("13·nQ")) // visited candidates
     val best = score(c2).withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("qid"), col("node").as("found_id"), col("dot").as("bd"))
-      .localCheckpoint() // nQ rows: the walk's answer per query
+      .pin(SizedBy("nQ")) // the walk's answer per query
     val nVisited = c2.groupBy(col("qid")).agg(count(lit(1)).as("n_visited"))
     val nCell = members.groupBy(col("qid")).agg(count(lit(1)).as("n_cell"))
     // exact dots of every slice vector vs every query (the q351 shape)
@@ -3919,9 +3887,7 @@ object Similarity {
     val cent = lf.join(labels, "vec_id").filter(col("lab") === L)
       .groupBy(col("sub"), col("jj"))
       .agg(expr("cast(sum(xq) as bigint)").as("s"))
-    // r17: pinned — four consumers (band offsets, the rank join, and the
-    // nn/pp totals) re-embedded the whole scoring lineage (pq_lf and the
-    // label table each scanned 8x)
+    // read by the band offsets, the rank join and the nn/pp totals
     val scores = lf.join(broadcast(cent), Seq("sub", "jj"))
       .groupBy(col("vec_id"))
       .agg(expr("cast(sum(xq * s) as bigint)").as("score"))
@@ -3929,7 +3895,7 @@ object Similarity {
       .withColumn("pos", expr(s"cast(cast(lab = $L as int) as long)"))
       .withColumn("band",
         expr("-((score + 1152921504606846976) div 17592186044416)"))
-      .localCheckpoint() // vector-population-sized score rows (one per vec_id)
+      .pin(SizedBy("vector-population")) // score rows (one per vec_id)
     val wB = Window.orderBy(col("band")) // band-summary-sized offsets frame (<= 2^17 rows)
       .rowsBetween(Window.unboundedPreceding, -1) // ≤ 2^17-band frame
     val offsets = scores.groupBy(col("band")).agg(count(lit(1)).as("bc"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin._
 import graft.functions.TextKeys._
 import graft.sources.Tables
 
@@ -290,12 +291,10 @@ object TextAnalysis {
     // in, not a driver-side .first() (which would split the query into two
     // jobs and put a scalar on the driver)
     val terms = docs.select(col("doc_id"), explode(words(col("text"))).as("word"))
-    // r17: df and the corpus size are both functions of the tf table (its
-    // rows ARE the distinct (doc, word) pairs; every doc has ≥1 term row,
-    // split() never yields an empty array) — pin it and derive them, one
-    // corpus scan instead of three
+    // df and the corpus size both derive from the tf table (every doc has
+    // a term row)
     val tf = terms.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // doc×term-sized (distinct (doc, word) pairs)
+      .pin(SizedBy("doc×term")) // (distinct (doc, word) pairs)
     val nDocs = tf.agg(countDistinct(col("doc_id")).as("__n_docs"))
     val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
@@ -788,7 +787,7 @@ object TextAnalysis {
         w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .withColumn("total", sum(col("n")).over(
         org.apache.spark.sql.expressions.Window.partitionBy())) // vocab-sized frame
-      .localCheckpoint() // |vocab| rows; each target probes this frame
+      .pin(SizedBy("|vocab|")) // each target probes this frame
     val targets = spark.createDataFrame(
       CoverageTargets.map(t => Tuple1(t))).toDF("pct")
     ranked.join(broadcast(targets), lit(100L) * col("cum") >= col("pct") * col("total"))
@@ -1425,7 +1424,7 @@ object TextAnalysis {
     * right non-overlapping semantics match the oracle's `replace`).
     * SCALE: real BPE trains on the VOCAB + frequencies, not the corpus —
     * one corpus scan builds the (word, n) table, every iteration after
-    * runs on |vocab| rows; `localCheckpoint` pins each round so three
+    * runs on |vocab| rows; each round is pinned so three
     * iterations stay three vocab passes, not 2³ lineage replays (the CC
     * discipline). No driver loop over data — the arg-max travels as a
     * broadcast frame, never a collected literal.
@@ -1489,10 +1488,10 @@ object TextAnalysis {
       .select(explode(words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .select(expr("concat_ws(' ', split(word, ''))").as("seq"), col("n"))
-      .localCheckpoint() // vocab-sized
+      .pin(SizedBy("vocab"))
     val steps = (0 until 3).map { step =>
-      val t = topPair(v).localCheckpoint() // 1 row (argmax pair)
-      v = mergeStep(v, t).localCheckpoint() // vocab-sized round frame
+      val t = topPair(v).pin(Rows(1)) // argmax pair
+      v = mergeStep(v, t).pin(SizedBy("vocab")) // round frame
       t.select(lit(step.toLong).as("step"), col("w1"), col("w2"), col("cnt"))
     }
     steps.reduce(_ union _).orderBy(col("step"))
@@ -1604,7 +1603,7 @@ object TextAnalysis {
       .groupBy(col("g2"))
       .agg(min(col("g1")).as("g1"), count(lit(1)).as("c2"),
         expr("cast(count_if(lang = 'en') as bigint)").as("c2t"))
-      .localCheckpoint() // bigram-type-sized (vocab²-bounded counts)
+      .pin(SizedBy("bigram-type")) // vocab²-bounded counts
     val uc = t.groupBy(col("g1"))
       .agg(expr("cast(sum(c2) as bigint)").as("c1"),
         expr("cast(sum(c2t) as bigint)").as("c1t"))
@@ -1882,16 +1881,13 @@ object TextAnalysis {
     // collapses to (lang, token) map-side before any md5 runs (vocab-sized
     // hashing), and docg below hashes once per DISTINCT (doc, token). The
     // old shape paid two full md5 passes over the token mass.
-    // localCheckpoint pins the vocab-sized tables so the tokenize pass
-    // that builds them runs ONCE per consumer job; same for the
-    // languages-sized prior table.
     val cnt = tokRaw.groupBy(col("lang"), col("t")).agg(count(lit(1)).as("c"))
       .select(col("lang"), certifiedKey(col("t")).as("g"), col("c"))
-      .localCheckpoint() // vocab-sized (lang x gram counts)
+      .pin(SizedBy("vocab")) // lang x gram counts
     val tot = cnt.groupBy(col("lang")).agg(expr("cast(sum(c) as bigint)").as("tl"))
     val voc = cnt.select(col("g")).distinct().agg(count(lit(1)).as("v"))
     val pri = Tables.documents(spark, d).groupBy(col("lang")).agg(count(lit(1)).as("dl"))
-      .localCheckpoint() // languages-sized prior
+      .pin(SizedBy("languages")) // prior
     val prior = pri.crossJoin(broadcast(pri.agg(expr("cast(sum(dl) as bigint)").as("d"))))
       .select(col("lang").as("lang_hyp"),
         expr("CAST(round(ln(CAST(dl AS DOUBLE) / CAST(d AS DOUBLE)) * 1000000) AS BIGINT)")
@@ -2091,15 +2087,13 @@ object TextAnalysis {
             .as("text")))
     val bb = hashedBigramsOf(batch)
       .groupBy(col("g2")).agg(min(col("g1")).as("g1b"), count(lit(1)).as("c2b"))
-      .localCheckpoint() // batch-vocab-sized; read by merge + delta stats
-    // r17: pinned — merged re-embedded the stored-model scan under each of
-    // its four consumers (ucm, vm, both lpAfter sides: stored read 7x
-    // across the query)
+      .pin(SizedBy("batch-vocab")) // read by merge + delta stats
+    // merged is read by ucm, vm and both lpAfter sides
     val merged = stored.select(col("g2"), col("g1"), col("c2"))
       .join(bb, Seq("g2"), "full")
       .select(col("g2"), coalesce(col("g1"), col("g1b")).as("g1"),
         (coalesce(col("c2"), lit(0L)) + coalesce(col("c2b"), lit(0L))).as("c2"))
-      .localCheckpoint() // merged-model-sized (vocab²-bounded types)
+      .pin(SizedBy("merged-model")) // vocab²-bounded types
     val ucm = merged.groupBy(col("g1")).agg(expr("cast(sum(c2) as bigint)").as("c1"))
     val vm = merged.agg(count(lit(1)).as("nv"))
     val lpAfter = merged.join(ucm, "g1").crossJoin(broadcast(vm))
@@ -2108,7 +2102,7 @@ object TextAnalysis {
                (CAST(c1 AS DOUBLE) + CAST(nv AS DOUBLE))) * 1000000) AS BIGINT)""")
           .as("lp_after"))
     val probe = hashedBigrams(spark, d).filter(col("doc_id") < 5).select(col("g2"))
-      .localCheckpoint() // few-hundred-row probe stream, scored twice
+      .pin(SizedBy("probe stream")) // a few hundred rows, scored twice
     val sb = probe.join(stored.select(col("g2"), col("lp_micro")), "g2")
       .agg(expr("cast(sum(lp_micro) as bigint)").as("s_before"),
         count(lit(1)).as("n_probe"))
@@ -2280,7 +2274,7 @@ object TextAnalysis {
         "CAST(count_if(pa = pb) AS BIGINT) AS ab",
         "CAST(count_if(pa = pc) AS BIGINT) AS ac",
         "CAST(count_if(pb = pc) AS BIGINT) AS bc") ++ marginals: _*)
-      .localCheckpoint() // 1 row; three pair rows derive from it
+      .pin(Rows(1)) // three pair rows derive from it
     def pe(a: String, b: String): String = langs.map(l =>
       s"(CAST(${a}_$l AS DOUBLE)/n)*(CAST(${b}_$l AS DOUBLE)/n)").mkString(" + ")
     def row(name: String, a: String, b: String, ag: String): DataFrame = agg.selectExpr(
@@ -2428,11 +2422,8 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
       // posting-list-sized (only query-term hits), read by the df side and
-      // the scorer. Single-job-scoped by design: on executor loss the
-      // query re-runs from the scan (bounded — the pinned frame is the
-      // inverted-index slice for 4 terms, not the corpus); a shared
-      // deployment persists the full inverted index instead (q286 pattern)
-      .localCheckpoint() // 4-term posting-slice-sized (note above)
+      // the scorer
+      .pin(SizedBy("4-term posting-slice"))
     val idf = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
       .withColumn("idf_micro", expr(
@@ -2908,7 +2899,7 @@ object TextAnalysis {
         col("n_chars").cast("long").as("x2"),
         size(filter(words(col("text")), _ === "the")).cast("bigint").as("x3"),
         size(filter(words(col("text")), length(_) > 5)).cast("bigint").as("x4"))
-      .localCheckpoint() // doc-count-sized narrow features (4 longs/row)
+      .pin(SizedBy("doc-count")) // narrow features (4 longs/row)
 
   /** Round-1 weight row (a0…a4 + n1) over the feature frame. */
   private def perceptronW1(f: DataFrame): DataFrame =
@@ -3012,11 +3003,11 @@ object TextAnalysis {
   def q308HeapsGrowth(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, d)
-    // narrow (doc_id, token-count) frame feeds the threshold search and
-    // both prefix aggregates — pinned job-scope (the q298 rule)
+    // narrow (doc_id, token-count) frame: the threshold search and both
+    // prefix aggregates read it
     val ids = docs.select(col("doc_id"),
         size(words(col("text"))).cast("bigint").as("nt"))
-      .localCheckpoint() // doc-count-sized narrow (2 longs/row; note above)
+      .pin(SizedBy("doc-count")) // narrow (2 longs/row; note above)
     val targets = (1 to 4).map(k => expr(s"(__n * $k) div 4"))
     val bounds = BucketRank.select(
         ids.withColumn("__g", lit(1)), "__g",
@@ -3102,12 +3093,12 @@ object TextAnalysis {
       // depend on counts alone, same w.h.p. under any injective-w.h.p. key)
       .select(col("lang"), internalKey(col("t")).as("g"))
       .groupBy(col("lang"), col("g")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // vocab-sized (lang x gram counts)
+      .pin(SizedBy("vocab")) // lang x gram counts
     val tot = v.groupBy(col("lang")).agg(expr("cast(sum(c) as bigint)").as("n"))
     val pairs = tot.as("x").join(tot.as("y"), col("x.lang") < col("y.lang"))
       .select(col("x.lang").as("la"), col("x.n").as("na"),
         col("y.lang").as("lb"), col("y.n").as("nb"))
-      .localCheckpoint() // |langs|²-row pair frame (r17: three consumers re-ran the per-language totals unpinned)
+      .pin(SizedBy("|langs|²")) // pair frame (r17: three consumers re-ran the per-language totals unpinned)
     // r17: BOTH directional sums ride ONE full-outer join per pair — the
     // scaladoc's "two left joins equal the full-outer formulation", now
     // taken literally: a gram absent from one side contributes 0 to that
@@ -3115,15 +3106,15 @@ object TextAnalysis {
     // exactly what the per-side left joins computed. 2 vocab-keyed joins +
     // 2 aggregates → 1 + 1 (10 → 5 exchanges); arithmetic unchanged
     // (same integer rationals, same one rounded ln per present side).
-    val va = v.join(broadcast(pairs.select(col("la"), col("lb"))),
+    val va = v.join(pairs.select(col("la"), col("lb")),
         col("lang") === col("la"))
       .select(col("la"), col("lb"), col("g"), col("c").as("cp"))
-    val vb = v.join(broadcast(pairs.select(col("la"), col("lb"))),
+    val vb = v.join(pairs.select(col("la"), col("lb")),
         col("lang") === col("lb"))
       .select(col("la"), col("lb"), col("g"), col("c").as("cq"))
     val sums = va.join(vb, Seq("la", "lb", "g"), "full")
       .na.fill(0L, Seq("cp", "cq"))
-      .join(broadcast(pairs.select(col("la"), col("lb"), col("na"), col("nb"))),
+      .join(pairs.select(col("la"), col("lb"), col("na"), col("nb")),
         Seq("la", "lb"))
       .groupBy(col("la"), col("lb"))
       .agg(
@@ -3184,7 +3175,7 @@ object TextAnalysis {
     * never shuffles (xxhash64 long since r17; was 16-hex md5) — then the
     * pair intersection is a gram-hash self-join of the DISTINCT frame with
     * per-bucket fan-out bounded by sources² (≤400), not corpus size.
-    * Since r17 the distinct frame is localCheckpoint-pinned (one gram
+    * Since r17 the distinct frame is pinned (one gram
     * pass, three consumers). Output: both set
     * sizes, the intersection, and Jaccard in ppm — exact integers.
     */
@@ -3196,10 +3187,8 @@ object TextAnalysis {
       // move 8-byte longs, not 16-char hex
       .select(col("source"), explode(wordGrams(col("w"), 3, internalKey)).as("gk"))
       .distinct()
-      // r17: the distinct (source, gk) frame is read by THREE consumers
-      // (sizes + both self-join sides) and the r16 plan recomputed the
-      // tokenize+gram pass for each; pin it once
-      .localCheckpoint() // source×gram-sized (two narrow columns)
+      // the distinct (source, gk) frame is read by sizes + both self-join sides
+      .pin(SizedBy("source×gram")) // two narrow columns
     val sizes = grams.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     val inter = grams.as("a").join(grams.as("b"),
         col("a.gk") === col("b.gk") && col("a.source") < col("b.source"))
@@ -3255,7 +3244,7 @@ object TextAnalysis {
       .groupBy(col("t")).agg(count(lit(1)).as("c"))
       .withColumn("w_micro", expr(
         "cast(round(sqrt(cast(c as double) * sqrt(cast(c as double))) * 1000000) as bigint)"))
-      .localCheckpoint() // vocab-sized weights
+      .pin(SizedBy("vocab")) // weights
     val tot = v.agg(expr("cast(sum(w_micro) as bigint)").as("w_total"),
       expr("cast(sum(c) as bigint)").as("c_total"))
     v.crossJoin(broadcast(tot))
@@ -3310,7 +3299,7 @@ object TextAnalysis {
     val v = tok.groupBy(col("g")).agg(count(lit(1)).as("c"),
         min(col("len")).as("len"))
       .withColumn("neg", -col("c"))
-      .localCheckpoint() // vocab-sized counts
+      .pin(SizedBy("vocab")) // counts
     val targets = Seq(4, 8, 16).map(vv => expr(s"least($vv, __n)"))
     val bounds = BucketRank.select(v.withColumn("__g", lit(1)), "__g",
         bucket = expr("neg div 16"), ord = Seq(col("neg"), col("g")),
@@ -3381,14 +3370,11 @@ object TextAnalysis {
   def q321CalibrationBins(spark: SparkSession, d: String): DataFrame = {
     val f = perceptronFeatures(spark, d)
     val w2 = perceptronW2(f, perceptronW1(f))
-    // r17: pinned — BucketRank reads its input twice and the binning pass a
-    // third time; unpinned, each consumer re-ran the w2 training aggregate
-    // (two corpus passes over the feature pin). Same doc-count-sized narrow
-    // class as the feature pin itself.
+    // BucketRank reads it twice and the binning pass a third time
     val scored = f.crossJoin(broadcast(w2))
       .select(col("doc_id"), col("y"),
         expr("cast(b0*x0 + b1*x1 + b2*x2 + b3*x3 + b4*x4 as bigint)").as("s"))
-      .localCheckpoint() // doc-count-sized narrow score frame
+      .pin(SizedBy("doc-count")) // narrow score frame
     val targets = (1 to 5).map(k => expr(s"(__n * $k) div 5"))
     val th = BucketRank.select(scored.withColumn("__g", lit(1)), "__g",
         bucket = expr("s div 1000000"), ord = Seq(col("s"), col("doc_id")),
@@ -3471,12 +3457,11 @@ object TextAnalysis {
   def q338IsotonicCalibration(spark: SparkSession, d: String): DataFrame = {
     val f = perceptronFeatures(spark, d)
     val w2 = perceptronW2(f, perceptronW1(f))
-    // r17: pinned for the same reason as q321's scored frame (three
-    // consumers, each re-running the w2 training aggregate unpinned)
+    // three consumers, as q321's scored frame
     val scored = f.crossJoin(broadcast(w2))
       .select(col("doc_id"), col("y"),
         expr("cast(b0*x0 + b1*x1 + b2*x2 + b3*x3 + b4*x4 as bigint)").as("s"))
-      .localCheckpoint() // doc-count-sized narrow score frame
+      .pin(SizedBy("doc-count")) // narrow score frame
     val targets = (1 to 5).map(k => expr(s"(__n * $k) div 5"))
     val th = BucketRank.select(scored.withColumn("__g", lit(1)), "__g",
         bucket = expr("s div 1000000"), ord = Seq(col("s"), col("doc_id")),
@@ -3490,25 +3475,22 @@ object TextAnalysis {
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
         expr("cast(count_if(y = 1) as bigint)").as("n_pos"))
-      .localCheckpoint() // 5 rows; every interval below derives from it
-    // r17: the interval/candidate frames are bin-count-bounded (≤ K³ rows,
-    // K = 5) yet `cand` re-embedded 4× under the two anti-join stages —
-    // each embed re-running the interval aggregation's exchange. Pin cand
-    // and broadcast-hint every tiny join side (the bins pin is a LogicalRDD
-    // with no stats, so the planner can no longer prove broadcastability).
+      .pin(Rows(5)) // every interval below derives from it
+    // the interval/candidate frames are bin-count-bounded (≤ K³ rows,
+    // K = 5); `cand` is read under both anti-join stages
     val iv = bins.select(col("bin").as("j"))
-      .join(broadcast(bins.select(col("bin").as("l"))), col("j") <= col("l"))
-      .join(broadcast(bins.select(col("bin").as("m"), col("n_docs"), col("n_pos"))),
+      .join(bins.select(col("bin").as("l")), col("j") <= col("l"))
+      .join(bins.select(col("bin").as("m"), col("n_docs"), col("n_pos")),
         col("m").between(col("j"), col("l")))
       .groupBy(col("j"), col("l"))
       .agg(expr("cast(sum(n_docs) as bigint)").as("n"),
         expr("cast(sum(n_pos) as bigint)").as("p"))
     val cand = bins.select(col("bin").as("i"))
       .join(broadcast(iv), col("j") <= col("i") && col("l") >= col("i"))
-      .localCheckpoint() // ≤ K³ candidate (i, interval) rows
+      .pin(SizedBy("K³")) // candidate (i, interval) rows
     // inner min over l (fixed i, j): keep the interval no other interval
     // beats — smaller rational wins, ties to the smaller l
-    val inner = cand.alias("x").join(broadcast(cand.alias("y")),
+    val inner = cand.alias("x").join(cand.alias("y"),
         expr("""x.i = y.i AND x.j = y.j AND
                (y.p * x.n < x.p * y.n OR (y.p * x.n = x.p * y.n AND y.l < x.l))"""),
         "left_anti")
@@ -3600,13 +3582,12 @@ object TextAnalysis {
   def q326LooInfluence(spark: SparkSession, d: String): DataFrame = {
     val f = perceptronFeatures(spark, d)
     val w1 = perceptronW1(f)
-    // r17: pinned — three consumers (probe frame, full-error count, the
-    // LOO sweep) each re-ran the w1 training aggregate unpinned
+    // read by the probe frame, the full-error count and the LOO sweep
     val scored = f.crossJoin(broadcast(w1))
       .select(col("doc_id"), col("y"), col("x0"), col("x1"), col("x2"),
         col("x3"), col("x4"),
         expr("cast(a0*x0 + a1*x1 + a2*x2 + a3*x3 + a4*x4 as bigint)").as("s"))
-      .localCheckpoint() // doc-count-sized narrow score frame
+      .pin(SizedBy("doc-count")) // narrow score frame
     val probes = scored.filter(col("doc_id") < 50)
       .select(col("doc_id").as("pid"), col("y").as("py"),
         col("x0").as("p0"), col("x1").as("p1"), col("x2").as("p2"),
@@ -3838,9 +3819,8 @@ object TextAnalysis {
       .select(internalKey(bigramWord(col("bg"), 0)).as("gv"),
         internalKey(bigramWord(col("bg"), 1)).as("gw"),
         certifiedKey(col("bg")).as("g2"), col("cvw"))
-      // four consumers (cv, contW, nTypes, top-10) each re-ran the corpus
-      // tokenize+count pass; pin the type table once
-      .localCheckpoint() // bigram-type-sized (vocab²-bounded counts)
+      // read by cv, contW, nTypes and the top-10
+      .pin(SizedBy("bigram-type")) // vocab²-bounded counts
     val cv = c.groupBy(col("gv"))
       .agg(expr("cast(sum(cvw) as bigint)").as("cv"),
         count(lit(1)).as("n1p_v")) // N1+(v, •): distinct continuations of v
@@ -3913,24 +3893,20 @@ object TextAnalysis {
              i -> named_struct('w1', element_at(ws, i), 'w2', element_at(ws, i + 1)))"""))
         .as("p"))
       .select(col("doc_id"), col("p.w1"), col("p.w2"))
-    // r17: pinned — four consumers (both dfBag word probes, the final
-    // readout join) each re-ran the corpus pair pass behind this 5-row
-    // frame (documents scanned 8x). r17 second pass: df_phrase rides the
-    // SAME aggregation (countDistinct alongside the occurrence count — a
-    // parallel two-level distinct, never per-group doc sets), deleting
-    // the separate phrase-df corpus pass entirely.
+    // read by both dfBag word probes and the readout join; df_phrase
+    // rides the SAME aggregation (countDistinct beside the occurrence count)
     val top5 = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n_occur"),
         countDistinct(col("doc_id")).as("df_phrase"))
       .orderBy(col("n_occur").desc, col("w1").asc, col("w2").asc).limit(5)
-      .localCheckpoint() // K-sized (top-5 phrase rows)
+      .pin(SizedBy("K")) // top-5 phrase rows
     val wordRows = tok.select(col("doc_id"), explode(col("ws")).as("w")).distinct()
-    val a = wordRows.join(broadcast(top5.select(col("w1")).distinct()),
+    val a = wordRows.join(top5.select(col("w1")).distinct(),
       wordRows("w") === col("w1")).select(col("doc_id"), col("w1"))
-    val b = wordRows.join(broadcast(top5.select(col("w2")).distinct()),
+    val b = wordRows.join(top5.select(col("w2")).distinct(),
       wordRows("w") === col("w2")).select(col("doc_id").as("doc_b"), col("w2"))
     val dfBag = a.join(b, col("doc_id") === col("doc_b"))
-      .join(broadcast(top5.select(col("w1"), col("w2"))), Seq("w1", "w2"))
+      .join(top5.select(col("w1"), col("w2")), Seq("w1", "w2"))
       .groupBy(col("w1"), col("w2"))
       .agg(countDistinct(col("doc_id")).as("df_bag"))
     top5.join(dfBag, Seq("w1", "w2"))
@@ -3988,7 +3964,7 @@ object TextAnalysis {
     val cm = naiveBayesPredictions(spark, d)
       .groupBy(col("lang_true"), col("lang_pred"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // K²-sized confusion matrix, read by 3 rollups
+      .pin(SizedBy("K²")) // confusion matrix, read by 3 rollups
     val classes = cm.select(col("lang_true").as("cls")).distinct()
     val perClass = classes
       .join(cm.groupBy(col("lang_true").as("cls_t"))
@@ -4361,7 +4337,7 @@ object TextAnalysis {
       .filter(col("t") =!= "")
       .select(col("doc_id"), certifiedKey(col("t")).as("th"))
       .groupBy(col("th"), col("doc_id")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // batch-sized postings; read by merge + 2 delta stats
+      .pin(SizedBy("batch")) // postings; read by merge + 2 delta stats
     val merged = stored.select(col("th"), col("doc_id"), col("tf"))
       .unionByName(bp)
     val mstats = merged.agg(
@@ -4437,13 +4413,12 @@ object TextAnalysis {
       .select(col("doc_id"), posexplode(words(col("text"))))
       .toDF("doc_id", "pos", "t")
       .filter(col("t") =!= "")
-    // r17: pinned — both runTok consumers (term weights, phrase assembly)
-    // re-embedded this top-20 subtree's corpus pass (documents ×4)
+    // read by both runTok consumers (term weights, phrase assembly)
     val stop = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("t").asc).limit(20)
       .select(col("t").as("sw"))
-      .localCheckpoint() // K-sized (20 stopword rows)
-    val nonstop = tok.join(broadcast(stop), tok("t") === col("sw"), "left_anti")
+      .pin(SizedBy("K")) // 20 stopword rows
+    val nonstop = tok.join(stop, tok("t") === col("sw"), "left_anti")
     val wRun = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
     val runTok = nonstop
       .withColumn("grp", col("pos") - row_number().over(wRun))

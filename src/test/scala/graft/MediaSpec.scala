@@ -60,6 +60,20 @@ class MediaSpec extends AnyFunSuite {
     }
   }
 
+  test("a WAV whose frame is under one byte probes to None, not a division by zero") {
+    def withBits(channels: Int, bits: Int): Array[Byte] = {
+      val bytes = Wav.make(8000, channels, 10)
+      bytes(34) = bits.toByte
+      bytes(35) = 0
+      bytes
+    }
+    // mono 4-bit: a frame of half a byte
+    assert(Multimodal.parseWavHeader(1L, withBits(1, 4)).isEmpty)
+    assert(Multimodal.parseWavHeader(1L, withBits(0, 16)).isEmpty)
+    // stereo 4-bit frames are one byte: the 40 data bytes hold 40 frames
+    assert(Multimodal.parseWavHeader(1L, withBits(2, 4)).map(_.n_samples) === Some(40L))
+  }
+
   test("media byte layouts are decoded only in Media.scala") {
     val forbidden = Seq("def le32(", "ByteOrder.LITTLE_ENDIAN", "getInt(40)", "getShort(44")
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -205,7 +205,7 @@ class PlanSpec extends SparkSuite {
       "q205_activity_heatmap" -> ("events", 1),
       "q206_transition_latency" -> ("events", 1),
       "q207_collation_group" -> ("customer", 1),
-      "q210_bpe_merges" -> ("documents", 1),     // localCheckpoint pins each round
+      "q210_bpe_merges" -> ("documents", 1),     // each round is pinned (Pin)
       "q211_power_iteration" -> ("embeddings", 1),
       "q214_pareto_coverage" -> ("orders", 2),   // rank side + bucket offsets
       "q215_minmax_scaling" -> ("lineitem", 2),  // bounds + scaling pass

@@ -2,22 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-10 hardening: the q320 corpus-sized `localCheckpoint` became the
-  * persisted rp_lsh artifact (q332 is the driven build), and the
-  * `localCheckpoint` inventory itself is now a SPEC — every pin in main
-  * source is size-audited here, so a new corpus-sized pin cannot land
-  * without consciously editing the audit table (the round-9 verdict's
-  * "add the grep to a spec").
+/** Round-10 hardening: the q320 corpus-sized pin became the persisted
+  * rp_lsh artifact (q332 is the driven build), and the pin inventory is a
+  * spec: `graft.core.Pin` is the only code that checkpoints, every pin
+  * names its size class in its `bound`, and the per-file table below makes
+  * a new pin a conscious edit.
   */
 class Round10Spec extends SparkSuite {
 
-  // round 11 (judge's advisory): the audit is STRUCTURAL, not lexical —
-  // every pin line must carry a recognized size-class annotation on the
-  // SAME line ("…-sized" or an explicit row count); an unannotated pin
-  // fails the build outright instead of only "corpus"-worded ones
-  // slipping a lexical grep. "corpus" in the annotation still fails hard
-  // (q272 round 9, q320 round 10 — that class must be a persisted
-  // artifact, never a pin).
   private val sizeTag = ".*(-sized|[0-9]\\s*rows?\\b|\\brows?\\b).*".r
 
   private def pinOffense(l: String): Option[String] =
@@ -26,139 +18,43 @@ class Round10Spec extends SparkSuite {
       Some("UNANNOTATED (add a same-line size-class comment, e.g. '// K-sized')")
     else None
 
-  // ------------------------------------------- localCheckpoint audit
-  // Every `.localCheckpoint(` call site in src/main/scala, audited for
-  // boundedness. localCheckpoint blocks are NOT fault-tolerant (an
-  // executor loss invalidates them and fails the job), so the contract
-  // is: pins may hold config-sized / batch-sized / aggregate-sized
-  // frames whose loss costs one query retry — never a corpus-sized
-  // frame, which at 100 TB must be a persisted artifact (pq_lf, rp_lsh,
-  // the IVF lists, the band/winnow/gram-df indexes, the LM tables).
-  // Audit (sizes verified by reading each site's adjacent comment):
-  //  - Dedup.scala 10: star-contraction edge frames (shrink per round),
-  //    band/batch fixtures and admission batches (batch-sized), funnel
-  //    stage outputs (batch-sized).
-  //  - TextAnalysis.scala 18: vocab-sized LM/BPE round frames, 1-row
-  //    argmax pins, probe streams (config-count rows), batch-sized q377
-  //    maintenance postings, q374's K²-sized
-  //    confusion matrix (read by 3 rollups).
-  //  - Similarity.scala 18: K-row centroid/codebook rounds, ≤20-row probe
-  //    sets, 10-row query frames (incl. q416's), vec-count×2-long k-center rounds
-  //    (fault-tolerance tradeoff documented at q292), q344's two
-  //    slice-sized (≤Q314Slice×3-long) label-round frames, q357's
-  //    slice-sized 10-queries×vectors dot frame (read by 3 branches).
-  //  - Sampling.scala 6 (incl. q342's ≤2^20-row bucket-offset frame) /
-  //    Profiling.scala 6 (incl. q397's 4x64-row register frame and
-  //    q402's two value-domain-bounded per-value count frames) /
-  //    Curation.scala 6 (incl. q368's vocab-sized
-  //    distinct (source, gram) frame read by all greedy rounds and
-  //    q409's vocab-sized (source, token) count table) /
-  //    EventAnalytics.scala 15 (incl. q386's |days|x|types| daily frame,
-  //    q414's |days|-row daily frame, q415's |types|-row rollup,
-  //    q393's 16-row mask and coalition-value frames, q400's two
-  //    |nations|-row group/term frames, q405's two value-domain-bounded
-  //    per-value count frames, q407's |users|x|types| span frame,
-  //    read by both join sides) / Cdc.scala 1: stratum-, QI-group-, source-,
-  //    day-, users- or K-sized aggregate frames read by several branches.
-  test("localCheckpoint inventory: every pin is size-audited, none corpus-sized") {
+  /** Code lines of every main-source file, comment lines left out. */
+  private def mainCode(): Seq[(java.nio.file.Path, Int, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    val counts = scala.collection.mutable.Map.empty[String, Int]
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.toString.endsWith(".scala")) {
-        val lines = java.nio.file.Files.readAllLines(p)
-        var i = 0
-        while (i < lines.size()) {
-          val l = lines.get(i)
-          if (l.contains(".localCheckpoint(")) {
-            counts(p.getFileName.toString) =
-              counts.getOrElse(p.getFileName.toString, 0) + 1
-            pinOffense(l).foreach(o => offenders += s"$p:${i + 1}: $o: $l")
-          }
-          i += 1
-        }
-      }
-    }
-    assert(offenders.isEmpty,
-      s"localCheckpoint pin audit failures:\n${offenders.mkString("\n")}")
+    val files = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    java.nio.file.Files.walk(root).forEach(p => if (p.toString.endsWith(".scala")) files += p)
+    for {
+      p <- files.toSeq
+      (l, i) <- java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).zipWithIndex
+      t = l.trim
+      if !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*")
+    } yield (p, i + 1, l)
+  }
+
+  // ------------------------------------------------------------ pin audit
+  // Pins are local checkpoints: an executor loss invalidates them and
+  // fails the job, so a pin may hold a config-, batch- or aggregate-sized
+  // frame whose loss costs one query retry, never a corpus-sized frame,
+  // which must be a persisted artifact (pq_lf, rp_lsh, the IVF lists, the
+  // band/winnow/gram-df indexes, the LM tables). `Pin.SizedBy` refuses a
+  // domain that names the corpus.
+  test("localCheckpoint inventory: every pin is size-audited, none corpus-sized") {
+    val code = mainCode()
+    val checkpoints = code.filter(_._3.contains(".localCheckpoint("))
+      .filterNot(_._1.getFileName.toString == "Pin.scala")
+    assert(checkpoints.isEmpty,
+      s"materialise through graft.core.Pin:\n${checkpoints.map { case (p, i, l) => s"$p:$i: $l" }.mkString("\n")}")
+    val counts = code.filter(c => c._3.contains(".pin(") || c._3.contains(".pinLazily("))
+      .groupBy(_._1.getFileName.toString).view.mapValues(_.size).toMap
     val audited = Map(
-      // TextAnalysis 19th pin (r17): q311's distinct (source, gk) gram
-      // frame, source×gram-sized, read by sizes + both self-join sides
-      // Similarity r17: q292's three per-round pins removed (the greedy
-      // loop is now stateless passes over the stored dense vectors);
-      // q300's mining-pair dot frame added (read by 3 consumers).
-      // TextAnalysis 20th pin (r17): q364's bigram-type count table
-      // (vocab²-bounded), read by four consumers.
-      // Dedup 11th pin (r17): q140's sorted distinct-token arrays over the
-      // id-range-filtered candidate population, read by the word stream
-      // and both verification join sides.
-      // TextAnalysis 21st pin (r17): the bigram-LM build's type table
-      // (vocab²-bounded), read by the left-context rollup, the vocab-size
-      // readout, and the final model join.
-      // Relational 1st pin (r17): q161's per-customer RFM aggregate, read
-      // twice by each of the three quintile branches (2^3 re-embeds before).
-      // TextAnalysis 22nd pin (r17): q367's 5-row top-phrase frame, read
-      // by four consumers that each re-ran the corpus pair pass.
-      // Dedup 12th/13th pins (r17): q358's 1-row bloom geometry (read by
-      // both position passes + readout) and its set-bit-position table
-      // (≤ m_bits dense longs; the persisted filter of a deployment)
-      // TextAnalysis 23rd pin (r17): q250's merged model (vocab²-bounded),
-      // read by ucm/vm/both lpAfter sides.
-      // Similarity 17th-19th pins (r17): q370's per-vector score rows,
-      // q353's |labels|×vector score rows, q348's (lbl, score)
-      // distribution rows — each re-embedded the pq_lf scoring lineage
-      // 4-8x behind band offsets / rank joins / totals
-      // TextAnalysis 24th/25th pins (r17): q385's 20-row stop list (both
-      // runTok consumers re-embedded its corpus pass) and q66's doc×term
-      // tf table (df + corpus size derive from it — 3 scans → 1)
-      // Similarity 20th-28th pins (r17): q362's six walk frames (members
-      // slice-sized; entry/frontier/candidate sets ≤ 13·nQ rows — pins +
-      // broadcast hints replace the exponential lineage re-embeds that
-      // resisted the earlier pin-only attempt), q351's nQ-row per-query
-      // MRR frame, q320's 5-row query-bucket frame and probe-bucket-sized
-      // candidate pairs.
-      // TextAnalysis 26th-28th pins (r17): q321's and q338's doc-count-
-      // sized narrow score frames (BucketRank reads its input twice; the
-      // third consumer re-ran the w2 training aggregate), q338's ≤K³-row
-      // candidate-interval frame (re-embedded 4x under the two anti-joins).
-      // Profiling 7th/8th pins (r17): q397's shingle-set-sized distinct
-      // (source, md) frame (the exact-audit side; registers now derive
-      // from it — documents 2 → 1 scans), q402's customer-count-sized
-      // narrow base frame (was a `def` — three consumers re-ran the
-      // customer scan + orders rollup).
-      // EventAnalytics 16th/17th pins (r17): q304's K-sized out-degree
-      // frame and K-sized per-iteration rank iterate (the foldLeft chained
-      // each iteration's lineage into the next).
-      // EventAnalytics 18th pin (r17): q405's 5-row per-segment rank
-      // sums (the H aggregate and the readout re-embedded the rank join).
-      // Dedup 14th pin (r17): q317's batch-sized distinct fingerprint
-      // frame (two index-join consumers).
-      // r17 second sweep (each pin a bounded frame whose consumers
-      // re-embedded its build lineage; size classes on the pin lines):
-      // Similarity +3 — q345's edge-set/degree/triangle frames.
-      // Profiling +5 — q380's |days| daily frame and 7-row index,
-      // q395's QI-cube and t frames, q363's |sources|×16 cube, and
-      // q134's bucket-count frame (the global N now derives from it).
-      // Sampling +3 — q361's doc-count narrow hash frame and |sources|
-      // rollup, q261's doc×gram shingle frame (the q311 class).
-      // Curation +2 — q198's bucket offsets and global rank frame.
-      // EventAnalytics +4 — q405's per-segment rollup, q271's audience
-      // and sketch frames, q165's converting-users latency frame,
-      // q381's interval frame.
-      // Dedup +1 — q157's candidate-population token frame.
-      // Linkage +1 — q199's customer-count rank frame.
-      // r17 third sweep: Similarity +1 — q303's graded dot frame
-      // (≤ 2·nQ rows per scored vector; top-10 DCG and the n_rel rollup
-      // each re-embedded the ×64 long-form dot join without it).
       "Dedup.scala" -> 15, "TextAnalysis.scala" -> 30,
       "Relational.scala" -> 1, "Linkage.scala" -> 1,
-      "Similarity.scala" -> 32, "Sampling.scala" -> 9, "Profiling.scala" -> 14,
+      "Similarity.scala" -> 30, "Sampling.scala" -> 9, "Profiling.scala" -> 14,
       "Curation.scala" -> 8, "EventAnalytics.scala" -> 22, "Cdc.scala" -> 1,
-      "EtlQueries.scala" -> 1) // q413's 4-row class frame (counts + checksum)
-    assert(counts.toMap === audited,
-      s"localCheckpoint inventory drifted — re-audit the new/removed pins " +
-        s"for boundedness and update this table.\n  found: ${counts.toMap}\n" +
-        s"  audited: $audited")
+      "EtlQueries.scala" -> 1)
+    assert(counts === audited,
+      s"pin inventory drifted — check the new/removed pins' bounds and " +
+        s"update this table.\n  found: $counts\n  audited: $audited")
   }
 
   // round 12 (verdict #7): the SAME structural contract for driver-side

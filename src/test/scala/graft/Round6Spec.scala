@@ -226,12 +226,14 @@ class Round6Spec extends SparkSuite {
     // as a barrier: Spark's rank-limit pushdown (q16's shape) bounds the
     // final window's input to k rows per map partition.
     // the WHOLE catalog: construction executes real work for a few
-    // queries (checkpointed iterations, bucketed writes, micro-batch
-    // streams) — acceptable at sf0.001 for a sweep that guards every
-    // driven plan
+    // queries (pins, bucketed writes, micro-batch streams) — acceptable at
+    // sf0.001 for a sweep that guards every driven plan. A builder that
+    // throws fails the sweep: its plan would otherwise go unchecked.
     val offenders = for {
       (name, build) <- graft.SparkEntry.queries.toSeq
-      df <- scala.util.Try(build(spark, sf)).toOption.toSeq
+      df = try build(spark, sf) catch {
+        case e: Exception => fail(s"$name's builder threw", e)
+      }
       keys <- lowCardWindowOffenses(df)
     } yield s"$name[$keys]"
     assert(offenders.isEmpty,
