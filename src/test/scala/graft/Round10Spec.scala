@@ -10,6 +10,13 @@ import org.apache.spark.sql.functions._
   */
 class Round10Spec extends SparkSuite {
 
+  // round 11 (judge's advisory): the audit is STRUCTURAL, not lexical —
+  // every pin line must carry a recognized size-class annotation on the
+  // SAME line ("…-sized" or an explicit row count); an unannotated pin
+  // fails the build outright instead of only "corpus"-worded ones
+  // slipping a lexical grep. "corpus" in the annotation still fails hard
+  // (q272 round 9, q320 round 10 — that class must be a persisted
+  // artifact, never a pin).
   private val sizeTag = ".*(-sized|[0-9]\\s*rows?\\b|\\brows?\\b).*".r
 
   private def pinOffense(l: String): Option[String] =
