@@ -72,13 +72,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmPass = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0"
     // SPARK_GRAFT_BENCH_ONLY=q98_...,q97_... restricts the pass to named
     // queries — for targeted scale rehearsals; checked before the session
     // starts
     val names = selectQueries(SparkEntry.queries.keys, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    val spark = graft.core.SparkConfigs.localSession("graft-bench", cpus)
+    val spark = graft.core.SparkConfigs.localSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/file-index paths so the first timed query isn't
     // charged for session startup.

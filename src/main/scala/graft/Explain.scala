@@ -67,20 +67,21 @@ object Explain {
     }.groupBy(identity).view.mapValues(_.size).toMap
   }
 
-  /** One `[scan-audit]` line: scans, shuffle exchanges and joins. */
+  /** One `[scan-audit]` line: scans, shuffle exchanges and joins. ASCII
+    * only, so it prints the same under any default charset.
+    */
   def auditLine(name: String, df: DataFrame): String = {
     def counts(m: Map[String, Int]) =
-      m.toSeq.sortBy { case (k, n) => (-n, k) }.map { case (k, n) => s"$k×$n" }.mkString(", ")
+      m.toSeq.sortBy { case (k, n) => (-n, k) }.map { case (k, n) => s"${k}x$n" }.mkString(", ")
     s"[scan-audit] $name: ${counts(scanCounts(df))}; exchanges=${exchangeCount(df)}; " +
       s"joins=${counts(joinCounts(df))}"
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val auditOnly = args.headOption.contains("--scan-audit")
     val qargs = if (auditOnly) args.drop(1).toSeq else args.toSeq
-    val spark = graft.core.SparkConfigs.localSession("graft-explain", cpus)
+    val spark = graft.core.SparkConfigs.localSession("graft-explain")
     spark.sparkContext.setLogLevel("WARN")
     val names = if (qargs.nonEmpty) qargs else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

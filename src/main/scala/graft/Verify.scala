@@ -10,8 +10,7 @@ object Verify {
     // optional third arg: comma-separated query-name prefixes (e.g. "q53,q74")
     // — local iteration shortcut; the driver always runs the full set
     val only: Option[Seq[String]] = args.lift(2).map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.SparkConfigs.localSession("graft-verify", cpus)
+    val spark = graft.core.SparkConfigs.localSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (name, _) =>

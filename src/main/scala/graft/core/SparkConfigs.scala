@@ -64,9 +64,12 @@ object SparkConfigs {
   /** Local-mode builder used by this repo's executables: `cpus` threads and
     * an equal shuffle-partition count (the 200-partition default is wrong
     * for local mode; on a real cluster AQE coalescing makes the initial
-    * number far less critical).
+    * number far less critical). `cpus` defaults to `SPARK_GRAFT_CPUS`, else
+    * every available processor.
     */
-  def localSession(appName: String, cpus: String): SparkSession = {
+  def localSession(appName: String,
+                   cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+                     Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)

@@ -3,6 +3,7 @@ package graft.etl
 import graft.core.Utils
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFieldName, UnresolvedRelation, UnresolvedTable}
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
@@ -34,9 +35,10 @@ import scala.util.control.NonFatal
   *    definition with the new location (and the new schema, for RENAME).
   *    Then the relation cache is refreshed and the old directory of a
   *    managed table is deleted. A statement that fails before the commit
-  *    leaves the catalog, and the rows, on the old version. A crash between
-  *    the commit and the delete leaves the old directory behind as an
-  *    orphan: nothing reads it, and [[dropManagedTable]] or `DROP DATABASE
+  *    leaves the catalog, and the rows, on the old version; its new
+  *    directory is deleted once the write's tasks have stopped. A crash
+  *    between the commit and the delete leaves the old directory behind as
+  *    an orphan: nothing reads it, and [[dropManagedTable]] or `DROP DATABASE
   *    … CASCADE` removes it. Appends stay plain appends into the current
   *    directory. Views, partitioned and bucketed tables are refused: a
   *    view has no files, and a layout is not carried into the new version.
@@ -236,6 +238,9 @@ object Warehouse extends Logging {
     val current = new Path(meta.location)
     val fs = current.getFileSystem(spark.sessionState.newHadoopConf())
     val next = nextVersion(fs, current)
+    val sc = spark.sparkContext
+    val tag = s"graft-commit-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
     try {
       df.write.format(meta.provider.getOrElse(spark.sessionState.conf.defaultDataSourceName))
         .options(meta.storage.properties ++ WriteOptions)
@@ -246,11 +251,31 @@ object Warehouse extends Logging {
         stats = None))
     } catch {
       case NonFatal(e) =>
+        awaitTasksStopped(sc, tag)
         fs.delete(next, true)
         throw e
-    }
+    } finally sc.removeJobTag(tag)
     spark.catalog.refreshTable(meta.identifier.quotedString)
     if (meta.tableType == CatalogTableType.MANAGED) fs.delete(current, true)
+  }
+
+  /** Waits, at most 30 s, until the jobs tagged `tag` have ended and none of
+    * their stages has a running task. A failed job's other tasks are killed
+    * asynchronously and may still write into the version directory. The
+    * status tracker records a job's end only after every task start before
+    * it; a write that failed before it started a job waits 2 s for one.
+    */
+  private def awaitTasksStopped(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    val t0 = System.nanoTime()
+    def waitedMs = (System.nanoTime() - t0) / 1000000
+    def stopped = {
+      val jobs = st.getJobIdsForTag(tag).toSeq.flatMap(st.getJobInfo(_))
+      if (jobs.isEmpty) waitedMs >= 2000
+      else jobs.forall(_.status != JobExecutionStatus.RUNNING) &&
+        jobs.flatMap(_.stageIds).flatMap(st.getStageInfo(_)).forall(_.numActiveTasks == 0)
+    }
+    while (!stopped && waitedMs < 30000) Thread.sleep(20)
   }
 
   private val VersionSuffix = """-v(\d+)"""

@@ -97,38 +97,12 @@ object Curation {
   }
 
   // ---------------------------------------------------------------- q118
-  /** Distributed prefix sum — the scalable form of `sum() OVER (ORDER BY …
-    * ROWS UNBOUNDED PRECEDING)`, which Spark executes in ONE partition for
-    * a global ordering (the classic window scalability trap). Two-phase
-    * instead: local cumulative sums inside fixed-width id buckets (window
-    * partitioned BY bucket — parallel), bucket totals rolled into bucket
-    * offsets (a window over the tiny bucket list), offsets joined back
-    * (broadcast — one row per bucket). Exact same result, no single-task
-    * bottleneck at any corpus size.
-    */
-  def prefixSum(df: DataFrame, orderCol: String, valueCol: String,
-                bucketWidth: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = df.withColumn("__bucket", floor(col(orderCol) / bucketWidth))
-    val local = bucketed.withColumn("__local_cum",
-      sum(col(valueCol)).over(Window.partitionBy(col("__bucket"))
-        .orderBy(col(orderCol)).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val offsets = bucketed.groupBy(col("__bucket"))
-      .agg(sum(col(valueCol)).as("__bucket_sum"))
-      .withColumn("__offset",
-        coalesce(sum(col("__bucket_sum")).over(Window.orderBy(col("__bucket")) // bucket-summary-sized offsets frame (<= 2^20 rows)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__bucket"), col("__offset"))
-    local.join(broadcast(offsets), "__bucket")
-      .withColumn("cum", col("__local_cum") + col("__offset"))
-      .drop("__bucket", "__local_cum", "__offset")
-  }
-
   /** Sequence packing (GPT-style concat-and-chunk): documents are
     * concatenated in doc_id order and split into fixed token-budget
     * windows; a doc's pack is where its first token lands. The cumulative
-    * token count comes from [[prefixSum]] — the packing of a 100 TB corpus
-    * never funnels through one task. Emits per-pack doc/token counts.
+    * token count is a [[BucketRank.Running]] total over 100-id buckets —
+    * the packing of a 100 TB corpus never funnels through one task. Emits
+    * per-pack doc/token counts.
     * Deterministic → full oracle (DuckDB's global window sum is the
     * semantic spec the two-phase prefix sum must equal).
     */
@@ -138,7 +112,8 @@ object Curation {
     val docs = graft.sources.Tables.documents(spark, d)
       .select(col("doc_id"),
         size(words(col("text"))).cast("long").as("n_tokens"))
-    prefixSum(docs, "doc_id", "n_tokens", bucketWidth = 100L)
+    BucketRank.Running(Nil, floor(col("doc_id") / 100L), Seq(col("doc_id")),
+        "cum" -> col("n_tokens"))(docs)
       .withColumn("pack_id", floor((col("cum") - col("n_tokens")) / Q118PackBudget))
       .groupBy(col("pack_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).cast("long").as("pack_tokens"))
@@ -357,7 +332,8 @@ object Curation {
     // stage 6: token counts + sequence packing (q118 two-phase prefix sum)
     val toks = clean.select(col("doc_id"),
       size(words(col("text"))).cast("long").as("n_tokens"))
-    val packs = prefixSum(toks, "doc_id", "n_tokens", bucketWidth = 100L)
+    val packs = BucketRank.Running(Nil, floor(col("doc_id") / 100L), Seq(col("doc_id")),
+        "cum" -> col("n_tokens"))(toks)
       .withColumn("pack_id", floor((col("cum") - col("n_tokens")) / Q150PackBudget))
       .groupBy(col("pack_id"))
       .agg(count(lit(1)).as("n_docs"),
@@ -497,44 +473,21 @@ object Curation {
   // ---------------------------------------------------------------- q180
   /** Length-decile composition report — "what does each length band of the
     * corpus look like": documents exact-ntile'd by (n_chars, doc_id) into
-    * deciles (the q134 two-phase rank — bucket-local row_number + broadcast
-    * bucket offsets + the SQL-standard tile formula, so DuckDB's native
-    * ntile is the independent spec), then per decile the English share and
-    * char bounds. The report every mixing decision (q119) starts from:
-    * short-doc bands skewing non-English (or boilerplate) is the classic
+    * deciles (a [[BucketRank]] rank and its SQL-standard tile formula, so
+    * DuckDB's native ntile is the independent spec), then per decile the
+    * English share and char bounds. The report every mixing decision
+    * (q119) starts from: short-doc bands skewing non-English (or boilerplate) is the classic
     * crawl pathology this surfaces. One corpus exchange for the rank; the
     * lang flag rides the same rows — exact integer counts, one
     * correctly-rounded share division.
     */
   def q180LengthDecileMix(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tiles = 10
     val docs = Tables.documents(spark, d)
       .select(col("doc_id"), col("n_chars"),
         when(col("lang") === "en", 1L).otherwise(0L).as("is_en"))
-      .withColumn("__bucket", expr("n_chars div 50"))
-    val local = docs.withColumn("__local_rank",
-      row_number().over(Window.partitionBy(col("__bucket"))
-        .orderBy(col("n_chars"), col("doc_id"))).cast("long"))
-    val offsets = docs.groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__bucket_n"))
-      .withColumn("__offset",
-        coalesce(sum(col("__bucket_n")).over(Window.orderBy(col("__bucket")) // bucket-summary-sized offsets frame
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__n", sum(col("__bucket_n")).over(
-        Window.orderBy(col("__bucket")) // bucket-summary-sized offsets frame
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("__bucket"), col("__offset"), col("__n"))
-    local.join(broadcast(offsets), "__bucket")
-      .withColumn("__rank", col("__offset") + col("__local_rank"))
-      .withColumn("decile", expr(
-        s"""CAST(CASE
-              WHEN __rank <= (__n % $tiles) * (__n div $tiles + 1)
-              THEN (__rank - 1) div (__n div $tiles + 1) + 1
-              ELSE __n % $tiles
-                   + (__rank - (__n % $tiles) * (__n div $tiles + 1) - 1)
-                     div (__n div $tiles) + 1
-            END AS BIGINT)"""))
+    BucketRank.Running(Nil, expr("n_chars div 50"), Seq(col("n_chars"), col("doc_id")),
+        "rank" -> lit(1L))(docs)
+      .withColumn("decile", BucketRank.ntile(col("rank"), col("rank_total"), 10))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),
         expr("cast(sum(is_en) as bigint)").as("n_en"),
@@ -574,25 +527,13 @@ object Curation {
   def q198QuantileNormalize(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dd = Tables.documents(spark, d).select(col("source"), col("doc_id"), col("n_chars"))
-    // global rank via the q134/q178 two-phase bucket pattern — value-band
-    // buckets, bucket-local row_number, broadcast cumulative offsets (the
-    // only globally-ordered windows run over the tiny bucket table, which
-    // also yields the corpus count N)
+    // global rank through BucketRank; its bucket frame (which also carries
+    // the corpus count N) and the global rank frame are each read by two joins
     val gb = dd.select(col("n_chars").as("gv"), col("doc_id").as("gid"))
-      .withColumn("bucket", expr("gv div 50"))
-    val wB = Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, -1) // bucket-summary-sized offsets frame
-    val wAll = Window.orderBy(col("bucket")) // bucket-summary-sized offsets frame
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // offsets and the global rank frame are each read by two joins
-    val offsets = gb.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bn")).over(wB), lit(0L)))
-      .withColumn("nn", sum(col("bn")).over(wAll))
-      .select(col("bucket"), col("off"), col("nn"))
-      .pin(SizedBy("bucket-summary")) // offsets frame
-    val g = gb.withColumn("lrn", row_number().over(
-        Window.partitionBy(col("bucket")).orderBy(col("gv"), col("gid"))))
-      .join(broadcast(offsets), Seq("bucket"))
-      .select(col("gv"), (col("off") + col("lrn")).as("gr"))
+    val rank = BucketRank.Running(Nil, expr("gv div 50"), Seq(col("gv"), col("gid")),
+      "gr" -> lit(1L))
+    val buckets = rank.frame(gb).pin(SizedBy("bucket-summary")) // bucket frame
+    val g = rank(gb, buckets).select(col("gv"), col("gr"))
       .pin(SizedBy("doc-count")) // narrow (value, rank)
     // per-source ranks: source is the documented low-cardinality-window
     // tradeoff (20 sources here; see SCALE.md) — the corpus count N rides
@@ -601,7 +542,7 @@ object Curation {
       .withColumn("r", row_number().over(
         Window.partitionBy(col("source")).orderBy(col("n_chars"), col("doc_id"))))
       .withColumn("m", count(lit(1)).over(Window.partitionBy(col("source"))))
-      .crossJoin(broadcast(offsets.groupBy().agg(max(col("nn")).as("nn"))))
+      .crossJoin(broadcast(buckets.groupBy().agg(max(col("gr_total")).as("nn"))))
       .withColumn("tr", expr("(r * nn + m - 1) div m"))
     s.join(g, col("tr") === col("gr"))
       .groupBy(col("source"))

@@ -2847,14 +2847,13 @@ object EventAnalytics {
     * both engines), clamped at 0 before correction so the truncation
     * noise floor on null data cannot flip signs between engines. Readout
     * per segment: n_g, R2_g, with H, H′ and the α=0.05 decision against
-    * χ²₄ = 9.488 riding every row. Scale shape: ranks via the q134/q402
-    * two-phase pattern (per-value counts → ≤1,100 domain-bounded cent
-    * bands → broadcast offsets → within-band running sum) — never a
-    * global corpus window; the value frame is bounded by the cents
-    * domain at any corpus size. Full oracle.
+    * χ²₄ = 9.488 riding every row. Scale shape: ranks are a
+    * [[BucketRank.Running]] count of per-value counts over ≤1,100
+    * domain-bounded cent bands — never a global corpus window; the value
+    * frame is bounded by the cents domain at any corpus size. Full
+    * oracle.
     */
   def q405KruskalWallis(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cust = graft.sources.Tables.customer(spark, d)
       .select(col("c_mktsegment").as("seg"),
         expr("cast(round(c_acctbal * 100) as bigint)").as("x"))
@@ -2862,16 +2861,9 @@ object EventAnalytics {
       .pin(SizedBy("value-domain")) // ≤1.1M cent values × 5 segs
     val xcnt = cs.groupBy(col("x")).agg(expr("cast(sum(cg) as bigint)").as("c"))
       .pin(SizedBy("value-domain")) // ≤1.1M distinct cent values
-    val off = xcnt.withColumn("b", expr("x div 10000"))
-      .groupBy(col("b")).agg(expr("cast(sum(c) as bigint)").as("bc"))
-      .withColumn("boff", expr("cast(coalesce(sum(bc) OVER (ORDER BY b ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as bigint)"))
-      .select(col("b"), col("boff")) // ≤1,100 rows (domain-bounded bands)
-    val wx = Window.partitionBy(col("b")).orderBy(col("x").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val rank2 = xcnt.withColumn("b", expr("x div 10000"))
-      .join(broadcast(off), "b")
-      .withColumn("cum", sum(col("c")).over(wx))
-      .select(col("x"), expr("2 * (boff + cum - c + 1) + c - 1").as("r2"))
+    // midranks: a BucketRank running count over ≤1,100 cent bands
+    val rank2 = BucketRank.Running(Nil, expr("x div 10000"), Seq(col("x")), "cum" -> col("c"))(xcnt)
+      .select(col("x"), expr("2 * (cum - c + 1) + c - 1").as("r2"))
     // the rank frame is cents-domain-bounded at any corpus size (the q402
     // rule), so the per-value count frame never shuffles on x; perSeg is
     // read by the H aggregate and the final readout
@@ -3061,33 +3053,20 @@ object EventAnalytics {
     * ln(p₁/p₀) = ln(.20/.10) → +693147; failure ln(.80/.90) → −117783 —
     * constants, so no data-side logs at all) and the test stops at the
     * FIRST crossing of ±ln(19) = ±2 944 439 µ-nat (α = β = 0.05). The
-    * sequential walk is distributed by the q342/q214 two-phase shape: a
-    * within-day prefix window plus broadcast per-day offsets — no
-    * single-task corpus sort; the oracle replays the PLAIN global window,
-    * certifying the rewrite. Readout: stream size, successes, the
-    * stopping index and decision ('h1'/'h0'/'none'), the walk value at
-    * the stop, and the endpoint. Full oracle.
+    * sequential walk is a [[BucketRank.Running]] count and sum over day
+    * buckets — no single-task corpus sort; the oracle replays the PLAIN
+    * global window, certifying the rewrite. Readout: stream size,
+    * successes, the stopping index and decision ('h1'/'h0'/'none'), the
+    * walk value at the stop, and the endpoint. Full oracle.
     */
   def q392Sprt(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, d).filter(expr("user_id % 2 = 1"))
-      .select(col("ts"), col("event_id"), expr("CAST(ts AS DATE)").as("day"),
+      .select(col("ts"), col("event_id"),
         expr("CASE WHEN event_type = 'purchase' THEN cast(693147 as bigint) ELSE cast(-117783 as bigint) END")
           .as("inc"))
-    val wDay = Window.partitionBy(col("day")).orderBy(col("ts").asc, col("event_id").asc)
-    val inDay = ev.withColumn("rn", row_number().over(wDay))
-      .withColumn("ps", sum(col("inc")).over(
-        wDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val wOff = Window.orderBy(col("day").asc) // |days|-sized offsets frame
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = ev.groupBy(col("day"))
-      .agg(count(lit(1)).as("cnt"), expr("cast(sum(inc) as bigint)").as("tot"))
-      .withColumn("off_cnt", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-      .withColumn("off_tot", coalesce(sum(col("tot")).over(wOff), lit(0L)))
-      .select(col("day"), col("off_cnt"), col("off_tot"))
-    val walk = inDay.join(broadcast(offs), "day")
-      .select((col("off_cnt") + col("rn")).as("idx"),
-        (col("off_tot") + col("ps")).as("llr"), col("inc"))
+    // the walk's index and value: running count and sum over day buckets
+    val walk = BucketRank.Running(Nil, expr("CAST(ts AS DATE)"), Seq(col("ts").asc, col("event_id").asc),
+      "idx" -> lit(1L), "llr" -> col("inc"))(ev)
     walk.agg(count(lit(1)).as("n_events"),
         expr("cast(count_if(inc > 0) as bigint)").as("n_success"),
         expr("cast(sum(inc) as bigint)").as("final_llr_munat"),

@@ -159,27 +159,18 @@ object Linkage {
     * w−1 successors (w=3 here). Catches near-matches that straddle q98's
     * prefix-block boundary and bounds candidates at w·n regardless of
     * block-size skew — no hot block can quadratize. The global sort rank
-    * comes from the two-phase bucket pattern (prefix buckets sort
-    * consistently with full names, bucket-local row_number + broadcast
-    * cumulative offsets — no single-task window), and the neighbor pairs
-    * are two RANK-ADJACENCY EQUI-JOINS (gr+1, gr+2) — no boundary
+    * is a [[BucketRank]] rank over name-prefix buckets (they sort
+    * consistently with full names — no single-task window), and the
+    * neighbor pairs are two RANK-ADJACENCY EQUI-JOINS (gr+1, gr+2) — no boundary
     * special-casing, because global ranks have no boundaries. The oracle
     * replays the textbook single-window formulation.
     */
   def q199SortedNeighborhood(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = Tables.customer(spark, d)
       .select(col("c_custkey").as("id"), col("c_name").as("name"))
-      .withColumn("bucket", substring(col("name"), 1, 16))
-    val local = c.withColumn("rn", row_number().over(
-      Window.partitionBy(col("bucket")).orderBy(col("name"), col("id"))))
-    val offsets = c.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bn")).over(
-        Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, -1)), // block-summary-sized offsets frame
-        lit(0L)))
-      .select(col("bucket"), col("off"))
-    val ranked = local.join(broadcast(offsets), Seq("bucket"))
-      .select(col("id"), col("name"), (col("off") + col("rn")).as("gr"))
+    val ranked = BucketRank.Running(Nil, substring(col("name"), 1, 16), Seq(col("name"), col("id")),
+        "gr" -> lit(1L))(c)
+      .select(col("id"), col("name"), col("gr"))
       .pin(SizedBy("customer-count")) // narrow rank frame (r17: both adjacency-join sides re-ran the two-phase rank unpinned — customer x4)
     // each record targets its two successor ranks via ONE exploded
     // equi-join (a union of per-offset joins would re-embed the rank

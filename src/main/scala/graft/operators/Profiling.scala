@@ -157,9 +157,7 @@ object Profiling {
     * turns a numeric column into balanced categorical deciles. The naive
     * formulation is `ntile(10) OVER (ORDER BY …)`, which Spark executes in
     * ONE task for a global ordering; this operator computes the identical
-    * result with the q118 two-phase shape instead: fixed-width value
-    * buckets give a parallel per-bucket `row_number`, the tiny per-bucket
-    * count list rolls into offsets, global rank = offset + local rank, and
+    * result as a [[BucketRank]] rank over fixed-width value buckets, and
     * the ntile bucket falls out arithmetically (first n%k buckets take
     * ⌈n/k⌉ rows — the SQL-standard definition, so DuckDB's native ntile is
     * the independent spec it must equal). Total order ties break by
@@ -168,33 +166,10 @@ object Profiling {
   val Q134Tiles = 10
 
   def q134EquidepthBins(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val o = Tables.orders(spark, d).select(col("o_orderkey"), col("o_totalprice"))
-      .withColumn("__bucket", floor(col("o_totalprice") / 25000.0))
-    val local = o.withColumn("__local_rank",
-      row_number().over(Window.partitionBy(col("__bucket"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))).cast("long"))
-    // offsets AND the global row count derive from the bucket counts
-    val bcnt = o.groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__bucket_n"))
-      .pin(SizedBy("bucket-summary")) // counts
-    val offsets = bcnt
-      .withColumn("__offset",
-        coalesce(sum(col("__bucket_n")).over(Window.orderBy(col("__bucket")) // bucket-summary-sized offsets frame
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__bucket"), col("__offset"))
-    val n1 = bcnt.agg(expr("cast(sum(__bucket_n) as bigint)").as("__n"))
-    local.join(broadcast(offsets), "__bucket")
-      .withColumn("__rank", col("__offset") + col("__local_rank"))
-      .crossJoin(broadcast(n1))
-      .withColumn("decile", expr(
-        s"""CAST(CASE
-              WHEN __rank <= (__n % $Q134Tiles) * (__n div $Q134Tiles + 1)
-              THEN (__rank - 1) div (__n div $Q134Tiles + 1) + 1
-              ELSE __n % $Q134Tiles
-                   + (__rank - (__n % $Q134Tiles) * (__n div $Q134Tiles + 1) - 1)
-                     div (__n div $Q134Tiles) + 1
-            END AS BIGINT)"""))
+    BucketRank.Running(Nil, floor(col("o_totalprice") / 25000.0),
+        Seq(col("o_totalprice"), col("o_orderkey")), "rank" -> lit(1L))(o)
+      .withColumn("decile", BucketRank.ntile(col("rank"), col("rank_total"), Q134Tiles))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n"), min(col("o_totalprice")).as("lo"),
         max(col("o_totalprice")).as("hi"),
@@ -588,38 +563,24 @@ object Profiling {
   /** Gini coefficient of spend concentration — "what share of revenue do
     * the biggest customers hold": G = Σ(2i−n−1)·xᵢ / (n·Σxᵢ) over
     * ascending-sorted per-customer spend. The classic form needs a GLOBAL
-    * rank; computed here with the two-phase pattern (q134): per-customer
-    * cents totals bucketed by equal-width spend bands, bucket-local
-    * row_number, broadcast cumulative bucket counts → global i without a
-    * single-task window over the customer table. All moments are
+    * rank; computed here as a [[BucketRank]] rank of per-customer cents
+    * totals over equal-width spend bands → global i without a single-task
+    * window over the customer table. All moments are
     * DECIMAL(38,0)-exact (i·xᵢ products up to ~10²⁰); the final G is one
     * correctly-rounded division. One corpus exchange (orders→customers);
     * everything after runs on the per-customer aggregate.
     */
   def q178GiniConcentration(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = Tables.orders(spark, d)
       .select(col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("vc"))
       .groupBy(col("o_custkey"))
       .agg(expr("cast(sum(cast(vc as decimal(38,0))) as bigint)").as("sp"))
-      .withColumn("bucket", expr("sp div 100000000"))
-    val wLocal = Window.partitionBy(col("bucket")).orderBy(col("sp"), col("o_custkey"))
-    val wBucket = Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, -1) // bucket-summary-sized offsets frame
-    val wAll = Window.orderBy(col("bucket")) // bucket-summary-sized frame
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // per-bucket counts: the only globally-windowed frame is this tiny
-    // bucket table (cumulative offsets + the global n both ride it)
-    val offsets = s.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bn")).over(wBucket), lit(0L)))
-      .withColumn("nn", sum(col("bn")).over(wAll))
-      .select(col("bucket"), col("off"), col("nn"))
-    s.withColumn("lrn", row_number().over(wLocal))
-      .join(broadcast(offsets), Seq("bucket"))
-      .withColumn("i", col("off") + col("lrn"))
+    BucketRank.Running(Nil, expr("sp div 100000000"), Seq(col("sp"), col("o_custkey")),
+        "i" -> lit(1L))(s)
       .agg(count(lit(1)).as("n_customers"),
         expr("cast(sum(cast(sp as decimal(38,0))) as bigint)").as("total_cents"),
-        expr("""CAST(sum((2 * cast(i as decimal(38,0)) - nn - 1)
+        expr("""CAST(sum((2 * cast(i as decimal(38,0)) - i_total - 1)
                         * cast(sp as decimal(38,0))) AS DOUBLE)""").as("num"))
       .select(col("n_customers"), col("total_cents"),
         expr("num / (CAST(n_customers AS DOUBLE) * CAST(total_cents AS DOUBLE))")
@@ -677,41 +638,24 @@ object Profiling {
   /** Pareto coverage — how many customers cover 80% of revenue (the 80/20
     * check q178's Gini summarizes into one number; this answers the
     * operational question behind it: how small is the head). The
-    * descending cumulative-share scan uses the two-phase bucket pattern
-    * (bucket-local running sums in spend-DESC order + broadcast cumulative
-    * bucket totals — no single-task window over the customer table), and
-    * the 80% test compares exact DECIMAL products ((cum−sp)·5 < tot·4) so
-    * no float threshold exists. The oracle replays the plain-window
+    * descending cumulative-share scan is a [[BucketRank]] running sum over
+    * negated spend bands (no single-task window over the customer table),
+    * and the 80% test compares exact DECIMAL products ((cum−sp)·5 < tot·4)
+    * so no float threshold exists. The oracle replays the plain-window
     * formulation — equality certifies the two-phase prefix sums.
     */
   def q214ParetoCoverage(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = Tables.orders(spark, d)
       .select(col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("vc"))
       .groupBy(col("o_custkey"))
       .agg(expr("cast(sum(cast(vc as decimal(38,0))) as bigint)").as("sp"))
-      .withColumn("bucket", expr("sp div 100000000"))
-    val wLocal = Window.partitionBy(col("bucket"))
-      .orderBy(col("sp").desc, col("o_custkey"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wB = Window.orderBy(col("bucket").desc) // bucket-summary-sized offsets frame
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy(col("bucket")) // bucket-summary-sized frame
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = s.groupBy(col("bucket"))
-      .agg(expr("cast(sum(cast(sp as decimal(38,0))) as decimal(38,0))").as("bsum"),
-        count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bsum")).over(wB), lit(0).cast("decimal(38,0)")))
-      .withColumn("tot", sum(col("bsum")).over(wAll))
-      .withColumn("nn", sum(col("bn")).over(wAll))
-      .select(col("bucket"), col("off"), col("tot"), col("nn"))
-    s.withColumn("lcum", sum(col("sp").cast("decimal(38,0)")).over(wLocal))
-      .join(broadcast(offsets), Seq("bucket"))
-      .withColumn("cum", col("off") + col("lcum"))
-      .groupBy()
-      .agg(expr("cast(min(nn) as bigint)").as("n_customers"),
-        expr("cast(sum(CASE WHEN (cum - sp) * 5 < tot * 4 THEN 1 ELSE 0 END) as bigint)")
+    // descending spend order: the bucket is negated
+    BucketRank.Running(Nil, expr("-(sp div 100000000)"), Seq(col("sp").desc, col("o_custkey")),
+        "cum" -> col("sp"))(s)
+      .agg(count(lit(1)).as("n_customers"),
+        expr("""cast(sum(CASE WHEN (cast(cum as decimal(38,0)) - sp) * 5
+                              < cast(cum_total as decimal(38,0)) * 4 THEN 1 ELSE 0 END) as bigint)""")
           .as("n_for_80pct"))
       .withColumn("share_of_customers",
         expr("CAST(n_for_80pct AS DOUBLE) / CAST(n_customers AS DOUBLE)"))
@@ -1693,18 +1637,10 @@ object Profiling {
       .pin(SizedBy("value-domain")) // ≤1.1M distinct cent values at any SF
     val ycnt = base.groupBy(col("y")).agg(count(lit(1)).as("c"))
       .pin(SizedBy("value-domain")) // ≤ max orders/customer rows
-    // two-phase min-rank over x: bucket totals (≤1,100 rows) → offsets →
-    // within-bucket running count; never a global ORDER BY window
-    val xb = xcnt.withColumn("b", expr("x div 10000"))
-    val off = xb.groupBy(col("b")).agg(expr("cast(sum(c) as bigint)").as("bc"))
-      .withColumn("boff", expr("cast(coalesce(sum(bc) OVER (ORDER BY b ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as bigint)"))
-      .select(col("b"), col("boff")) // ≤1,100 rows (domain-bounded bands)
-    val wx = Window.partitionBy(col("b")).orderBy(col("x").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val xr = xb.join(broadcast(off), "b")
-      .withColumn("cum", sum(col("c")).over(wx))
-      .select(col("x"),
-        expr("2 * (boff + cum - c + 1) + c - 1").as("rx2"))
+    // min-rank over x: a BucketRank running count over ≤1,100 cent bands;
+    // never a global ORDER BY window
+    val xr = BucketRank.Running(Nil, expr("x div 10000"), Seq(col("x")), "cum" -> col("c"))(xcnt)
+      .select(col("x"), expr("2 * (cum - c + 1) + c - 1").as("rx2"))
     val wy = Window.orderBy(col("y").asc) // value-domain-sized per-value count frame
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val yr = ycnt.withColumn("cum", sum(col("c")).over(wy)) // K-sized frame: the global window is over ≤|max orders| rows

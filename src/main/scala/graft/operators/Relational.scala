@@ -1065,50 +1065,23 @@ object Relational {
     * each quintile is a rank-defined ntile over a TOTAL order
     * (metric, custkey), so both engines bin identically (no interpolation
     * flavor, the q132/q134 rule); the final cube is ≤125 cells regardless
-    * of customer count. Round 13: the per-metric rank IS the two-phase
-    * form (bucket-local row_number + broadcast bucket offsets + exact
-    * ntile arithmetic) — no unpartitioned window touches the per-customer
-    * frame, so the plan holds at 10⁹ customers, not just fixture scale.
+    * of customer count. The per-metric rank is a [[BucketRank]] rank with
+    * exact ntile arithmetic — no unpartitioned window touches the
+    * per-customer frame, so the plan holds at 10⁹ customers, not just
+    * fixture scale.
     */
   def q161RfmSegmentation(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // each quintile ranks independently against this frame (quintile2
-    // reads its input twice); the three (custkey, quintile) columns join back
+    // each quintile ranks independently against this frame (a BucketRank
+    // rank reads its input twice); the three (custkey, quintile) columns join back
     val per = Tables.orders(spark, d)
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("n_orders"),
         expr("cast(sum(cast(round(o_totalprice * 100) as bigint)) as bigint)").as("spend_c"))
       .pin(SizedBy("customer-population")) // aggregate, read by all three quintile branches
-    // Round 13: each quintile was ntile(5) over an UNPARTITIONED window —
-    // the whole per-customer frame through one task. Now the two-phase
-    // form (q199/BucketRank pattern): bucket sorts consistently with the
-    // metric's DESC order (negated value/day), bucket-local row_number,
-    // broadcast bucket offsets → global rank, then SQL ntile's EXACT
-    // arithmetic (first n%k tiles get one extra row) so the unchanged
-    // DuckDB native-ntile oracle still matches hash-for-hash. The total n
-    // rides the bucket-summary frame — no extra scan, no driver action.
-    def quintile2(df: DataFrame, bucket: Column, ord: Seq[Column], out: String): DataFrame = {
-      val withB = df.withColumn("__b", bucket)
-      val local = withB.withColumn("__rn",
-        row_number().over(Window.partitionBy(col("__b")).orderBy(ord: _*)).cast("long"))
-      val offsets = withB.groupBy(col("__b")).agg(count(lit(1)).as("__bn"))
-        .withColumn("__off", coalesce(sum(col("__bn")).over(
-          Window.orderBy(col("__b")) // bucket-summary-sized offsets frame (|days| / |order-counts| / spend-millions buckets)
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("__nn", sum(col("__bn")).over(
-          Window.orderBy(col("__b")) // bucket-summary-sized offsets frame (same tiny frame, unbounded total)
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(col("__b"), col("__off"), col("__nn"))
-      local.join(broadcast(offsets), "__b")
-        .withColumn("__gr", col("__off") + col("__rn"))
-        .withColumn(out, expr(
-          """CASE WHEN __gr <= (__nn div 5 + 1) * (__nn % 5)
-               THEN (__gr - 1) div (__nn div 5 + 1) + 1
-               ELSE (__nn % 5) + (__gr - (__nn div 5 + 1) * (__nn % 5) - 1)
-                    div (__nn div 5) + 1 END""").cast("long"))
-        .drop("__b", "__rn", "__off", "__gr", "__nn")
-    }
+    // each metric ranks DESC, so its bucket is the negated value (day,
+    // order count, spend millions); SQL ntile's exact arithmetic keeps the
+    // DuckDB native-ntile oracle matching hash-for-hash
     val ranked = Seq(
       (expr("-datediff(last_order, DATE '1990-01-01')"),
         Seq(col("o_custkey").asc), "r_q"),
@@ -1116,7 +1089,8 @@ object Relational {
       (expr("-(spend_c div 1000000)"),
         Seq(col("spend_c").desc, col("o_custkey").asc), "m_q"))
       .map { case (b, o, out) =>
-        quintile2(per, b, o, out).select(col("o_custkey"), col(out)) }
+        BucketRank.Running(Nil, b, o, "rank" -> lit(1L))(per)
+          .select(col("o_custkey"), BucketRank.ntile(col("rank"), col("rank_total"), 5).as(out)) }
       .foldLeft(per) { case (df, q) => df.join(q, "o_custkey") }
     ranked
       .groupBy(col("r_q"), col("f_q"), col("m_q"))
@@ -1436,41 +1410,29 @@ object Relational {
     * (price weighted by quantity here; latency weighted by request count in
     * an ops table): the smallest value whose running weight reaches half
     * the group total. The group key has 3 values, so the running-sum window
-    * runs in the BucketRank two-phase shape rather than over the raw corpus
-    * (the low-cardinality trap, SCALE.md): per-(group, price-bucket) weight
-    * sums — an ordinary parallel aggregate — roll into per-bucket weight
-    * offsets on the tiny bucket frame; exactly ONE bucket per group
-    * contains the half-weight crossing (2·offset < total ≤ 2·(offset +
-    * bucket weight)), and only that bucket's rows get the running-sum
-    * window, seeded with the bucket offset. All weights exact integers; the
-    * 2·running ≥ total comparison never divides, so there is no float
-    * boundary for the engines to disagree on. Round6Spec proves equality
+    * runs as a [[BucketRank.Running]] sum rather than over the raw corpus
+    * (the low-cardinality trap, SCALE.md): its (group, price-bucket) frame
+    * holds each bucket's weight, offset and the group total; exactly ONE
+    * bucket per group contains the half-weight crossing (2·offset < total
+    * ≤ 2·(offset + bucket weight)), and only that bucket's rows, joined
+    * with the filtered frame, get the running-sum window. All weights
+    * exact integers; the 2·running ≥ total comparison never divides, so
+    * there is no float boundary for the engines to disagree on. Round6Spec proves equality
     * with the plain-window form.
     */
   def q177WeightedMedian(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val x = Tables.lineitem(spark, d).select(col("l_returnflag").as("g"),
       expr("cast(round(l_extendedprice * 100) as bigint)").as("c"),
       expr("cast(round(l_quantity) as bigint)").as("q"),
       col("l_orderkey").as("ok"), col("l_linenumber").as("ln"))
-      .withColumn("__b", expr("c div 100000"))           // $1000-wide buckets
-    val wsum = x.groupBy(col("g"), col("__b")).agg(sum(col("q")).as("__w"))
-    val off = wsum
-      .withColumn("__woff", coalesce(
-        sum(col("__w")).over(Window.partitionBy(col("g")).orderBy(col("__b"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("total", sum(col("__w")).over(Window.partitionBy(col("g"))))
-    val crossing = off
-      .filter(expr("2 * __woff < total AND 2 * (__woff + __w) >= total"))
-      .select(col("g"), col("__b"), col("__woff"), col("total"))
-    val wRun = Window.partitionBy(col("g"), col("__b"))
-      .orderBy(col("c"), col("ok"), col("ln"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    x.join(broadcast(crossing), Seq("g", "__b"))
-      .withColumn("running", col("__woff") + sum(col("q")).over(wRun))
-      .filter(expr("2 * running >= total"))
+    val run = BucketRank.Running(Seq("g"), expr("c div 100000"), // $1000-wide buckets
+      Seq(col("c"), col("ok"), col("ln")), "running" -> col("q"))
+    val crossing = run.frame(x).filter(expr(
+      "2 * running_off < running_total AND 2 * (running_off + running_bucket) >= running_total"))
+    run(x, crossing)
+      .filter(expr("2 * running >= running_total"))
       .groupBy(col("g"))
-      .agg(expr("cast(min(total) as bigint)").as("total_qty"),
+      .agg(expr("cast(min(running_total) as bigint)").as("total_qty"),
         expr("cast(min(c) as bigint)").as("wmedian_cents"))
       .withColumn("wmedian_price", expr("CAST(wmedian_cents AS DOUBLE) / 100.0"))
       .withColumnRenamed("g", "l_returnflag")

@@ -187,25 +187,17 @@ object Sampling {
     * the sampling family: sort by the frame variable, keep rank ≡ 1
     * (mod k). Unlike q73's hash sampling it guarantees even coverage of
     * the ORDERED frame (every spend band represented), at the cost of a
-    * rank pass — computed with the two-phase bucket pattern so no global
-    * single-task window touches the table. The certified aggregate pins
+    * rank pass — a [[BucketRank]] rank, so no global single-task window
+    * touches the table. The certified aggregate pins
     * the exact selected rows (key sum + dsum balance), so a rank
     * off-by-one anywhere flips the hash.
     */
   def q216SystematicSample(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     val c = graft.sources.Tables.customer(spark, d)
       .select(col("c_custkey"), col("c_acctbal"))
-      .withColumn("bucket", expr("cast(round(c_acctbal * 100) as bigint) div 100000"))
-    val wLocal = Window.partitionBy(col("bucket")).orderBy(col("c_acctbal"), col("c_custkey"))
-    val wB = Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, -1) // bucket-summary-sized offsets frame (<= 2^20 rows)
-    val offsets = c.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bn")).over(wB), lit(0L)))
-      .select(col("bucket"), col("off"))
-    c.withColumn("lrn", row_number().over(wLocal))
-      .join(broadcast(offsets), Seq("bucket"))
-      .filter(expr("(off + lrn) % 100 = 1"))
+    BucketRank.Running(Nil, expr("cast(round(c_acctbal * 100) as bigint) div 100000"),
+        Seq(col("c_acctbal"), col("c_custkey")), "rank" -> lit(1L))(c)
+      .filter(expr("rank % 100 = 1"))
       .agg(count(lit(1)).as("n_sampled"),
         expr("cast(sum(c_custkey) as bigint)").as("key_sum"),
         expr("CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(25,6))) AS STRING) AS DOUBLE)").as("bal_sum"))
@@ -276,8 +268,8 @@ object Sampling {
     * The selection deliberately does NOT window the corpus on the 5-value
     * lang key (this round's trap): the hash space is pre-bucketed, buckets
     * wholly inside the budget pass through UNRANKED, and only the single
-    * crossing bucket per language is ranked — the BucketRank shape with a
-    * per-group budget instead of fixed target ranks.
+    * crossing bucket per language is ranked — a [[BucketRank.Running]]
+    * rank whose (lang, bucket) frame is filtered by a per-group budget.
     */
   val Q227Budget = 200L
   val Q227HashBuckets = 64L
@@ -288,38 +280,29 @@ object Sampling {
     val docs = Tables.documents(spark, d)
       .select(col("lang"), col("doc_id"))
       .withColumn("h", certifiedKey(col("doc_id").cast("string")))
-      .withColumn("b", expr(s"h div ${Q227BucketWidth}L"))
     // per-language targets from exactly-summed sqrt weights
     val c = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       .withColumn("w", expr("CAST(sqrt(CAST(n AS DOUBLE)) AS DECIMAL(25,15))"))
-    // the target and offset frames are each read by several branches below
+    // the target and bucket frames are each read by several branches below
     val tgt = c
       .crossJoin(broadcast(c.agg(expr("sum(w)").as("wtot"))))
       .withColumn("target", expr(
         s"CAST(floor($Q227Budget.0 * CAST(w AS DOUBLE) / CAST(wtot AS DOUBLE)) AS BIGINT)"))
       .select(col("lang"), col("n"), col("target"))
       .pin(SizedBy("languages")) // target frame
-    // bucket offsets in hash order, per language — a compact frame
-    val off = docs.groupBy(col("lang"), col("b")).agg(count(lit(1)).as("cnt"))
-      .withColumn("off", coalesce(
-        sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("lang")).orderBy(col("b"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .join(tgt.select(col("lang"), col("target")), Seq("lang"))
+    // hash-order ranks per language; the (lang, bucket) frame says which
+    // buckets pass whole and which one crosses the target
+    val bucket = expr(s"h div ${Q227BucketWidth}L")
+    val rank = BucketRank.Running(Seq("lang"), bucket, Seq(col("h"), col("doc_id")), "rn" -> lit(1L))
+    val off = rank.frame(docs).join(tgt.select(col("lang"), col("target")), Seq("lang"))
       .pin(SizedBy("(lang, bucket)")) // offsets
-    val whole = off.filter(col("off") + col("cnt") <= col("target"))
-      .select(col("lang"), col("b"))
-    val crossing = off.filter(col("off") < col("target") &&
-        col("target") < col("off") + col("cnt"))
-      .select(col("lang"), col("b"), col("off"), col("target").as("tg"))
-    val keptWhole = docs.join(broadcast(whole), Seq("lang", "b"))
+    val whole = off.filter(col("rn_off") + col("rn_bucket") <= col("target"))
+      .select(col("lang"), col("__b"))
+    val crossing = off.filter(col("rn_off") < col("target") &&
+      col("target") < col("rn_off") + col("rn_bucket"))
+    val keptWhole = docs.withColumn("__b", bucket).join(broadcast(whole), Seq("lang", "__b"))
       .select(col("lang"), col("doc_id"))
-    val wLoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang"), col("b")).orderBy(col("h"), col("doc_id"))
-    val keptCross = docs.join(broadcast(crossing), Seq("lang", "b"))
-      .withColumn("rn", row_number().over(wLoc).cast("long"))
-      .filter(col("off") + col("rn") <= col("tg"))
+    val keptCross = rank(docs, crossing).filter(col("rn") <= col("target"))
       .select(col("lang"), col("doc_id"))
     val sel = keptWhole.unionByName(keptCross)
       .groupBy(col("lang"))
@@ -757,10 +740,8 @@ object Sampling {
     * document fragmentation the cut creates, and what the head packs
     * look like. Token counts are q39's whitespace segmentation; the
     * global token-offset of every document is a prefix sum in
-    * (md5-prefix hash, doc_id) order via the TWO-PHASE bucket form
-    * (per-bucket token totals → broadcast cumulative offsets →
-    * bucket-local running sums — no single-task window over the corpus;
-    * the q214 pattern). A document then spans packs start div L …
+    * (md5-prefix hash, doc_id) order: a [[BucketRank]] running sum over
+    * hash buckets, no single-task window over the corpus. A document then spans packs start div L …
     * (end−1) div L, all exact BIGINTs: `crossings` = Σ(last−first) is
     * the fragmentation count, pack detail rows (packs 0–9) report
     * overlapping docs, docs starting in the pack, token fill (= L by
@@ -771,39 +752,17 @@ object Sampling {
     */
   val Q342Budget = 128L
 
-  /** The q342 two-phase GLOBAL token prefix-sum in (h, doc_id) order —
-    * per-bucket token totals → broadcast cumulative bucket offsets →
-    * bucket-local running sums, so no single-task window ever sees the
-    * corpus (the q214 pattern). Input must carry (doc_id, n_tok, h,
-    * bucket); output adds `cum` (inclusive running total) and `st`
-    * (exclusive start offset). Used by q342; SCALE.md records the
-    * degenerate token/bucket distributions this path was rehearsed on.
-    */
-  def tokenPrefixSum(base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wB = Window.orderBy(col("bucket")) // bucket-summary-sized offsets frame (<= 2^20 rows)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("bucket"))
-      .agg(expr("cast(sum(n_tok) as bigint)").as("bsum"))
-      .withColumn("off", coalesce(sum(col("bsum")).over(wB), lit(0L)))
-      .select(col("bucket"), col("off"))
-      .pin(SizedBy("bucket")) // (≤2^20 rows by construction); read by the totals AND detail legs
-    val wLocal = Window.partitionBy(col("bucket"))
-      .orderBy(col("h"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    base.join(broadcast(offsets), Seq("bucket"))
-      .withColumn("cum", col("off") + sum(col("n_tok")).over(wLocal))
-      .withColumn("st", col("cum") - col("n_tok"))
-  }
-
   def q342SequencePacking(spark: SparkSession, d: String): DataFrame = {
     val L = Q342Budget
     val base = Tables.documents(spark, d)
       .select(col("doc_id"),
         size(words(col("text"))).cast("long").as("n_tok"))
       .withColumn("h", certifiedKey(concat(lit("pk#"), col("doc_id").cast("string"))))
-      .withColumn("bucket", expr("h div 1099511627776")) // 2^40
-    val prefixed = tokenPrefixSum(base)
+    // the token prefix sum in (h, doc_id) order over h div 2^40 buckets
+    val pack = BucketRank.Running(Nil, expr("h div 1099511627776"), Seq(col("h"), col("doc_id")),
+      "cum" -> col("n_tok"))
+    val prefixed = pack(base, pack.frame(base).pin(SizedBy("bucket"))) // ≤2^20 rows; both legs read it
+      .withColumn("st", col("cum") - col("n_tok"))
       .withColumn("fp", expr(s"st div $L"))
       .withColumn("lp", expr(s"(cum - 1) div $L"))
     val totals = prefixed.groupBy()
@@ -919,9 +878,9 @@ object Sampling {
   /** PACK-FRAGMENTATION profile by document length band — the QA readout
     * behind the q342 packer (q275 reports corpus-level padding economics;
     * this reports WHICH documents the cut boundaries actually split):
-    * every document's pack span (first/last pack from the same two-phase
-    * [[tokenPrefixSum]] the packer uses, identical hash order), rolled up
-    * per 16-token length band (capped at band 8 — exact integer banding,
+    * every document's pack span (first/last pack from the same
+    * [[BucketRank]] prefix sum the packer uses, identical hash order),
+    * rolled up per 16-token length band (capped at band 8 — exact integer banding,
     * no quantile pass needed). Per band: docs, token mass, boundary-
     * crossing docs and the crossing share in exact ppm — long documents
     * fragment more (a 128-token budget cuts nearly every 100+-token doc),
@@ -936,8 +895,11 @@ object Sampling {
       .select(col("doc_id"),
         size(words(col("text"))).cast("long").as("n_tok"))
       .withColumn("h", certifiedKey(concat(lit("pk#"), col("doc_id").cast("string"))))
-      .withColumn("bucket", expr("h div 1099511627776")) // 2^40
-    val prefixed = tokenPrefixSum(base)
+    // the token prefix sum in (h, doc_id) order over h div 2^40 buckets
+    val pack = BucketRank.Running(Nil, expr("h div 1099511627776"), Seq(col("h"), col("doc_id")),
+      "cum" -> col("n_tok"))
+    val prefixed = pack(base, pack.frame(base).pin(SizedBy("bucket"))) // ≤2^20 rows: h < 2^60
+      .withColumn("st", col("cum") - col("n_tok"))
       .withColumn("crossing", expr(s"CASE WHEN (cum - 1) div $L > st div $L THEN 1 ELSE 0 END"))
       .withColumn("band", expr("least(n_tok div 16, cast(8 as bigint))"))
     prefixed.groupBy(col("band"))

@@ -2732,11 +2732,10 @@ object Similarity {
     * group by exact score, concordant = Σ p_s·(negatives strictly
     * below), tied = Σ p_s·n_s, AUC = (2·conc + tied)/(2·n_pos·n_neg) in
     * exact ppm (ties at half weight — the standard U convention,
-    * exactly). The strictly-below prefix runs in the q342 two-phase
-    * form on score bands ((score + 2⁶⁰) div 2⁴⁴ — shifted nonnegative
-    * so Spark's truncating `div` and DuckDB's flooring `//` agree):
-    * per-(label, band) totals → per-label band offsets → band-local
-    * windows, never a window over the full score-ordered corpus (the
+    * exactly). The strictly-below prefix is a [[BucketRank.Running]]
+    * count on score bands ((score + 2⁶⁰) div 2⁴⁴ — shifted nonnegative
+    * so Spark's truncating `div` and DuckDB's flooring `//` agree),
+    * never a window over the full score-ordered corpus (the
     * per-label window is the low-NDV trap q329 names). The oracle
     * replays the U statistic with the PLAIN per-label window — equality
     * certifies the banded rewrite. Zero embeddings scans: scores ride
@@ -2746,7 +2745,6 @@ object Similarity {
     * the q341 guard).
     */
   def q348CentroidAuc(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lf = pqLfTable(spark, d).filter(realVecs(col("vec_id")))
     val labels = ivfAssignTable(spark, d)
       .select(col("vec_id"), col("label").cast("long").as("lab"))
@@ -2762,19 +2760,11 @@ object Similarity {
       .groupBy(col("lbl"), col("score"))
       .agg(expr("cast(sum(pos) as bigint)").as("p"),
         expr("cast(sum(1 - pos) as bigint)").as("n"))
-      .withColumn("band",
-        expr("(score + 1152921504606846976) div 17592186044416"))
       .pin(SizedBy("score-distribution")) // ((lbl, score) rows)
-    val wB = Window.partitionBy(col("lbl")).orderBy(col("band"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = grouped.groupBy(col("lbl"), col("band"))
-      .agg(expr("cast(sum(n) as bigint)").as("bn"))
-      .withColumn("offn", coalesce(sum(col("bn")).over(wB), lit(0L)))
-      .select(col("lbl"), col("band"), col("offn"))
-    val wL = Window.partitionBy(col("lbl"), col("band")).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    grouped.join(broadcast(offsets), Seq("lbl", "band"))
-      .withColumn("cumneg", col("offn") + coalesce(sum(col("n")).over(wL), lit(0L)))
+    // negatives strictly below = the running negative count minus the row's own
+    BucketRank.Running(Seq("lbl"), expr("(score + 1152921504606846976) div 17592186044416"),
+        Seq(col("score")), "cumneg" -> col("n"))(grouped)
+      .withColumn("cumneg", col("cumneg") - col("n"))
       .groupBy(col("lbl"))
       .agg(expr("cast(sum(p) as bigint)").as("n_pos"),
         expr("cast(sum(n) as bigint)").as("n_neg"),
@@ -3869,9 +3859,8 @@ object Similarity {
     * ranked list actually gets ("the top decile holds 4.7× its share of
     * positives"). Every vector is scored by its exact BIGINT dot with
     * label 7's undivided centroid sum (the q348/q113 no-division trick),
-    * assigned a GLOBAL descending rank via the two-phase band form
-    * (negated shifted bands so ascending band order = descending score;
-    * per-band counts → broadcast offsets → band-local windows — never a
+    * assigned a GLOBAL descending rank by [[BucketRank.Running]] (negated
+    * shifted bands so ascending band order = descending score — never a
     * corpus-wide sort task), and bucketed into rank deciles. Per decile:
     * members, positives, cumulative positives, lift in exact ppm
     * (cum_pos·N·10⁶ div (cum_n·P), DECIMAL(38,0)-guarded), and positive
@@ -3887,32 +3876,21 @@ object Similarity {
     val cent = lf.join(labels, "vec_id").filter(col("lab") === L)
       .groupBy(col("sub"), col("jj"))
       .agg(expr("cast(sum(xq) as bigint)").as("s"))
-    // read by the band offsets, the rank join and the nn/pp totals
+    // read by the band frame and the rank join
     val scores = lf.join(broadcast(cent), Seq("sub", "jj"))
       .groupBy(col("vec_id"))
       .agg(expr("cast(sum(xq * s) as bigint)").as("score"))
       .join(labels, "vec_id")
       .withColumn("pos", expr(s"cast(cast(lab = $L as int) as long)"))
-      .withColumn("band",
-        expr("-((score + 1152921504606846976) div 17592186044416)"))
       .pin(SizedBy("vector-population")) // score rows (one per vec_id)
-    val wB = Window.orderBy(col("band")) // band-summary-sized offsets frame (<= 2^17 rows)
-      .rowsBetween(Window.unboundedPreceding, -1) // ≤ 2^17-band frame
-    val offsets = scores.groupBy(col("band")).agg(count(lit(1)).as("bc"))
-      .withColumn("off", coalesce(sum(col("bc")).over(wB), lit(0L)))
-      .select(col("band"), col("off"))
-    val wL = Window.partitionBy(col("band"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val ranked = scores.join(broadcast(offsets), Seq("band"))
-      .withColumn("grank", col("off") + row_number().over(wL))
-    // totals are rank-independent — aggregate the pin, not the rank join
-    val tot = scores.agg(count(lit(1)).as("nn"),
-      expr("cast(sum(pos) as bigint)").as("pp"))
-    val dec = ranked.crossJoin(broadcast(tot)) // 1-row totals
-      .withColumn("decile", expr("(grank - 1) * 10 div nn"))
+    // descending score order: the band is negated; the totals N and P
+    // ride the band frame as the running sums' group totals
+    val dec = BucketRank.Running(Nil, expr("-((score + 1152921504606846976) div 17592186044416)"),
+        Seq(col("score").desc, col("vec_id").asc), "grank" -> lit(1L), "cum_p" -> col("pos"))(scores)
+      .withColumn("decile", expr("(grank - 1) * 10 div grank_total"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n"), expr("cast(sum(pos) as bigint)").as("n_pos"),
-        min(col("nn")).as("nn"), min(col("pp")).as("pp"))
+        min(col("grank_total")).as("nn"), min(col("cum_p_total")).as("pp"))
     val wD = Window.orderBy(col("decile")) // 10-row frame
     dec.withColumn("cum_n", sum(col("n")).over(wD))
       .withColumn("cum_pos", sum(col("n_pos")).over(wD))

@@ -2484,39 +2484,20 @@ object TextAnalysis {
     * (d_sum·10⁶ + n_big·10¹⁴) div n_big − 10¹⁴ — so ordering never
     * touches a double and truncating/floor division agree (the numerator
     * is positive for any avg > −100 nats, far below add-1 smoothing's
-    * floor). The tercile assignment is the q134 TWO-PHASE rank (bucket-
-    * local row_number + broadcast offsets + the SQL-standard tile
-    * formula) — no single-task global window over the per-doc frame,
-    * which at 100 TB is corpus-sized. DuckDB's native ntile(3) is the
-    * independent spec the two-phase form must equal.
+    * floor). The tercile assignment is a [[BucketRank]] rank and the
+    * SQL-standard tile formula — no single-task global window over the
+    * per-doc frame, which at 100 TB is corpus-sized. DuckDB's native
+    * ntile(3) is the independent spec the two-phase form must equal.
     */
   def q278PerplexityBuckets(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // round 9: the per-doc score frame (n_big, d_sum, key) is the stored
-    // doc-score artifact — the three consumers below (local ranks, bucket
-    // offsets, the doc count) each re-read the parquet table; no corpus
-    // scan, no localCheckpoint
+    // the per-doc score frame (n_big, d_sum, key) is the stored doc-score
+    // artifact: the rank's two reads re-read the parquet table; no corpus
+    // scan, no pin
     val perDoc = docLmTable(spark, d)
       .select(col("doc_id"), col("n_big"), col("d_sum"), col("key"))
-    val withB = perDoc.withColumn("__b", expr("key div 1000000000000"))
-    val local = withB.withColumn("__lr",
-      row_number().over(Window.partitionBy(col("__b"))
-        .orderBy(col("key"), col("doc_id"))).cast("long"))
-    val offsets = withB.groupBy(col("__b")).agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(
-        sum(col("__bn")).over(Window.orderBy(col("__b")) // bucket-summary-sized offsets frame
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__b"), col("__off"))
-    val n1 = perDoc.agg(count(lit(1)).as("__n"))
-    local.join(broadcast(offsets), "__b")
-      .withColumn("__rank", col("__off") + col("__lr"))
-      .crossJoin(broadcast(n1))
-      .withColumn("tercile", expr(
-        """CAST(CASE
-             WHEN __rank <= (__n % 3) * (__n div 3 + 1)
-             THEN (__rank - 1) div (__n div 3 + 1) + 1
-             ELSE __n % 3 + (__rank - (__n % 3) * (__n div 3 + 1) - 1) div (__n div 3) + 1
-           END AS BIGINT)"""))
+    BucketRank.Running(Nil, expr("key div 1000000000000"), Seq(col("key"), col("doc_id")),
+        "rank" -> lit(1L))(perDoc)
+      .withColumn("tercile", BucketRank.ntile(col("rank"), col("rank_total"), 3))
       .groupBy(col("tercile"))
       .agg(count(lit(1)).as("n_docs"),
         expr("cast(sum(n_big) as bigint)").as("n_bigrams"),
@@ -2713,36 +2694,19 @@ object TextAnalysis {
     * count, exact-ppm English share, and weight-key bounds. English share
     * rising monotonically toward decile 10 IS the method working; a flat
     * curve says the weights carry no signal. Pure probe of the stored
-    * doc-score artifact (zero corpus scans); decile assignment is the
-    * q278 two-phase rank (bucket-local row_number + broadcast offsets +
-    * the SQL-standard tile formula — no single-task window). DuckDB's
-    * native ntile(10) is the independent spec.
+    * doc-score artifact (zero corpus scans); decile assignment is a
+    * [[BucketRank]] rank and the SQL-standard tile formula (no
+    * single-task window). DuckDB's native ntile(10) is the independent
+    * spec.
     */
   def q287DsirLift(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perDoc = docLmTable(spark, d)
       .select(col("doc_id"), col("lang"), col("n_big"), col("w"))
       .withColumn("wkey", expr(
         "cast((w * 1000000 + n_big * 100000000000000) div n_big as bigint)"))
-    val withB = perDoc.withColumn("__b", expr("wkey div 1000000000000"))
-    val local = withB.withColumn("__lr",
-      row_number().over(Window.partitionBy(col("__b"))
-        .orderBy(col("wkey"), col("doc_id"))).cast("long"))
-    val offsets = withB.groupBy(col("__b")).agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(
-        sum(col("__bn")).over(Window.orderBy(col("__b")) // bucket-summary-sized offsets frame
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__b"), col("__off"))
-    val n1 = perDoc.agg(count(lit(1)).as("__n"))
-    local.join(broadcast(offsets), "__b")
-      .withColumn("__rank", col("__off") + col("__lr"))
-      .crossJoin(broadcast(n1))
-      .withColumn("decile", expr(
-        """CAST(CASE
-             WHEN __rank <= (__n % 10) * (__n div 10 + 1)
-             THEN (__rank - 1) div (__n div 10 + 1) + 1
-             ELSE __n % 10 + (__rank - (__n % 10) * (__n div 10 + 1) - 1) div (__n div 10) + 1
-           END AS BIGINT)"""))
+    BucketRank.Running(Nil, expr("wkey div 1000000000000"), Seq(col("wkey"), col("doc_id")),
+        "rank" -> lit(1L))(perDoc)
+      .withColumn("decile", BucketRank.ntile(col("rank"), col("rank_total"), 10))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),
         expr("cast(count_if(lang = 'en') as bigint)").as("n_en"),

@@ -22,9 +22,8 @@ object ExportIvf {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark: SparkSession =
-      graft.core.SparkConfigs.localSession("graft-export-ivf", cpus)
+      graft.core.SparkConfigs.localSession("graft-export-ivf")
     spark.sparkContext.setLogLevel("WARN")
     graft.operators.Similarity.ivfCentroidTable(spark, sfDir)
       .coalesce(1).write.mode("overwrite")

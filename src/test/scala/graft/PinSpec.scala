@@ -48,6 +48,8 @@ class PinSpec extends SparkSuite {
       assert(pinned === Map("BroadcastHashJoin(right)" -> 1), pinned)
       val bare = Explain.joinCounts(big.join(small.localCheckpoint(), "k"))
       assert(bare === Map("SortMergeJoin" -> 1), bare)
+      val line = Explain.auditLine("pinned", big.join(small.pin(Rows(10)), "k"))
+      assert(line.forall(_ < 128), s"non-ASCII audit line: $line")
     }
   }
 

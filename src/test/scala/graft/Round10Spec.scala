@@ -56,7 +56,7 @@ class Round10Spec extends SparkSuite {
     val audited = Map(
       "Dedup.scala" -> 15, "TextAnalysis.scala" -> 30,
       "Relational.scala" -> 1, "Linkage.scala" -> 1,
-      "Similarity.scala" -> 30, "Sampling.scala" -> 9, "Profiling.scala" -> 14,
+      "Similarity.scala" -> 30, "Sampling.scala" -> 10, "Profiling.scala" -> 13,
       "Curation.scala" -> 8, "EventAnalytics.scala" -> 22, "Cdc.scala" -> 1,
       "EtlQueries.scala" -> 1)
     assert(counts === audited,

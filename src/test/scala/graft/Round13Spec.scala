@@ -51,16 +51,15 @@ class Round13Spec extends SparkSuite {
   // Audit (frame sizes verified by reading each site; the families):
   //  - post-limit rank stamps: 6/9/10/50-row frames (Similarity ×8,
   //    TextAnalysis boundary frames).
-  //  - BucketRank-style bucket/band/block summary offsets: ≤2^17–2^20-row
-  //    aggregate-of-buckets frames (Curation, Profiling, Sampling,
-  //    Linkage, Relational, Similarity, TextAnalysis).
+  //  - bucket/band/block summary offsets: ≤2^17–2^20-row
+  //    aggregate-of-buckets frames, all inside BucketRank.Running (its
+  //    group-partitioned spec is unpartitioned when it has no groups).
   //  - calendar/domain frames: |days|, |minutes|, |day-offsets|,
   //    duration-domain, value-domain (exact-cents census), |types|²,
   //    |days|² slope pairs, |sources|, |nodes| (event-type graph),
   //    (lang,source) strata, vocab and distinct-bigram census frames.
   //  - q161's quintiles, formerly the one data-scale site (|customers|-
-  //    sized ntile), now run the two-phase form — its remaining
-  //    unpartitioned windows are the bucket-summary offset/total pair.
+  //    sized ntile), now run through BucketRank.Running.
   test("unpartitioned-window inventory: every site is size-audited, none corpus-sized") {
     val root = java.nio.file.Paths.get("src/main/scala")
     val counts = scala.collection.mutable.Map.empty[String, Int]
@@ -83,9 +82,9 @@ class Round13Spec extends SparkSuite {
     assert(offenders.isEmpty,
       s"unpartitioned-window audit failures:\n${offenders.mkString("\n")}")
     val audited = Map(
-      "Sampling.scala" -> 4, "Similarity.scala" -> 9, "Linkage.scala" -> 1,
-      "TextAnalysis.scala" -> 10, "EventAnalytics.scala" -> 17,
-      "Curation.scala" -> 7, "Relational.scala" -> 4, "Profiling.scala" -> 10)
+      "Sampling.scala" -> 2, "Similarity.scala" -> 8,
+      "TextAnalysis.scala" -> 8, "EventAnalytics.scala" -> 16,
+      "Curation.scala" -> 2, "Relational.scala" -> 2, "Profiling.scala" -> 5)
     assert(counts.toMap === audited,
       s"unpartitioned-window inventory drifted — re-audit the new/removed " +
         s"sites for boundedness and update this table.\n  found: ${counts.toMap}\n" +

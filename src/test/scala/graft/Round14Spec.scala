@@ -134,10 +134,10 @@ class Round14Spec extends SparkSuite {
     frameWithin("Sampling mixture-chain buckets", stats.getLong(0), DeclaredBucketFrameBound)
     assert(stats.getLong(1) < DeclaredBucketFrameBound,
       "mixture-chain bucket ids are VALUE-DOMAIN bounded: h < 2^60 div 2^40")
-    // Curation.prefixSum (q118, width 100): one row per doc_id div 100
+    // q118's BucketRank running sum (width 100): one row per doc_id div 100
     val f3 = graft.sources.Tables.documents(spark, sf)
       .select(expr("floor(doc_id / 100)").as("b")).distinct().count()
-    frameWithin("Curation.prefixSum q118 offsets", f3, DeclaredBucketFrameBound)
+    frameWithin("q118 bucket frame", f3, DeclaredBucketFrameBound)
   }
 
   test("frame replay self-test: a planted size-annotation lie fails") {

@@ -171,7 +171,8 @@ class Round4Spec extends SparkSuite {
     val rows = Seq(3L -> 10L, 250L -> 7L, 1L -> 5L, 999L -> 2L, 500L -> 1L,
       501L -> 4L, 100L -> 9L).map { case (id, v) => (id, v) }
     val df = rows.toDF("id", "v")
-    val got = Curation.prefixSum(df, "id", "v", bucketWidth = 100L)
+    val got = BucketRank.Running(Nil, floor(col("id") / 100L), Seq(col("id")),
+        "cum" -> col("v"))(df)
       .select(col("id"), col("cum"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val spec = df.withColumn("cum", sum(col("v")).over(Window.orderBy(col("id"))

@@ -1,16 +1,38 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB correctness gate."""
-import duckdb, json, sys, glob, os
+import atexit, duckdb, glob, json, os, shutil, sys, tempfile
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
-con = duckdb.connect()
+# A fixed memory cap and thread count keep the gate safe beside other jobs
+# (DuckDB's default is 80% of RAM); a query that runs out of memory gets
+# one retry at RETRY_MEMORY, then counts as UNCERTIFIED, never as ok.
+# Spills go to a private temp directory: DuckDB's default is ".tmp" in the
+# working directory, which two runs started in one directory share.
+MEMORY, RETRY_MEMORY, THREADS = "2GB", "6GB", 2
+spill_dir = tempfile.mkdtemp(prefix="compare_oracle-")
+con = duckdb.connect(config={"memory_limit": MEMORY, "threads": THREADS,
+                             "temp_directory": spill_dir})
+atexit.register(lambda: (con.close(), shutil.rmtree(spill_dir, True)))
+
+
+def run_oracle(sql):
+    try:
+        return con.sql(sql).fetchdf()
+    except duckdb.OutOfMemoryException:
+        con.execute(f"SET memory_limit = '{RETRY_MEMORY}'")
+        try:
+            return con.sql(sql).fetchdf()
+        finally:
+            con.execute(f"SET memory_limit = '{MEMORY}'")
+
+
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-ok = fail = 0
+ok = fail = uncertified = 0
 for name in sorted(os.listdir(out_dir)):
     path = os.path.join(out_dir, name)
     if not os.path.isdir(path):
@@ -28,7 +50,11 @@ for name in sorted(os.listdir(out_dir)):
         print(f"ROWS-ONLY  {name}: rows={len(got)}" + ("  <-- EMPTY!" if len(got)==0 else ""))
         continue
     try:
-        exp = con.sql(oracle[name]).fetchdf()
+        exp = run_oracle(oracle[name])
+    except duckdb.OutOfMemoryException as e:
+        print(f"UNCERTIFIED {name}: out of memory at {RETRY_MEMORY}: {e}")
+        uncertified += 1
+        continue
     except Exception as e:
         print(f"ORACLE-ERR {name}: {e}")
         fail += 1
@@ -74,4 +100,4 @@ for name in sorted(os.listdir(out_dir)):
     else:
         print(f"OK         {name}: rows={len(got_s)}")
         ok += 1
-print(f"\n{ok} ok, {fail} failed, {len([n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir,n)) and n not in oracle])} rows-only")
+print(f"\n{ok} ok, {fail} failed, {uncertified} uncertified, {len([n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir,n)) and n not in oracle])} rows-only")
